@@ -27,11 +27,11 @@ def entry(spark: SparkSession) -> DataFrame:
     sf_dir = "/root/testdata/sf0.001"
     from pyspark.sql import functions as F
 
-    from tinybrain_spark.udfs import pool_all_tiers_udf
+    from tinybrain_spark.udfs import pool_tiers
 
-    tt = _dc.token_table(spark, sf_dir)
-    udf = pool_all_tiers_udf("avg", window=4, num_tiers=2)
-    tiers = tt.select("user_id", F.posexplode(udf("tokens")).alias("tier0", "toks"))
+    tt = _dc.token_table(spark, sf_dir).select("user_id", "tokens")
+    pooled = pool_tiers("avg", window=4, num_tiers=2)(tt)
+    tiers = pooled.select("user_id", F.posexplode("tiers").alias("tier0", "toks"))
     return tiers.select(
         F.col("user_id").cast("long").alias("user_id"),
         (F.col("tier0") + 1).cast("long").alias("tier"),

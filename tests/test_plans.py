@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from tinybrain_spark import driver_contract as dc
 from tinybrain_spark.session import load_table
-from tinybrain_spark.udfs import pool_udf
+from tinybrain_spark.udfs import pool_tier
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -53,14 +53,52 @@ def test_filter_pushdown_reaches_scan(spark):
     assert "purchase" in plan.split("PushedFilters")[1].split("\n")[0]
 
 
-def test_pooling_is_shuffle_free(spark):
-    """Per-row pooling must not introduce an exchange."""
+def _tree(df) -> str:
+    return _plan(df).split("\n\n")[0]
+
+
+def test_pooling_is_shuffle_free(spark, workdir):
+    """Per-row pooling must not introduce an exchange: every pooling
+    plan holds exactly one MapInArrow node (the kernels' single Arrow
+    boundary) and no Exchange beyond those its input already had."""
+    from tinybrain_spark.datagen import generate
+    from tinybrain_spark.rollup import RollupConfig, RollupEngine
+
     ev = load_table(spark, SF_DIR, "events")
-    seq = ev.select("event_id", F.array(F.col("event_id").cast("int")).alias("t"))
-    udf = pool_udf("avg", 2, 1)
-    plan = _plan(seq.select("event_id", udf(F.col("t"))))
-    assert "Exchange" not in plan
-    assert "ArrowEvalPython" in plan
+    seq = ev.select(
+        "event_id", F.array(F.col("event_id").cast("int")).alias("tokens")
+    )
+    tree = _tree(pool_tier("avg", 2, 1)(seq))
+    assert "Exchange" not in tree
+    assert tree.count("MapInArrow") == 1
+
+    # headline rollup leaf: the token table's own exchange, nothing more
+    tree = _tree(dc.queries()["q_avg_rollup_t2"](spark, SF_DIR))
+    upstream = _tree(dc.token_table(spark, SF_DIR)).count("Exchange")
+    assert tree.count("Exchange") == upstream
+    assert tree.count("MapInArrow") == 1
+
+    # engine avg tier 2: the one exchange is the write clustering, and
+    # it runs BELOW the kernels (cluster before pooling, never after)
+    engine = RollupEngine(spark, workdir)
+    cfg = RollupConfig(kernel="avg", window=4, num_tiers=2, run_kind="plan")
+    base = generate(spark, n_docs=32, n_tok=64, seed=1, num_partitions=2)
+    engine.run_tier(base, cfg, tier=1, resume=False)
+    written = []
+    write = engine.catalog.write
+
+    def spy(df, name, **kw):
+        written.append((name, df))
+        return write(df, name, **kw)
+
+    engine.catalog.write = spy
+    engine.run_tier(base, cfg, tier=2, resume=False)
+    (tier_df,) = [df for name, df in written if name == cfg.name(2)]
+    tree = _tree(tier_df)
+    assert tree.count("Exchange") == 1
+    assert tree.count("MapInArrow") == 1
+    assert tree.index("MapInArrow") < tree.index("Exchange")
+    assert "rangepartitioning" in _plan(tier_df)
 
 
 def test_ann_broadcasts_probes(spark):

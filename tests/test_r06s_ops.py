@@ -94,10 +94,15 @@ def test_value_concentration_plan_broadcast_scalar(spark):
     schemas = _re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     assert schemas, plan
     allowed = {"l_partkey", "l_extendedprice", "l_discount"}
-    for s in schemas:
-        cols = {c.split(":")[0] for c in s.split(",") if c}
-        if cols & {"l_partkey", "l_extendedprice", "l_discount"}:
-            assert cols <= allowed, (cols, plan)
+    lineitem = [
+        cols for cols in ({c.split(":")[0] for c in s.split(",") if c}
+                          for s in schemas)
+        if cols & allowed
+    ]
+    # non-vacuous: the lineitem scan must be among the ReadSchemas
+    assert lineitem, plan
+    for cols in lineitem:
+        assert cols <= allowed, (cols, plan)
 
 
 # ---------------------------------------------------------------------------

@@ -96,17 +96,15 @@ def test_resume_from_checkpoint(spark, base_df, workdir):
 def test_salting_does_not_change_results(spark, base_df, workdir):
     """Pooling is per-row, so any partitioning must yield identical rows."""
     from tinybrain_spark.partitioning import cluster_for_write
-    from tinybrain_spark.udfs import pool_udf
+    from tinybrain_spark.udfs import pool_tier
 
-    udf = pool_udf("mode", window=4, num_tiers=1)
-    plain = base_df.select("doc_id", udf("tokens").alias("t")).collect()
-    salted = (
-        cluster_for_write(base_df, num_partitions=7)
-        .select("doc_id", udf("tokens").alias("t"))
-        .collect()
-    )
-    assert sorted((r["doc_id"], tuple(r["t"])) for r in plain) == sorted(
-        (r["doc_id"], tuple(r["t"])) for r in salted
+    pool = pool_tier("mode", window=4, num_tiers=1)
+    plain = pool(base_df.select("doc_id", "tokens")).collect()
+    salted = pool(
+        cluster_for_write(base_df, num_partitions=7).select("doc_id", "tokens")
+    ).collect()
+    assert sorted((r["doc_id"], tuple(r["tokens"])) for r in plain) == sorted(
+        (r["doc_id"], tuple(r["tokens"])) for r in salted
     )
 
 
@@ -209,13 +207,13 @@ def test_run_tier_issues_no_stats_rescan_jobs(spark, base_df, workdir):
     assert n_jobs <= 6, f"run_tier launched {n_jobs} jobs"
 
 
-def test_map_in_arrow_pooling_equals_pandas_udf(spark):
-    """pool_tiers_map_in_arrow (the uniform-batch zero-copy fast path)
-    must be BIT-IDENTICAL to the pandas-UDF path on uniform batches,
-    ragged batches (fallback), and across kernels incl. sparse."""
-    from pyspark.sql import functions as F
-
-    from tinybrain_spark.udfs import pool_all_tiers_udf, pool_tiers_map_in_arrow
+def test_map_in_arrow_pooling_equals_kernels(spark):
+    """pool_tiers (key passthrough) and the bench's
+    pool_tiers_map_in_arrow shim (tokens only) must equal the per-row
+    numpy kernels on uniform batches (one length group, reshape view),
+    ragged batches (one gather per length), and across kernels incl.
+    sparse."""
+    from tinybrain_spark.udfs import pool_tiers, pool_tiers_map_in_arrow
 
     uniform = generate(spark, n_docs=400, n_tok=64, seed=9, num_partitions=4)
     ragged = uniform.withColumn(
@@ -223,19 +221,27 @@ def test_map_in_arrow_pooling_equals_pandas_udf(spark):
         F.slice("tokens", 1, (16 + (F.crc32("doc_id") % 4) * 16).cast("int")),
     )
     for df in (uniform, ragged):
+        base = _tokens_by_doc(df)
         for kind, sparse in (("avg", False), ("avg", True), ("mode", False),
                              ("max", False)):
-            udf = pool_all_tiers_udf(kind, window=4, num_tiers=2, sparse=sparse)
-            want = sorted(
-                str(r["t"])
-                for r in df.select(udf("tokens").alias("t")).collect()
-            )
-            amap = pool_tiers_map_in_arrow(kind, window=4, num_tiers=2,
-                                           sparse=sparse)
-            got = sorted(
-                str(r["tiers"]) for r in amap(df).collect()
-            )
+            want = {
+                d: [t.tolist() for t in K.pool(kind, toks, window=4,
+                                               num_tiers=2, sparse=sparse)]
+                for d, toks in base.items()
+            }
+            pool = pool_tiers(kind, window=4, num_tiers=2, sparse=sparse)
+            got = {
+                r["doc_id"]: r["tiers"]
+                for r in pool(df.select("doc_id", "tokens")).collect()
+            }
             assert got == want, (kind, sparse)
+            shim = pool_tiers_map_in_arrow(kind, window=4, num_tiers=2,
+                                           sparse=sparse)
+            out = shim(df)
+            assert out.columns == ["tiers"]
+            assert sorted(r["tiers"] for r in out.collect()) == sorted(
+                want.values()
+            ), (kind, sparse)
 
 
 @pytest.mark.parametrize("kernel,sparse", [
@@ -243,8 +249,8 @@ def test_map_in_arrow_pooling_equals_pandas_udf(spark):
 ])
 def test_pyramid_ragged_inputs_through_engine(spark, workdir, kernel, sparse):
     """Ragged n_tok (mixed lengths in one batch) drives the Arrow tier
-    mappers' per-length-group FALLBACK end to end; every tier must
-    still equal the per-row numpy kernels."""
+    mappers' per-length-group gather end to end; every tier must still
+    equal the per-row numpy kernels."""
     df = generate(spark, n_docs=96, n_tok=256, seed=13, num_partitions=3)
     df = df.withColumn(
         "tokens",

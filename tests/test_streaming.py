@@ -138,11 +138,13 @@ def test_stateful_running_rollup(spark, seq_dir, tmp_path):
 
 
 def test_stream_rollup_tier_equals_batch(spark, seq_dir, tmp_path):
-    """Rollup-on-ingest: the streaming pooling tier emits byte-identical
-    rows to the batch tier (pooling is stateless per-row, so the stream
-    needs no watermark or state store)."""
+    """Rollup-on-ingest: the streaming pooling tier emits, per row, the
+    single-node numpy kernel's output (pooling is stateless per-row, so
+    the stream needs no watermark or state store)."""
+    import numpy as np
+
+    from tinybrain_spark import kernels as K
     from tinybrain_spark.streaming import read_sequence_stream, stream_rollup_tier
-    from tinybrain_spark.udfs import pool_udf
 
     stream = read_sequence_stream(spark, seq_dir)
     tier = stream_rollup_tier(stream, kernel="avg", window=4, num_tiers=1)
@@ -156,16 +158,15 @@ def test_stream_rollup_tier_equals_batch(spark, seq_dir, tmp_path):
     )
     _drain(q)
     got = {
-        r["doc_id"]: tuple(r["tokens"])
-        for r in spark.sql("SELECT doc_id, tokens FROM stream_tier").collect()
-    }
-    udf = pool_udf("avg", window=4, num_tiers=1)
-    want = {
-        r["doc_id"]: tuple(r["t"])
-        for r in spark.read.parquet(seq_dir)
-        .select("doc_id", udf("tokens").alias("t"))
+        r["doc_id"]: (tuple(r["tokens"]), r["n_tok"])
+        for r in spark.sql("SELECT doc_id, tokens, n_tok FROM stream_tier")
         .collect()
     }
+    want = {}
+    for r in spark.read.parquet(seq_dir).select("doc_id", "tokens").collect():
+        toks = np.array(r["tokens"], dtype=np.int32)
+        pooled = K.pool("avg", toks, window=4, num_tiers=1)[0]
+        want[r["doc_id"]] = (tuple(pooled.tolist()), len(pooled))
     assert got == want
 
 

@@ -4,7 +4,7 @@ Two API surfaces:
 
 * ``tinybrain_spark.compat`` — drop-in single-node replacements for the
   reference's five public functions (numpy ndarrays in/out).
-* The distributed engine — :class:`RollupEngine`, pooling UDFs,
+* The distributed engine — :class:`RollupEngine`, mapInArrow pooling,
   continuous aggregates, gap-fill, Gorilla compression, retention.
 """
 

@@ -2,7 +2,7 @@
 
 Every operator from SURVEY.md §2 (and the training-data-pipeline
 extensions) gets a ``queries()`` entry — a Spark DataFrame pipeline
-exercising the REAL engine code (pandas-UDF kernels, gap-fill,
+exercising the REAL engine code (mapInArrow kernels, gap-fill,
 aggregates) — and, where SQL-expressible, a matching ANSI-SQL oracle
 DuckDB runs on the same parquet tables.
 
@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .prefix import running_mins, running_sums, running_sums_bucketed
 from .session import load_table
-from .udfs import pool_udf
+from .udfs import pool_tier
 
 TRUNC = 16  # multiple of every window used below (4, 8, 16)
 
@@ -169,12 +169,19 @@ def _explode_pooled(df: DataFrame, pooled_col: str) -> DataFrame:
     )
 
 
+def _pooled(tt: DataFrame, key: str, kernel, window, tiers, sparse) -> DataFrame:
+    """(key, tokens, n_tok): the deepest of ``tiers`` pooled tiers per
+    row; sparse kernels pool the zero-holed ``stokens``."""
+    col = "stokens" if sparse else "tokens"
+    pool = pool_tier(kernel, window=window, num_tiers=tiers, sparse=sparse)
+    return pool(tt.select(key, F.col(col).alias("tokens")))
+
+
 def _pool_query(kernel, window, tiers, sparse):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         tt = token_table(spark, sf_dir)
-        col = "stokens" if sparse else "tokens"
-        udf = pool_udf(kernel, window=window, num_tiers=tiers, sparse=sparse)
-        return _explode_pooled(tt.select("user_id", udf(col).alias("p")), "p")
+        pooled = _pooled(tt, "user_id", kernel, window, tiers, sparse)
+        return _explode_pooled(pooled, "tokens")
 
     return q
 
@@ -184,12 +191,10 @@ def _long_pool_query(kernel, window, tiers, sparse, unit):
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         tt = long_token_table(spark, sf_dir, unit=unit, cap=LONG_CAP)
-        col = "stokens" if sparse else "tokens"
-        udf = pool_udf(kernel, window=window, num_tiers=tiers, sparse=sparse)
-        pooled = tt.select("gid", udf(col).alias("p"))
+        pooled = _pooled(tt, "gid", kernel, window, tiers, sparse)
         return pooled.select(
             F.col("gid").cast("long").alias("gid"),
-            F.posexplode("p").alias("pos", "token"),
+            F.posexplode("tokens").alias("pos", "token"),
         ).select(
             "gid",
             F.col("pos").cast("long").alias("pos"),
@@ -325,14 +330,11 @@ def q_avg_float_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisor 4^(m+1), NO cycle renorm (accelerated.pyx:469-599).  Output
     scaled to integers (floor(x*1000)) for hash-stable oracle compare —
     exact because block sums (<= 255*16) and /16 are exact in f32."""
-    from .udfs import float_pool_udf
-
-    tt = token_table(spark, sf_dir)
-    udf = float_pool_udf("avg", window=4, num_tiers=2)
-    pooled = tt.select("user_id", udf("tokens").alias("p"))
+    tt = token_table(spark, sf_dir).select("user_id", "tokens")
+    pooled = pool_tier("avg", window=4, num_tiers=2, dtype=np.float32)(tt)
     return pooled.select(
         F.col("user_id").cast("long").alias("user_id"),
-        F.posexplode("p").alias("pos", "fval"),
+        F.posexplode("tokens").alias("pos", "fval"),
     ).select(
         "user_id",
         F.col("pos").cast("long").alias("pos"),
@@ -11703,7 +11705,7 @@ def q_tier_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     error in permille (sum_abs_err * 1000 DIV sum of raw values —
     all-integer; tokens are non-negative so truncation == floor both
     engines).  Renders go through the REAL pooling kernel
-    (udfs.pool_udf -> kernels.avg_pool), not a SQL re-derivation —
+    (udfs.pool_tier -> kernels.avg_pool), not a SQL re-derivation —
     the oracle independently recomputes the render arithmetically, so
     this is also an end-to-end conformance check of the production
     path against raw data.
@@ -11723,9 +11725,8 @@ def q_tier_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = []
     for tier in (1, 2):
         w = 4**tier
-        udf = pool_udf("avg", window=4, num_tiers=tier, sparse=False)
         pooled = _explode_pooled(
-            tt.select("user_id", udf("tokens").alias("p")), "p"
+            _pooled(tt, "user_id", "avg", 4, tier, False), "tokens"
         ).withColumnRenamed("pos", "opos").withColumnRenamed(
             "token", "render"
         )

@@ -10,9 +10,10 @@ integer truncation to once per cycle.  MODE/MAX/MIN/STRIDE tiers pool
 the previous tier's rendered output (mode-of-modes, downsample.py:
 215-217).
 
-Plan shape per tier (see .explain in tests): parquet scan -> one
-ArrowEvalPython projection -> range-partitioned exchange (write
-clustering only) -> partitioned write.  Pooling itself never shuffles.
+Plan shape per tier (see .explain in tests): parquet scan ->
+range-partitioned exchange (write clustering only) -> one MapInArrow
+node running the kernels -> partitioned write.  Pooling itself never
+shuffles.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from . import kernels as K
 from .catalog import Catalog
 from .checkpoint import CheckpointStore
 from .partitioning import cluster_for_write
-from .udfs import avg_step_map_in_arrow, pool_tier_map_in_arrow
+from .udfs import avg_step, pool_tier, pool_tiers
 
 TIER_KEY_COLS = ("doc_id", "source", "time_bucket")
 
@@ -119,21 +120,16 @@ class RollupEngine:
         (pinned by test)."""
         from pyspark.sql import Observation
 
-        from .udfs import pool_all_tiers_udf
-
         config.validate_static()
 
         t0 = time.time()
-        udf = pool_all_tiers_udf(
+        pool = pool_tiers(
             config.kernel,
             window=config.window,
             num_tiers=config.num_tiers,
             sparse=config.sparse,
         )
-        clustered = cluster_for_write(df.select(*TIER_KEY_COLS, "tokens"))
-        tiers = clustered.select(
-            *TIER_KEY_COLS, udf("tokens").alias("tiers")
-        )
+        tiers = pool(cluster_for_write(df.select(*TIER_KEY_COLS, "tokens")))
         # per-tier stats ride the write job as observe metrics (the tier
         # count is known, so 'group by tier' unrolls into one aggregate
         # expression per tier) — no post-write stats re-scan
@@ -336,24 +332,18 @@ class RollupEngine:
     ) -> DataFrame:
         w = config.window
         guard = config.num_tiers if tier == 1 else None
-        # mapInArrow tier mappers: zero-copy dense view per uniform
-        # batch, key passthrough, no pandas object Series (semantics
-        # shared with the pandas UDFs via _avg_step_matrices / K.pool,
-        # pinned by test_rollup_e2e equality tests)
         if config.kernel == "avg":
             if tier > 1 and not prev_has_accum:
                 raise ValueError(
                     f"tier {tier - 1} table lacks the persisted accumulator"
                 )
-            step = avg_step_map_in_arrow(
-                window=w, sparse=config.sparse, tier=tier,
-                guard_tiers=guard, key_cols=TIER_KEY_COLS,
+            step = avg_step(
+                window=w, sparse=config.sparse, tier=tier, guard_tiers=guard
             )
             return step(src)
 
         # mode/max/min/stride: recursive pooling of rendered values
-        pool = pool_tier_map_in_arrow(
-            config.kernel, window=w, sparse=config.sparse,
-            guard_tiers=guard, key_cols=TIER_KEY_COLS,
+        pool = pool_tier(
+            config.kernel, window=w, sparse=config.sparse, guard_tiers=guard
         )
         return pool(src)

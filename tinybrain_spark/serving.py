@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .rollup import TIER_KEY_COLS, RollupConfig, RollupEngine
-from .udfs import avg_step_map_in_arrow, pool_tier_map_in_arrow
+from .udfs import avg_step, pool_tier
 
 
 @dataclass(frozen=True)
@@ -114,20 +114,13 @@ def read_series(
     for i in range(plan.residual_steps):
         step_tier = plan.tier + 1 + i
         if config.kernel == "avg":
-            step = avg_step_map_in_arrow(
-                window=config.window,
-                sparse=config.sparse,
-                tier=step_tier,
-                key_cols=TIER_KEY_COLS,
+            step = avg_step(
+                window=config.window, sparse=config.sparse, tier=step_tier
             )
-            df = step(df)
         else:
-            pool = pool_tier_map_in_arrow(
-                config.kernel,
-                window=config.window,
-                sparse=config.sparse,
-                key_cols=TIER_KEY_COLS,
+            step = pool_tier(
+                config.kernel, window=config.window, sparse=config.sparse
             )
-            df = pool(df)
+        df = step(df)
 
     return df.select(*TIER_KEY_COLS, "tokens", "n_tok")

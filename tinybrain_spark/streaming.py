@@ -93,23 +93,16 @@ def stream_rollup_tier(
 
     Pooling is per-row and stateless (every tokens array pools
     independently), so the streaming plan needs no watermark, state
-    store, or shuffle: file scan -> one ArrowEvalPython projection ->
-    sink, and every row's output is byte-identical to the batch tier
+    store, or shuffle: file scan -> one MapInArrow node -> sink, and
+    every row's output is byte-identical to the single-node kernels
     (pinned by test).  At 10^12-sequence scale this is the
     'rollup-on-ingest' path: new sequences land already downsampled,
     and the batch engine's deeper tiers read from this stream's sink.
     """
-    from .udfs import pool_udf
+    from .udfs import pool_tier
 
-    udf = pool_udf(
-        kernel, window=window, num_tiers=num_tiers, sparse=sparse
-    )
-    return stream.select(
-        "doc_id",
-        "source",
-        "time_bucket",
-        udf("tokens").alias("tokens"),
-    ).withColumn("n_tok", F.size("tokens"))
+    pool = pool_tier(kernel, window=window, num_tiers=num_tiers, sparse=sparse)
+    return pool(stream.select("doc_id", "source", "time_bucket", "tokens"))
 
 
 def stateful_running_rollup(

@@ -18,7 +18,7 @@ Generated from the live session at sf0.001 (plans are scale-invariant in
 shape). What to look for, per SURVEY.md §4: filters/column pruning
 pushed into `Scan parquet` (`ReadSchema`/`PushedFilters`), wide
 `WholeStageCodegen` spans around the JVM-side stages, Arrow exchange
-(`ArrowEvalPython`/`FlatMapGroupsInPandas`) only where the pooling
+(`MapInArrow`/`FlatMapGroupsInPandas`) only where the Python
 kernels run, and exchanges only at aggregation/write boundaries.
 Plan-shape regressions are pinned by tests/test_plans.py.
 Regenerate with `python tools/dump_plans.py`.
@@ -28,8 +28,8 @@ Regenerate with `python tools/dump_plans.py`.
 BLURBS = {
     "q_avg_rollup_t1": (
         "Flagship pooling path: scan -> row_number window (hot-key cap, one "
-        "hash exchange reused by the groupBy) -> single ArrowEvalPython "
-        "projection -> explode. Pooling itself never shuffles."
+        "hash exchange reused by the groupBy) -> single MapInArrow node "
+        "(udfs.pool_tier) -> explode. Pooling itself never shuffles."
     ),
     "q_continuous_agg": (
         "Salted two-phase aggregate: map-side partial agg inside "
