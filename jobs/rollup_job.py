@@ -32,9 +32,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--tiers", type=int, default=3)
     p.add_argument("--sparse", action="store_true")
     p.add_argument("--no-resume", action="store_true")
-    p.add_argument("--single-pass", action="store_true",
-                   help="materialize all tiers from one scan (no per-tier "
-                        "resume granularity)")
     p.add_argument("--run-kind", default="job")
     p.add_argument("--master", default=None)
     p.add_argument("--repeat", type=int, default=1,
@@ -74,10 +71,7 @@ def main(argv: list[str] | None = None) -> int:
             out_dir = args.output if args.repeat == 1 else f"{args.output}_r{rep}"
             engine = RollupEngine(spark, out_dir)
             t0 = time.time()
-            if args.single_pass:
-                s = engine.run_pyramid_single_pass(df, cfg)
-            else:
-                s = engine.run_pyramid(df, cfg, resume=not args.no_resume)
+            s = engine.run_pyramid(df, cfg, resume=not args.no_resume)
             wall_r = time.time() - t0
             if best_wall is None or wall_r < best_wall:
                 best_wall, stats = wall_r, s

@@ -78,27 +78,30 @@ def test_pooling_is_shuffle_free(spark, workdir):
     assert tree.count("Exchange") == upstream
     assert tree.count("MapInArrow") == 1
 
-    # engine avg tier 2: the one exchange is the write clustering, and
+    # engine avg pyramid: ONE write of the run-kind table partitioned
+    # by (tier, source); its one exchange is the write clustering, and
     # it runs BELOW the kernels (cluster before pooling, never after)
     engine = RollupEngine(spark, workdir)
     cfg = RollupConfig(kernel="avg", window=4, num_tiers=2, run_kind="plan")
     base = generate(spark, n_docs=32, n_tok=64, seed=1, num_partitions=2)
-    engine.run_tier(base, cfg, tier=1, resume=False)
     written = []
     write = engine.catalog.write
 
     def spy(df, name, **kw):
-        written.append((name, df))
+        written.append((name, kw.get("partition_by"), df))
         return write(df, name, **kw)
 
     engine.catalog.write = spy
-    engine.run_tier(base, cfg, tier=2, resume=False)
-    (tier_df,) = [df for name, df in written if name == cfg.name(2)]
-    tree = _tree(tier_df)
+    engine.run_pyramid(base, cfg, resume=False)
+    (pyramid_df,) = [df for name, _, df in written if name == cfg.run_kind]
+    assert [(n, p) for n, p, _ in written if p] == [
+        (cfg.run_kind, ("tier", "source"))
+    ]
+    tree = _tree(pyramid_df)
     assert tree.count("Exchange") == 1
     assert tree.count("MapInArrow") == 1
     assert tree.index("MapInArrow") < tree.index("Exchange")
-    assert "rangepartitioning" in _plan(tier_df)
+    assert "rangepartitioning" in _plan(pyramid_df)
 
 
 def test_ann_broadcasts_probes(spark):

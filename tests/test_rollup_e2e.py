@@ -3,6 +3,8 @@ tier jobs -> per-row token-array equality against the single-node numpy
 kernels (the north-rule invariant), plus resume-from-checkpoint and
 salting-equivalence checks."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -61,34 +63,52 @@ def test_avg_window8(spark, base_df, workdir):
     _assert_tier_matches(engine, cfg, _tokens_by_doc(base_df), 2)
 
 
-def test_resume_from_checkpoint(spark, base_df, workdir):
-    """Complete one source partition, then resume the full run: the
-    completed partition is not recomputed and the final pyramid is
-    byte-identical to a fresh run."""
+def _partition_files(engine, cfg):
+    """{(tier, source partition dir): parquet file names}."""
+    out = {}
+    for tier in range(1, cfg.num_tiers + 1):
+        base = engine.catalog.path(cfg.name(tier))
+        for d in os.listdir(base) if os.path.isdir(base) else ():
+            if d.startswith("source="):
+                out[(tier, d)] = sorted(os.listdir(os.path.join(base, d)))
+    return out
+
+
+@pytest.mark.parametrize("pre_state", ["tier1-one-source",
+                                       "tier1-all-tier2-one-source"])
+def test_resume_from_checkpoint(spark, base_df, workdir, pre_state):
+    """Complete part of the pyramid, then resume the full run: the
+    completed (tier, source) partitions are not rewritten, every pair
+    has exactly one lineage row, and every tier equals the single-node
+    kernels.  Pre-states: tier 1 complete for one source; tier 1
+    complete for every source and tier 2 for one."""
     cfg = RollupConfig(kernel="avg", window=4, num_tiers=2, run_kind="resume")
     engine = RollupEngine(spark, workdir)
 
     some_source = base_df.select("source").first()["source"]
     part = base_df.where(F.col("source") == some_source)
-    engine.run_tier(part, cfg, tier=1)
-
-    lineage_before = (
-        engine.catalog.read("lineage")
-        .where(F.col("tier") == 1)
-        .count()
-    )
+    if pre_state == "tier1-one-source":
+        engine.run_tier(part, cfg, tier=1)
+    else:
+        engine.run_tier(base_df, cfg, tier=1)
+        engine.run_tier(part, cfg, tier=2)
+    before = _partition_files(engine, cfg)
+    assert before
 
     engine.run_pyramid(base_df, cfg, resume=True)
 
-    # the completed source produced exactly one lineage row in the
-    # second pass's tier-1 records? -> total lineage rows for tier 1 must
-    # be n_sources (no duplicate for the pre-completed one)
+    after = _partition_files(engine, cfg)
+    assert {k: after[k] for k in before} == before  # not rewritten
+    sources = {r["source"] for r in base_df.select("source").collect()}
+    assert set(after) == {(t, f"source={s}") for t in (1, 2) for s in sources}
     lineage = engine.catalog.read("lineage").where(
-        (F.col("tier") == 1) & (F.col("run_kind") == "resume:avg4")
+        F.col("run_kind") == "resume:avg4"
     )
-    per_source = lineage.groupBy("source").count().collect()
-    assert all(r["count"] == 1 for r in per_source), per_source
-    assert lineage_before >= 1
+    pairs = lineage.groupBy("tier", "source").count().collect()
+    assert {(r["tier"], r["source"]) for r in pairs} == {
+        (t, s) for t in (1, 2) for s in sources
+    }
+    assert all(r["count"] == 1 for r in pairs), pairs
 
     _assert_tier_matches(engine, cfg, _tokens_by_doc(base_df), 2)
 
@@ -168,43 +188,24 @@ def test_salting_splits_hot_source(spark):
     assert n_parts >= 3, f"hot source {hot} landed in only {n_parts} partitions"
 
 
-@pytest.mark.parametrize("kernel,sparse", [("avg", True), ("mode", False)])
-def test_single_pass_pyramid_equals_tiered(spark, base_df, workdir, kernel, sparse):
-    """One-scan pyramid == the tier-by-tier materialization."""
-    cfg = RollupConfig(kernel=kernel, window=4, num_tiers=3, sparse=sparse,
-                       run_kind=f"sp_{kernel}{int(sparse)}")
-    engine = RollupEngine(spark, workdir)
-    stats = engine.run_pyramid_single_pass(base_df, cfg)
-    assert set(stats) == {1, 2, 3}
-    assert stats[1]["rows_out"] == N_DOCS
-    base = _tokens_by_doc(base_df)
-    for tier in (1, 2, 3):
-        got = _tokens_by_doc(engine.read_pyramid_tier(cfg, tier))
-        for doc_id, toks in base.items():
-            want = K.pool(kernel, toks, window=4, num_tiers=tier,
-                          sparse=sparse)[tier - 1]
-            assert np.array_equal(got[doc_id], want), (kernel, tier, doc_id)
-
-
 def test_run_tier_issues_no_stats_rescan_jobs(spark, base_df, workdir):
     """Tier metrics ride the write job via df.observe and per-source
-    lineage rows come from parquet footers, so a tier costs exactly:
-    range-sampling + write, lineage append, metrics append — with no
-    post-write stats re-scan and no pre-flight min(n_tok) scan
-    (VERDICT r01 item 10)."""
+    lineage rows come from parquet footers, so a whole 2-tier pyramid
+    is one pass: range sampling, exchange + kernels + write, one lineage
+    append and one metrics append — with no post-write stats re-scan,
+    no pre-flight min(n_tok) scan (VERDICT r01 item 10) and no
+    per-tier re-read of the previous tier."""
     cfg = RollupConfig(kernel="avg", window=4, num_tiers=2, run_kind="jc")
     engine = RollupEngine(spark, workdir)
     sc = spark.sparkContext
-    sc.setJobGroup("jc_tier1", "tier 1")
-    engine.run_tier(base_df, cfg, tier=1)
+    sc.setJobGroup("jc_pyramid", "pyramid")
+    engine.run_pyramid(base_df, cfg)
     sc.setJobGroup("jc_done", "after")
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("jc_tier1"))
-    # measured: 6 = repartitionByRange sampling, kernel+write, broadcast
-    # of the (empty) completed-lineage set, lineage append, metrics
-    # append (2 incl. local-rows conversion).  The pre-refactor path
-    # added a stats groupBy-collect over the written tier and a
-    # pyramid-level min(n_tok) scan on top.
-    assert n_jobs <= 6, f"run_tier launched {n_jobs} jobs"
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("jc_pyramid"))
+    # measured: 5 = repartitionByRange sampling, the exchange's map
+    # stage, the kernel+write stage, lineage append, metrics append.
+    # The tier-by-tier chain took 14 for the same pyramid.
+    assert n_jobs <= 5, f"run_pyramid launched {n_jobs} jobs"
 
 
 def test_map_in_arrow_pooling_equals_kernels(spark):

@@ -7,7 +7,7 @@ import pyarrow as pa
 import pytest
 
 from tinybrain_spark import kernels as K
-from tinybrain_spark.udfs import avg_step, pool_tier, pool_tiers
+from tinybrain_spark.udfs import avg_step, pool_pyramid, pool_tier, pool_tiers
 
 LENGTHS = (64, 128, 64, 256, 128, 64, 256)
 
@@ -80,9 +80,15 @@ def test_pool_tier_float_batch(rows):
 @pytest.mark.parametrize("sparse", [False, True])
 def test_avg_step_chain_batch_equals_kernels(rows, sparse):
     """Tier 1 from tokens, then tiers 2-3 from the persisted
-    accumulator, over a sliced mixed-length batch."""
+    accumulator, over a sliced mixed-length batch; the one-pass
+    pyramid body emits the same rows, one output batch per tier."""
     batch = _batch(rows, 1, 7)
     ids = batch.column(0).to_pylist()
+    pyramid = list(pool_pyramid("avg", window=4, num_tiers=3,
+                                sparse=sparse).batches([batch]))
+    assert [b.column("tier").to_pylist() for b in pyramid] == [
+        [t] * len(ids) for t in (1, 2, 3)
+    ]
     out = _run(avg_step(window=4, sparse=sparse, tier=1), batch)
     for tier in (2, 3):
         step_in = out.select(["doc_id", "accum", "denom"])
@@ -92,6 +98,7 @@ def test_avg_step_chain_batch_equals_kernels(rows, sparse):
         want = [_want("avg", rows[i], tier, sparse)[-1] for i in ids]
         assert out.column("tokens").to_pylist() == want
         assert out.column("denom").null_count == (0 if sparse else len(ids))
+        assert pyramid[tier - 1].select(out.schema.names).equals(out)
 
 
 def test_empty_batch_yields_empty_typed_batch(rows):
@@ -107,4 +114,4 @@ def test_empty_batch_yields_empty_typed_batch(rows):
 
 def test_guard_rejects_short_rows(rows):
     with pytest.raises(ValueError, match="Can't downsample below one window"):
-        _run(pool_tier("mode", window=4, guard_tiers=4), _batch(rows))
+        _run(pool_pyramid("mode", window=4, guard_tiers=4), _batch(rows))

@@ -1,5 +1,5 @@
-"""Table catalog shim: Iceberg when the runtime jar is available, plain
-partitioned Parquet + per-partition dynamic overwrite otherwise.
+"""Table catalog shim: plain partitioned Parquet + per-partition
+dynamic overwrite.
 
 The engine only relies on three capabilities — partitioned append,
 partition-level overwrite (the MERGE-lite used for resume), and read —
@@ -27,21 +27,10 @@ def is_local_path(path: str) -> bool:
     return scheme == "" or len(scheme) == 1
 
 
-def _has_iceberg(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 class Catalog:
     def __init__(self, spark: SparkSession, base_path: str):
         self.spark = spark
         self.base_path = base_path
-        self.use_iceberg = _has_iceberg(spark)
         self.is_local = is_local_path(base_path)
         if self.is_local:
             os.makedirs(base_path, exist_ok=True)

@@ -3,18 +3,15 @@ per-partition lineage and rollup metrics ... so any tier can resume
 mid-pyramid').
 
 Lineage granularity is (run kind, tier, source): one row per completed
-source partition per tier, carrying row counts and a content checksum.
-Resume = LEFT ANTI join of the tier's input sources against completed
-lineage — only missing partitions are recomputed, and their output is
-appended (tier tables are partitioned by source, so a crashed partial
-write is overwritten partition-wise).
+source partition per tier, carrying row counts; each pyramid pass
+appends the rows of every tier it built at once.  Resume reads the
+completed pairs with one lineage scan: only missing (tier, source)
+partitions are written (the pyramid table is partitioned by tier and
+source, so a crashed partial write is overwritten partition-wise).
 """
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -68,48 +65,44 @@ class CheckpointStore:
 
     # -- lineage ---------------------------------------------------------
 
-    def completed_sources(self, run_kind: str, tier: int) -> DataFrame:
-        spark = self.catalog.spark
+    def completed_sources(self, run_kind: str) -> dict[int, set[str]]:
+        """{tier: sources} with complete lineage, from one lineage scan."""
         if not self.catalog.exists(LINEAGE_TABLE):
-            return spark.createDataFrame([], "source string")
-        return (
+            return {}
+        done: dict[int, set[str]] = {}
+        for r in (
             self.catalog.read(LINEAGE_TABLE)
             .where(
                 (F.col("run_kind") == run_kind)
-                & (F.col("tier") == tier)
                 & (F.col("status") == "complete")
             )
-            .select("source")
+            .select("tier", "source")
             .distinct()
-        )
-
-    def filter_pending(
-        self, df: DataFrame, run_kind: str, tier: int
-    ) -> DataFrame:
-        """LEFT ANTI join input against completed lineage partitions."""
-        done = self.completed_sources(run_kind, tier)
-        return df.join(F.broadcast(done), on="source", how="left_anti")
+            .collect()
+        ):
+            done.setdefault(r["tier"], set()).add(r["source"])
+        return done
 
     def record_tier(
         self,
         run_kind: str,
-        tier: int,
         per_source: list[dict],
-        totals: dict,
+        totals: dict[int, dict],
         wall_sec: float,
     ) -> None:
-        """per_source: rows of {source, rows_in, rows_out} (parquet-
-        footer counts); totals: {rows_out, points_out, checksum,
-        min_n_tok} observed on the write job."""
-        spark = self.catalog.spark
-        now = time.time()
+        """Record one pass over every tier it built: one lineage append
+        and one metrics append.  per_source: rows of {tier, source,
+        rows_in, rows_out} (parquet-footer counts); totals: {tier ->
+        {rows_out, points_out, checksum, min_n_tok}} observed on the
+        write job; every metrics row carries the pass wall."""
         import datetime as dt
 
-        ts = dt.datetime.fromtimestamp(now, dt.timezone.utc).replace(tzinfo=None)
+        spark = self.catalog.spark
+        ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         lineage_rows = [
             (
                 run_kind,
-                tier,
+                r["tier"],
                 r["source"],
                 int(r["rows_in"]),
                 int(r["rows_out"]),
@@ -124,19 +117,19 @@ class CheckpointStore:
                 LINEAGE_TABLE,
                 mode="append",
             )
-        points = int(totals["points_out"])
         metrics = [
             (
                 run_kind,
                 tier,
-                int(totals["rows_out"]),
-                points,
-                int(totals["checksum"]),
-                int(totals["min_n_tok"]),
+                int(t["rows_out"]),
+                int(t["points_out"]),
+                int(t["checksum"]),
+                int(t["min_n_tok"]),
                 float(wall_sec),
-                points / wall_sec if wall_sec > 0 else 0.0,
+                t["points_out"] / wall_sec if wall_sec > 0 else 0.0,
                 ts,
             )
+            for tier, t in sorted(totals.items())
         ]
         self.catalog.write(
             spark.createDataFrame(metrics, METRICS_SCHEMA),

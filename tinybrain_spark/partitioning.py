@@ -32,10 +32,12 @@ def cluster_for_write(
     num_partitions: int | None = None,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
 ) -> DataFrame:
-    """repartitionByRange(source, time_bucket, salt) + in-partition sort.
+    """repartitionByRange(source, time_bucket, salt).
 
     Range (not hash) keeps (source, time_bucket) runs contiguous for
-    compression; the salt splits hot sources across partitions.
+    compression; the salt splits hot sources across partitions.  The
+    caller sorts within partitions after any per-row work, in the
+    order its writer needs.
     """
     salted = with_salt(df, salt_buckets)
     cols = [F.col("source"), F.col("time_bucket"), F.col("salt")]
@@ -43,4 +45,4 @@ def cluster_for_write(
         out = salted.repartitionByRange(num_partitions, *cols)
     else:
         out = salted.repartitionByRange(*cols)
-    return out.sortWithinPartitions("source", "time_bucket", "doc_id").drop("salt")
+    return out.drop("salt")

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .catalog import Catalog
+from .rollup import tier_table
 
 
 def _iter_parquet_files(catalog: Catalog, table: str):
@@ -191,7 +192,7 @@ def enforce_pyramid_retention(
     """Apply the policy to every tier table of a pyramid run."""
     results = {}
     for tier in range(1, num_tiers + 1):
-        table = f"{run_kind}/tier_{tier:02d}"
+        table = tier_table(run_kind, tier)
         if catalog.exists(table):
             results[tier] = enforce_retention(
                 catalog, table, tier, policy, newest_bucket

@@ -2,17 +2,19 @@
 materialized tiers over a tokenized-sequence table (SURVEY.md §3.4).
 
 Each tier halves/quarters/eighths every row's token array with one of
-the five pooling kernels.  AVG tiers extend a persisted int64 block-sum
-accumulator (+ nonzero-count denominator when sparse) instead of
-re-pooling rendered values — the engine analog of the reference's
-multi-mip shared accumulator (accelerated.pyx:223-259), which keeps
-integer truncation to once per cycle.  MODE/MAX/MIN/STRIDE tiers pool
-the previous tier's rendered output (mode-of-modes, downsample.py:
-215-217).
+the five pooling kernels.  Like the reference's ``num_mips`` call
+(accelerated.pyx:223-259), every tier comes from one pass over the
+base table: AVG tiers chain an int64 block-sum accumulator (+
+nonzero-count denominator when sparse), persisted with each tier so
+the serving layer can extend it, which keeps integer truncation to
+once per cycle; MODE/MAX/MIN/STRIDE tiers pool the previous tier's
+rendered output (mode-of-modes, downsample.py:215-217).
 
-Plan shape per tier (see .explain in tests): parquet scan ->
-range-partitioned exchange (write clustering only) -> one MapInArrow
-node running the kernels -> partitioned write.  Pooling itself never
+Plan shape of one pass (pinned in tests/test_plans.py): parquet scan
+-> range-partitioned exchange (write clustering only) -> one
+MapInArrow node running the kernels and emitting one row per (doc,
+tier) -> local sort on (tier, source, time_bucket, doc_id) -> one write
+of ``{run_kind}`` partitioned by (tier, source).  Pooling itself never
 shuffles.
 """
 
@@ -21,14 +23,14 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import kernels as K
 from .catalog import Catalog
 from .checkpoint import CheckpointStore
 from .partitioning import cluster_for_write
-from .udfs import avg_step, pool_tier, pool_tiers
+from .udfs import pool_pyramid
 
 TIER_KEY_COLS = ("doc_id", "source", "time_bucket")
 
@@ -47,6 +49,13 @@ def _reraise_kernel_guard(exc: Exception) -> None:
         raise ValueError(detail.strip()) from exc
 
 
+def tier_table(run_kind: str, tier: int) -> str:
+    """Catalog name of one tier: the ``tier=k`` partition of the
+    ``run_kind`` table, itself readable as a table partitioned by
+    source.  The one place that knows the pyramid layout."""
+    return f"{run_kind}/tier={tier}"
+
+
 @dataclass(frozen=True)
 class RollupConfig:
     kernel: str = "avg"  # avg | mode | max | min | stride
@@ -56,10 +65,7 @@ class RollupConfig:
     run_kind: str = "default"
 
     def name(self, tier: int) -> str:
-        return f"{self.run_kind}/tier_{tier:02d}"
-
-    def validate(self, min_n_tok: int) -> None:
-        K.validate_pool_args(min_n_tok, self.window, self.num_tiers)
+        return tier_table(self.run_kind, tier)
 
     def validate_static(self) -> None:
         """Window/tier sanity without scanning the data.  The per-row
@@ -72,11 +78,34 @@ class RollupConfig:
         )
 
 
+def _tier_metrics(tiers: range) -> list:
+    """Per-tier write metrics as one aggregate (the tier count is known,
+    so 'group by tier' unrolls into one expression set per tier)."""
+    out = []
+    for k in tiers:
+        at = F.col("tier") == k
+        size = F.when(at, F.size("tokens"))
+        total = F.aggregate(
+            "tokens", F.lit(0).cast("long"), lambda a, x: a + x
+        )
+        out += [
+            F.count(size).alias(f"rows_out_{k}"),
+            F.coalesce(F.sum(size), F.lit(0)).alias(f"points_out_{k}"),
+            F.coalesce(F.sum(F.when(at, total)), F.lit(0)).alias(
+                f"checksum_{k}"
+            ),
+            F.min(size).alias(f"min_n_tok_{k}"),
+        ]
+    return out
+
+
 class RollupEngine:
     """Materializes a retention pyramid under ``catalog.base_path``.
 
-    Tier table schema: (doc_id, source, time_bucket, tokens, n_tok
-    [, accum, denom]) partitioned by source.
+    One table per run kind, ``{run_kind}`` partitioned by (tier,
+    source).  Each tier (``RollupConfig.name``) reads as a standalone
+    table (doc_id, source, time_bucket, tokens, n_tok [, accum, denom])
+    partitioned by source.
     """
 
     def __init__(self, spark: SparkSession, base_path: str):
@@ -92,91 +121,12 @@ class RollupEngine:
         config: RollupConfig,
         resume: bool = True,
     ) -> dict:
-        """Run all tiers, resuming any tier whose lineage is incomplete.
+        """Run all tiers in one pass, resuming any (tier, source) whose
+        lineage is incomplete.
 
         Returns {tier -> {rows_out, points_out, wall_sec}}.
         """
-        config.validate_static()
-
-        stats: dict[int, dict] = {}
-        for tier in range(1, config.num_tiers + 1):
-            stats[tier] = self.run_tier(df, config, tier, resume=resume)
-        return stats
-
-    def run_pyramid_single_pass(
-        self,
-        df: DataFrame,
-        config: RollupConfig,
-    ) -> dict:
-        """Materialize ALL tiers from ONE scan + ONE kernel pass.
-
-        The multi-tier kernel already computes every level from the
-        shared accumulator (the reference's num_mips semantics,
-        accelerated.pyx:223-259), so when per-tier resume granularity is
-        not needed this writes the whole pyramid with a single input
-        scan — k fewer scans and k-1 fewer Arrow exchanges than the
-        tiered path.  Output: one table `<run_kind>/pyramid` partitioned
-        by (tier, source).  Results are identical to the tiered path
-        (pinned by test)."""
-        from pyspark.sql import Observation
-
-        config.validate_static()
-
-        t0 = time.time()
-        pool = pool_tiers(
-            config.kernel,
-            window=config.window,
-            num_tiers=config.num_tiers,
-            sparse=config.sparse,
-        )
-        tiers = pool(cluster_for_write(df.select(*TIER_KEY_COLS, "tokens")))
-        # per-tier stats ride the write job as observe metrics (the tier
-        # count is known, so 'group by tier' unrolls into one aggregate
-        # expression per tier) — no post-write stats re-scan
-        obs = Observation(f"pyramid_{config.run_kind}")
-        metrics = [F.count(F.lit(1)).alias("rows")]
-        for k in range(1, config.num_tiers + 1):
-            metrics.append(
-                F.coalesce(
-                    F.sum(F.size(F.element_at("tiers", k))), F.lit(0)
-                ).alias(f"points_t{k}")
-            )
-        tiers = tiers.observe(obs, *metrics)
-        out = tiers.select(
-            *TIER_KEY_COLS,
-            F.posexplode("tiers").alias("tier0", "tokens"),
-        ).select(
-            *TIER_KEY_COLS,
-            (F.col("tier0") + 1).alias("tier"),
-            "tokens",
-            F.size("tokens").alias("n_tok"),
-        )
-        table = f"{config.run_kind}/pyramid"
-        try:
-            self.catalog.write(
-                out, table, partition_by=("tier", "source"),
-                mode="overwrite_partitions",
-            )
-        except Exception as exc:
-            _reraise_kernel_guard(exc)
-            raise
-        got = obs.get
-        if got["rows"] == 0:
-            raise ValueError("empty input table")
-        wall = time.time() - t0
-        return {
-            k: {
-                "rows_out": got["rows"],
-                "points_out": got[f"points_t{k}"],
-                "wall_sec": wall,
-            }
-            for k in range(1, config.num_tiers + 1)
-        }
-
-    def read_pyramid_tier(self, config: RollupConfig, tier: int) -> DataFrame:
-        return self.catalog.read(f"{config.run_kind}/pyramid").where(
-            F.col("tier") == tier
-        )
+        return self.run_tier(df, config, config.num_tiers, resume=resume)
 
     def run_tier(
         self,
@@ -185,105 +135,95 @@ class RollupEngine:
         tier: int,
         resume: bool = True,
     ) -> dict:
-        """Compute one tier.  ``df`` is the base (tier-0) table; tiers > 1
-        read their input from the materialized previous tier."""
+        """Materialize the pending tiers ``1..tier`` from the base
+        (tier-0) table ``df`` in one pass: one scan, one range exchange,
+        one kernel pass, one write, one lineage and one metrics append.
+
+        With ``resume``, a (tier, source) pair with complete lineage is
+        not rewritten: sources complete at every tier leave the input,
+        the other complete pairs leave the output before the write.  A
+        crash inside the pass reruns the pass for its pending sources.
+
+        Returns {tier -> {rows_out, points_out, wall_sec}}, counting the
+        rows this pass wrote; ``wall_sec`` is the pass wall."""
+        config.validate_static()
+        if not 1 <= tier <= config.num_tiers:
+            raise ValueError(f"tier {tier} outside 1..{config.num_tiers}")
         t0 = time.time()
-        table = config.name(tier)
-
-        if tier == 1:
-            src = df.select(*TIER_KEY_COLS, "tokens", "n_tok")
-            prev_has_accum = False
-        else:
-            prev = self.catalog.read(config.name(tier - 1))
-            prev_has_accum = "accum" in prev.columns
-            src = prev
-
+        tiers = range(1, tier + 1)
         run_kind = f"{config.run_kind}:{config.kernel}{config.window}"
-        pending = src
-        completed: set[str] = set()
-        if resume:
-            # the set is collected once for lineage-row exclusion (source
-            # cardinality is low by design); the DATA filter is a
-            # broadcast LEFT ANTI join, not an isin literal — correct
-            # even if a future deployment keys partitions more finely
-            completed = {
-                r["source"]
-                for r in self.checkpoints.completed_sources(
-                    run_kind, tier
-                ).collect()
-            }
-            if completed:
-                pending = self.checkpoints.filter_pending(
-                    src, run_kind, tier
+        done = self.checkpoints.completed_sources(run_kind) if resume else {}
+        done = {k: done.get(k, set()) for k in tiers}
+
+        src = df.select(*TIER_KEY_COLS, "tokens")
+        # source cardinality is low by design, so the complete sets
+        # filter as literals: no lineage broadcast job
+        skip = set.intersection(*done.values())
+        if skip:
+            src = src.where(~F.col("source").isin(sorted(skip)))
+        # Cluster BEFORE pooling: repartitionByRange samples its child to
+        # pick range bounds — with the kernels upstream that would run
+        # the whole pooling stage twice.  Pooling is row-wise, so
+        # clustering the raw input clusters the output with exactly ONE
+        # kernel pass.
+        pool = pool_pyramid(
+            config.kernel,
+            window=config.window,
+            num_tiers=tier,
+            sparse=config.sparse,
+            guard_tiers=config.num_tiers,
+        )
+        out = pool(cluster_for_write(src))
+        for k, sources in done.items():
+            if sources - skip:
+                out = out.where(
+                    (F.col("tier") != k)
+                    | ~F.col("source").isin(sorted(sources - skip))
                 )
 
-        # Cluster BEFORE pooling: repartitionByRange samples its child to
-        # pick range bounds — with the UDF upstream that would execute the
-        # whole pooling stage twice.  Pooling is row-wise, so clustering
-        # the raw input yields identically-clustered output with exactly
-        # ONE kernel pass.
-        clustered = cluster_for_write(pending)
-        out = self._pool_tier(clustered, config, tier, prev_has_accum)
-
         # tier metrics ride the write job via observe — no post-write
-        # stats re-scan (VERDICT r01 item 10)
-        from pyspark.sql import Observation
-
+        # stats re-scan (VERDICT r01 item 10).  The sort comes last, so
+        # the writer's required (tier, source) ordering is already met.
         obs = Observation(f"{run_kind}_t{tier}")
-        observed = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_out"),
-            F.coalesce(F.sum(F.size("tokens")), F.lit(0)).alias("points_out"),
-            F.coalesce(
-                F.sum(
-                    F.aggregate(
-                        "tokens", F.lit(0).cast("long"), lambda a, x: a + x
-                    )
-                ),
-                F.lit(0),
-            ).alias("checksum"),
-            F.min(F.size("tokens")).alias("min_n_tok"),
+        out = out.observe(obs, *_tier_metrics(tiers)).sortWithinPartitions(
+            "tier", "source", "time_bucket", "doc_id"
         )
         try:
             self.catalog.write(
-                observed, table, partition_by=("source",),
+                out, config.run_kind, partition_by=("tier", "source"),
                 mode="overwrite_partitions",
             )
         except Exception as exc:  # surface the in-kernel guard cleanly
             _reraise_kernel_guard(exc)
             raise
         got = obs.get
+        wall = time.time() - t0
 
-        # per-source lineage rows (resume granularity) from parquet
-        # footers — an exact metadata-only read, no Spark job.  On a real
-        # deployment Iceberg manifests carry these per-partition counts
-        # natively; per-source VALUE sums would need a second scan, so
-        # sums live at tier granularity in the metrics table.
-        per_source_rows = self._partition_row_counts(table)
+        # per-(tier, source) lineage rows (resume granularity) from
+        # parquet footers — an exact metadata-only read, no Spark job.
+        # Per-source VALUE sums would need a second scan, so sums live
+        # at tier granularity in the metrics table.
         per_source = [
             # pooling is per-row: rows_in == rows_out
-            {"source": s, "rows_in": n, "rows_out": n}
-            for s, n in sorted(per_source_rows.items())
-            if s not in completed  # only newly-computed partitions
+            {"tier": k, "source": s, "rows_in": n, "rows_out": n}
+            for k in tiers
+            for s, n in sorted(
+                self._partition_row_counts(config.name(k)).items()
+            )
+            if s not in done[k]  # only newly-computed partitions
         ]
-        wall = time.time() - t0
-        self.checkpoints.record_tier(
-            run_kind,
-            tier,
-            per_source,
-            totals={
-                "rows_out": int(got["rows_out"]),
-                "points_out": int(got["points_out"]),
-                "checksum": int(got["checksum"]),
-                "min_n_tok": int(got["min_n_tok"] or 0),
-            },
-            wall_sec=wall,
-        )
-
+        totals = {
+            k: {
+                f: int(got[f"{f}_{k}"] or 0)
+                for f in ("rows_out", "points_out", "checksum", "min_n_tok")
+            }
+            for k in tiers
+        }
+        self.checkpoints.record_tier(run_kind, per_source, totals, wall)
         return {
-            "rows_out": int(got["rows_out"]),
-            "points_out": int(got["points_out"]),
-            "wall_sec": wall,
+            k: {"rows_out": t["rows_out"], "points_out": t["points_out"],
+                "wall_sec": wall}
+            for k, t in totals.items()
         }
 
     def _partition_row_counts(self, table: str, key: str = "source") -> dict:
@@ -320,30 +260,3 @@ class RollupEngine:
 
     def read_tier(self, config: RollupConfig, tier: int) -> DataFrame:
         return self.catalog.read(config.name(tier))
-
-    # -- internals --------------------------------------------------------
-
-    def _pool_tier(
-        self,
-        src: DataFrame,
-        config: RollupConfig,
-        tier: int,
-        prev_has_accum: bool,
-    ) -> DataFrame:
-        w = config.window
-        guard = config.num_tiers if tier == 1 else None
-        if config.kernel == "avg":
-            if tier > 1 and not prev_has_accum:
-                raise ValueError(
-                    f"tier {tier - 1} table lacks the persisted accumulator"
-                )
-            step = avg_step(
-                window=w, sparse=config.sparse, tier=tier, guard_tiers=guard
-            )
-            return step(src)
-
-        # mode/max/min/stride: recursive pooling of rendered values
-        pool = pool_tier(
-            config.kernel, window=w, sparse=config.sparse, guard_tiers=guard
-        )
-        return pool(src)

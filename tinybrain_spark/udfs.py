@@ -13,11 +13,13 @@ batched analog of the reference's dense-plane kernels.
 
 Each factory returns ``f(df) -> df``.  It consumes its input list
 columns, emits its output columns last, and passes every other column
-through unchanged.  ``mapInArrow`` was chosen over scalar Arrow or
-pandas UDFs by measurement: the same numpy body over 16,384x256 tokens
-(avg, 3 tiers) ran in 0.54 s behind ``mapInArrow`` against 0.85 s
-behind a scalar Arrow UDF, whose ``ArrowEvalPython`` node queues every
-input row on the JVM side while Python runs.
+through unchanged; ``pool_pyramid`` emits one row per input row and
+tier, the others one row per input row.  ``mapInArrow`` was chosen
+over scalar Arrow or pandas UDFs by measurement: the same numpy body
+over 16,384x256 tokens (avg, 3 tiers) ran in 0.54 s behind
+``mapInArrow`` against 0.85 s behind a scalar Arrow UDF, whose
+``ArrowEvalPython`` node queues every input row on the JVM side while
+Python runs.
 """
 
 from __future__ import annotations
@@ -35,7 +37,10 @@ from pyspark.sql.types import (
 
 from . import kernels as K
 
-__all__ = ["pool_tier", "pool_tiers", "avg_step", "pool_tiers_map_in_arrow"]
+__all__ = [
+    "pool_tier", "pool_tiers", "pool_pyramid", "avg_step",
+    "pool_tiers_map_in_arrow",
+]
 
 _SPARK_TYPES = {
     np.dtype(np.int32): IntegerType(),
@@ -47,6 +52,10 @@ _N_TOK = StructField("n_tok", IntegerType(), True)
 
 def _field(name: str, dtype) -> StructField:
     return StructField(name, ArrayType(_SPARK_TYPES[np.dtype(dtype)]), True)
+
+
+_TOKEN_FIELDS = [_field("tokens", np.int32), _N_TOK]
+_ACCUM_FIELDS = [_field("accum", np.int64), _field("denom", np.int64)]
 
 
 def _groups(cols: list, dtype):
@@ -91,10 +100,30 @@ def _list(offsets: np.ndarray, values: np.ndarray) -> pa.ListArray:
     return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values))
 
 
+def _tokens(n: int, parts: list, dtype=np.int32) -> list:
+    """``[tokens, n_tok]`` from ``(rows, mat)`` length groups."""
+    offsets, values = _scatter(n, parts, dtype)
+    return [_list(offsets, values), pa.array(np.diff(offsets))]
+
+
+def _avg_columns(n: int, parts: list, sparse: bool) -> list:
+    """``[tokens, n_tok, accum, denom]`` of one AVG tier from
+    ``(rows, (acc, den, rendered))`` length groups; ``denom`` is null
+    unless sparse."""
+    accum = _list(*_scatter(n, [(rows, a) for rows, (a, _d, _r) in parts],
+                            np.int64))
+    denom = (_list(*_scatter(n, [(rows, d) for rows, (_a, d, _r) in parts],
+                             np.int64)) if sparse
+             else pa.nulls(n, type=pa.list_(pa.int64())))
+    return [*_tokens(n, [(rows, r) for rows, (_a, _d, r) in parts]),
+            accum, denom]
+
+
 def _mapper(in_cols: tuple[str, ...], out_fields: list, in_dtype, body):
     """``f(df) -> df`` over ``mapInArrow``: ``body(groups, n)`` maps
-    the dense length groups of ``in_cols`` to one Arrow array per
-    ``out_fields`` entry; every other column passes through.  The batch
+    the dense length groups of ``in_cols`` to a list of output batches,
+    each one Arrow array per ``out_fields`` entry; every other column
+    passes through, repeated unchanged in each output batch.  The batch
     body itself (Arrow batches in, Arrow batches out, no Spark) is
     ``f.batches``."""
     out_names = [f.name for f in out_fields]
@@ -105,10 +134,11 @@ def _mapper(in_cols: tuple[str, ...], out_fields: list, in_dtype, body):
             rest = [c for c in batch.schema.names if c not in replaced]
             groups = list(_groups([batch.column(c) for c in in_cols],
                                   in_dtype))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in rest] + body(groups, batch.num_rows),
-                names=rest + out_names,
-            )
+            for cols in body(groups, batch.num_rows):
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(c) for c in rest] + cols,
+                    names=rest + out_names,
+                )
 
     def apply(df):
         rest = [f for f in df.schema if f.name not in replaced]
@@ -125,30 +155,21 @@ def pool_tier(
     window: int = 4,
     num_tiers: int = 1,
     sparse: bool = False,
-    guard_tiers: int | None = None,
     dtype=np.int32,
 ):
     """``tokens`` -> the deepest of ``num_tiers`` pooled tiers, as
     ``tokens`` + ``n_tok``.  ``dtype`` is the pooling and output dtype:
     int32 for the integer tiers, float32 for the reference's float tier
     semantics (divisor ``w^(m+1)``, NO cycle renormalization,
-    accelerated.pyx:469-599).
-
-    ``guard_tiers``: enforce the pyramid-depth minimum-size guard
-    (accelerated.pyx:89-90, n >= window**guard_tiers) per batch, so the
-    engine needs no driver-side pre-scan to validate a deep pyramid."""
+    accelerated.pyx:469-599)."""
 
     def body(groups, n):
         parts = []
         for rows, (mat,) in groups:
-            if guard_tiers is not None:
-                K.validate_pool_args(mat.shape[1], window, guard_tiers,
-                                     pot_only=False)
             res = K.pool(kind, mat, window=window, num_tiers=num_tiers,
                          sparse=sparse, dtype=dtype)
             parts.append((rows, res[-1]))
-        offsets, values = _scatter(n, parts, dtype)
-        return [_list(offsets, values), pa.array(np.diff(offsets))]
+        return [_tokens(n, parts, dtype)]
 
     return _mapper(
         ("tokens",),
@@ -177,10 +198,10 @@ def pool_tiers(
         _, values = _scatter(n, parts, np.int32)
         inner = np.concatenate(([0], np.cumsum(widths.ravel())))
         outer = np.arange(0, n * num_tiers + 1, num_tiers)
-        return [pa.ListArray.from_arrays(
+        return [[pa.ListArray.from_arrays(
             pa.array(outer.astype(np.int32)),
             _list(inner.astype(np.int32), values),
-        )]
+        )]]
 
     tiers = StructField("tiers", ArrayType(ArrayType(IntegerType())), True)
     return _mapper(("tokens",), [tiers], np.int32, body)
@@ -200,12 +221,7 @@ def pool_tiers_map_in_arrow(
     return lambda df: pool(df.select("tokens"))
 
 
-def avg_step(
-    window: int = 4,
-    sparse: bool = False,
-    tier: int = 1,
-    guard_tiers: int | None = None,
-):
+def avg_step(window: int = 4, sparse: bool = False, tier: int = 1):
     """One retention-tier step for AVG from persisted accumulators:
     -> ``tokens``, ``n_tok``, ``accum``, ``denom``.
 
@@ -221,29 +237,65 @@ def avg_step(
         in_cols = ("accum", "denom") if sparse else ("accum",)
 
     def body(groups, n):
-        acc_p, den_p, tok_p = [], [], []
+        parts = []
         for rows, mats in groups:
             dmat = mats[1] if len(mats) > 1 else None
-            acc, den, r = _avg_step_matrices(
-                mats[0], dmat, window, sparse, tier, guard_tiers
+            parts.append(
+                (rows, _avg_step_matrices(mats[0], dmat, window, sparse, tier))
             )
-            acc_p.append((rows, acc))
-            den_p.append((rows, den))
-            tok_p.append((rows, r))
-        offsets, tokens = _scatter(n, tok_p, np.int32)
-        accum = _list(*_scatter(n, acc_p, np.int64))
-        denom = (_list(*_scatter(n, den_p, np.int64)) if sparse
-                 else pa.nulls(n, type=pa.list_(pa.int64())))
-        return [_list(offsets, tokens), pa.array(np.diff(offsets)),
-                accum, denom]
+        return [_avg_columns(n, parts, sparse)]
 
-    return _mapper(
-        in_cols,
-        [_field("tokens", np.int32), _N_TOK,
-         _field("accum", np.int64), _field("denom", np.int64)],
-        np.int64,
-        body,
-    )
+    return _mapper(in_cols, [*_TOKEN_FIELDS, *_ACCUM_FIELDS], np.int64, body)
+
+
+def pool_pyramid(
+    kind: str,
+    window: int = 4,
+    num_tiers: int = 1,
+    sparse: bool = False,
+    guard_tiers: int | None = None,
+):
+    """``tokens`` -> one row per (input row, tier) for tiers
+    ``1..num_tiers``: ``tier``, ``tokens``, ``n_tok`` and, for avg,
+    ``accum`` + ``denom`` (the persisted accumulator ``avg_step``
+    extends).  Every tier comes from one kernel pass over the input,
+    like the reference's ``num_mips`` (accelerated.pyx:223-259): avg
+    chains the accumulator step, the other kernels call
+    ``kernels.pool`` once.  Each input batch yields one output batch
+    per tier.
+
+    ``guard_tiers``: enforce the pyramid-depth minimum-size guard
+    (accelerated.pyx:89-90, n >= window**guard_tiers) per batch, so the
+    engine needs no driver-side pre-scan to validate a deep pyramid."""
+    avg = kind == "avg"
+
+    def body(groups, n):
+        tiers = [[] for _ in range(num_tiers)]
+        for rows, (mat,) in groups:
+            if guard_tiers is not None:
+                K.validate_pool_args(mat.shape[1], window, guard_tiers,
+                                     pot_only=False)
+            if avg:
+                acc, den = mat, None
+                for t in range(num_tiers):
+                    acc, den, r = _avg_step_matrices(acc, den, window,
+                                                     sparse, t + 1)
+                    tiers[t].append((rows, (acc, den, r)))
+            else:
+                res = K.pool(kind, mat, window=window, num_tiers=num_tiers,
+                             sparse=sparse, dtype=np.int32)
+                for t, r in enumerate(res):
+                    tiers[t].append((rows, r))
+        return [
+            [pa.array(np.full(n, t, dtype=np.int32)),
+             *(_avg_columns(n, parts, sparse) if avg else _tokens(n, parts))]
+            for t, parts in enumerate(tiers, 1)
+        ]
+
+    fields = [StructField("tier", IntegerType(), True), *_TOKEN_FIELDS]
+    if avg:
+        fields += _ACCUM_FIELDS
+    return _mapper(("tokens",), fields, np.int32, body)
 
 
 def _avg_step_params(window: int, tier: int) -> tuple[int, int, bool]:
@@ -263,19 +315,12 @@ def _avg_step_matrices(
     window: int,
     sparse: bool,
     tier: int,
-    guard_tiers: int | None,
 ):
     """One dense length-group of the AVG tier step: returns
     (acc int64 (n, L/w), den int64|None, rendered int32), so the
     cycle-renorm / sparse-denom semantics live in exactly one place."""
     shift, prev_shift, renorm = _avg_step_params(window, tier)
     if tier == 1:
-        if guard_tiers is not None:
-            # pyramid-depth guard per batch (pyx:89-90) — no
-            # driver-side pre-scan needed
-            K.validate_pool_args(
-                stacked.shape[1], window, guard_tiers, pot_only=False
-            )
         acc = K._windows(stacked, window).sum(axis=2, dtype=np.int64)
         den = (
             K._windows((stacked != 0).astype(np.int64), window).sum(
