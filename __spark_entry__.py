@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tinybrain_spark import driver_contract as _dc  # noqa: E402
+from tinybrain_spark.driver_contract.sequences import token_table  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -29,7 +30,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     from tinybrain_spark.udfs import pool_tiers
 
-    tt = _dc.token_table(spark, sf_dir).select("user_id", "tokens")
+    tt = token_table(spark, sf_dir).select("user_id", "tokens")
     pooled = pool_tiers("avg", window=4, num_tiers=2)(tt)
     tiers = pooled.select("user_id", F.posexplode("tiers").alias("tier0", "toks"))
     return tiers.select(

@@ -47,7 +47,11 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import functions as F
 
-    from tinybrain_spark import driver_contract as dc
+    from tinybrain_spark.driver_contract.corpus import q_hash_split
+    from tinybrain_spark.driver_contract.text import (
+        q_quality_filter,
+        q_tokenize_vocab,
+    )
     from tinybrain_spark.packing import pack_tokens
     from tinybrain_spark.session import get_spark, load_table
 
@@ -58,7 +62,7 @@ def main(argv: list[str] | None = None) -> int:
     n_in = docs.count()
 
     kept = (
-        dc.q_quality_filter(spark, args.input)
+        q_quality_filter(spark, args.input)
         .where(F.col("keep") == 1)
         .select("doc_id")
     )
@@ -74,7 +78,7 @@ def main(argv: list[str] | None = None) -> int:
 
     # tokenize the full corpus once (vocab is corpus-derived), keep
     # survivor docs only; collect per-doc arrays (bounded by doc length)
-    toks = dc.q_tokenize_vocab(spark, args.input).join(survivors, "doc_id")
+    toks = q_tokenize_vocab(spark, args.input).join(survivors, "doc_id")
     arrays = (
         toks.groupBy("doc_id")
         .agg(
@@ -90,7 +94,7 @@ def main(argv: list[str] | None = None) -> int:
         )
     )
     with_split = arrays.join(
-        dc.q_hash_split(spark, args.input).select("doc_id", "split"),
+        q_hash_split(spark, args.input).select("doc_id", "split"),
         "doc_id",
     ).persist()
 

@@ -37,13 +37,13 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from tinybrain_spark import driver_contract as dc
+    from tinybrain_spark.driver_contract.dedup import q_dedup_clusters
     from tinybrain_spark.session import get_spark, load_table
 
     spark = get_spark("dedup-job", master=args.master)
     try:
         t0 = time.time()
-        clusters = dc.q_dedup_clusters(spark, args.input)
+        clusters = q_dedup_clusters(spark, args.input)
         docs = load_table(spark, args.input, "documents").select(
             F.col("doc_id").cast("long").alias("doc_id"),
             "source",

@@ -15,7 +15,60 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from tinybrain_spark import driver_contract as dc
+from tinybrain_spark.driver_contract.dedup import (
+    q_containment,
+    q_dup_islands,
+    q_lsh_band_stats,
+    q_minhash_pairs,
+    q_ngram_jaccard,
+    q_source_overlap,
+)
+from tinybrain_spark.driver_contract.events import (
+    PR_DAMP_DEN,
+    PR_DAMP_NUM,
+    PR_ITERS,
+    PR_SCALE,
+    q_cohort_retention,
+    q_decay_topk,
+    q_funnel_steps,
+    q_journey_paths,
+    q_late_arrival,
+    q_markov_transitions,
+    q_pagerank,
+    q_triangle_counts,
+)
+from tinybrain_spark.driver_contract.sequences import SOURCE_OVERLAP_MAX
+from tinybrain_spark.driver_contract.signals import (
+    ALERT_HOT,
+    q_acf_lags,
+    q_alert_episodes,
+    q_mad_outliers,
+    q_sax_motifs,
+    q_sax_paa,
+    q_slo_ribbon,
+    q_slo_weekly,
+    q_xcorr_types,
+)
+from tinybrain_spark.driver_contract.text import (
+    DRIFT_FP_BITS,
+    MG_CAPACITY,
+    MG_K,
+    _mg_candidates,
+    q_bpe_merge_step,
+    q_heavy_hitters_mg,
+    q_inverted_index,
+    q_source_drift,
+    q_vocab_coverage,
+)
+from tinybrain_spark.driver_contract.tiers import (
+    q_dod_compressibility,
+    q_retention_policy,
+)
+from tinybrain_spark.driver_contract.timeseries import (
+    q_interarrival,
+    q_logbucket_quantile,
+    q_state_durations,
+)
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -62,7 +115,7 @@ def test_funnel_strict_order_semantics(spark, tmp_path):
     d = _events_dir(spark, tmp_path, rows)
     got = {
         r["step_name"]: r["n_users"]
-        for r in dc.q_funnel_steps(spark, d).collect()
+        for r in q_funnel_steps(spark, d).collect()
     }
     assert got == {"view": 3, "click": 2, "purchase": 1}
 
@@ -93,11 +146,11 @@ def test_pagerank_matches_literal_power_iteration(spark, tmp_path):
     d = _events_dir(spark, tmp_path, rows)
     edges = [(1, 2), (2, 1), (1, 3), (3, 2)]
     want = _pagerank_ref(
-        edges, dc.PR_ITERS, dc.PR_SCALE, dc.PR_DAMP_NUM, dc.PR_DAMP_DEN
+        edges, PR_ITERS, PR_SCALE, PR_DAMP_NUM, PR_DAMP_DEN
     )
     got = {
         r["user_id"]: r["rank_fp"]
-        for r in dc.q_pagerank(spark, d).collect()
+        for r in q_pagerank(spark, d).collect()
     }
     assert got == want
 
@@ -111,7 +164,7 @@ def test_dup_islands_merges_adjacent_windows(spark, tmp_path):
         f"x2 y2 u2 {shared} z2 w2",
     ]
     d = _docs_dir(spark, tmp_path, texts)
-    rows = dc.q_dup_islands(spark, d).collect()
+    rows = q_dup_islands(spark, d).collect()
     spans = {(r["doc_id"], r["span_start"], r["span_words"])
              for r in rows}
     # doc 0: shared run starts at word index 2; doc 1: at index 3
@@ -131,7 +184,7 @@ def test_interarrival_stitches_day_boundaries(spark, tmp_path):
     got = {
         r["source"]: (r["n_deltas"], r["min_delta_us"],
                       r["max_delta_us"], r["avg_delta_us"])
-        for r in dc.q_interarrival(spark, d).collect()
+        for r in q_interarrival(spark, d).collect()
     }
     assert got == {
         "view": (2, 5_000_000, 20_000_000, 12_500_000)
@@ -153,7 +206,7 @@ def test_acf_matches_numpy_moments(spark, tmp_path):
     got = {
         r["lag"]: (r["n_pairs"], r["cov_num"], r["var_head"],
                    r["var_tail"])
-        for r in dc.q_acf_lags(spark, d).collect()
+        for r in q_acf_lags(spark, d).collect()
     }
     for k in (1, 2, 3):
         h, t = series[:-k], series[k:]
@@ -174,7 +227,7 @@ def test_markov_counts_and_permille(spark, tmp_path):
     d = _events_dir(spark, tmp_path, rows)
     got = {
         (r["prev_type"], r["next_type"]): (r["n"], r["permille"])
-        for r in dc.q_markov_transitions(spark, d).collect()
+        for r in q_markov_transitions(spark, d).collect()
     }
     assert got == {
         ("view", "click"): (1, 1000),
@@ -198,7 +251,7 @@ def test_xcorr_matches_numpy_moments(spark, tmp_path):
     y = np.array([1, 3, 0], dtype=np.int64)   # error counts by hour
     got = {
         r["lag"]: (r["n_pairs"], r["cov_num"], r["var_x"], r["var_y"])
-        for r in dc.q_xcorr_types(spark, d).collect()
+        for r in q_xcorr_types(spark, d).collect()
     }
     for lag in (-2, -1, 0, 1, 2):
         # pair (x_t, y_{t+lag}) for t where both indices are in range
@@ -227,7 +280,7 @@ def test_sax_quartile_symbols(spark, tmp_path):
     base = (dt.datetime(2024, 1, 1) - dt.datetime(1970, 1, 1)).days
     got = {
         r["segment"] - base: (r["paa"], r["symbol"])
-        for r in dc.q_sax_paa(spark, d).collect()
+        for r in q_sax_paa(spark, d).collect()
         if r["source"] == "view"
     }
     want = {seg: (seg + 1, seg // 2 + 1) for seg in range(8)}
@@ -245,7 +298,7 @@ def test_decay_topk_weights_and_ties(spark, tmp_path):
     d = _events_dir(spark, tmp_path, rows)
     got = [
         (r["rn"], r["user_id"], r["decayed"])
-        for r in dc.q_decay_topk(spark, d).collect()
+        for r in q_decay_topk(spark, d).collect()
         if r["source"] == "view"
     ]
     assert sorted(got) == [(1, 1, 1 << 30), (2, 2, 1 << 30)]
@@ -258,7 +311,7 @@ def test_source_overlap_hand_counts(spark, tmp_path):
         "a b c p q r",      # doc 1 -> src1: shingles {abc,bcp,cpq,pqr}
     ]
     d = _docs_dir(spark, tmp_path, texts)
-    rows = dc.q_source_overlap(spark, d).collect()
+    rows = q_source_overlap(spark, d).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["source_a"], r["source_b"]) == ("src0", "src1")
@@ -282,7 +335,7 @@ def test_cohort_retention_hand_triangle(spark, tmp_path):
     base = (dt.datetime(2024, 1, 1) - dt.datetime(1970, 1, 1)).days // 7
     got = {
         (r["cohort_week"] - base, r["week_offset"]): r["n_users"]
-        for r in dc.q_cohort_retention(spark, d).collect()
+        for r in q_cohort_retention(spark, d).collect()
     }
     assert got == {(0, 0): 1, (0, 2): 1, (1, 0): 1}
 
@@ -299,7 +352,7 @@ def test_logbucket_quantile_error_bound(spark, tmp_path):
     centi = sorted(int(math.floor(v * 100)) + 1 for v in vals)
     got = {
         r["q"]: r["est_centi"]
-        for r in dc.q_logbucket_quantile(spark, d).collect()
+        for r in q_logbucket_quantile(spark, d).collect()
         if r["source"] == "view"
     }
     for q in (500, 900, 990):
@@ -322,7 +375,7 @@ def test_sax_motifs_words_over_known_symbols(spark, tmp_path):
     d = _events_dir(spark, tmp_path, rows)
     got = {
         r["motif"]: r["n"]
-        for r in dc.q_sax_motifs(spark, d).collect()
+        for r in q_sax_motifs(spark, d).collect()
         if r["source"] == "view"
     }
     assert got == {
@@ -365,7 +418,7 @@ def test_interarrival_random_equals_full_sort_diff(spark, tmp_path, seed):
     got = {
         r["source"]: (r["n_deltas"], r["min_delta_us"],
                       r["max_delta_us"], r["avg_delta_us"])
-        for r in dc.q_interarrival(spark, d).collect()
+        for r in q_interarrival(spark, d).collect()
     }
     assert got == want
 
@@ -395,11 +448,11 @@ def test_pagerank_random_equals_literal(spark, tmp_path, seed):
         evs.sort()
         edges += [(a[2], b[2]) for a, b in zip(evs, evs[1:])]
     want = _pagerank_ref(
-        edges, dc.PR_ITERS, dc.PR_SCALE, dc.PR_DAMP_NUM, dc.PR_DAMP_DEN
+        edges, PR_ITERS, PR_SCALE, PR_DAMP_NUM, PR_DAMP_DEN
     )
     got = {
         r["user_id"]: r["rank_fp"]
-        for r in dc.q_pagerank(spark, d).collect()
+        for r in q_pagerank(spark, d).collect()
     }
     assert got == want
 
@@ -409,7 +462,7 @@ def test_source_overlap_routes_to_kmv_past_source_bound(spark, tmp_path):
     ESTIMATES, not the r04 runtime raise.  80 sources (one doc each)
     share a 40-word body plus 10 unique words — the shared shingles hit
     all 80 sources, far past the in-row collect_set bound of 64."""
-    n_src = dc.SOURCE_OVERLAP_MAX + 16
+    n_src = SOURCE_OVERLAP_MAX + 16
     body = " ".join(f"c{i}" for i in range(40))
     data = [
         (
@@ -427,7 +480,7 @@ def test_source_overlap_routes_to_kmv_past_source_bound(spark, tmp_path):
     )
     d = str(tmp_path / "fx80")
     df.coalesce(2).write.parquet(d + "/documents.parquet")
-    rows = dc.q_source_overlap(spark, d).collect()
+    rows = q_source_overlap(spark, d).collect()
     # every pair shares the body -> full C(n,2) estimate matrix
     assert len(rows) == n_src * (n_src - 1) // 2
     for r in rows:
@@ -452,7 +505,7 @@ def test_markov_stitches_cross_day_transitions(spark, tmp_path):
     d = _events_dir(spark, tmp_path, rows)
     got = {
         (r["prev_type"], r["next_type"]): r["n"]
-        for r in dc.q_markov_transitions(spark, d).collect()
+        for r in q_markov_transitions(spark, d).collect()
     }
     assert got == {
         ("view", "click"): 1,
@@ -493,7 +546,7 @@ def test_alert_episodes_chains_across_midnight(spark, tmp_path):
     got = {
         (r["source"], r["start_tb"], r["end_tb"],
          r["n_hours"], r["peak_n"], r["total_n"])
-        for r in dc.q_alert_episodes(spark, d).collect()
+        for r in q_alert_episodes(spark, d).collect()
     }
     assert got == {
         ("view", TB0 + 22, TB0 + 25, 4, 4, 16),
@@ -519,7 +572,7 @@ def test_alert_episodes_random_equals_naive_islands(spark, tmp_path, seed):
     want = set()
     for src in ("view", "click"):
         hot = sorted(
-            (h, c) for s, h, c in hours if s == src and c >= dc.ALERT_HOT
+            (h, c) for s, h, c in hours if s == src and c >= ALERT_HOT
         )
         run = []
         for h, c in hot + [(None, None)]:
@@ -534,7 +587,7 @@ def test_alert_episodes_random_equals_naive_islands(spark, tmp_path, seed):
     got = {
         (r["source"], r["start_tb"], r["end_tb"],
          r["n_hours"], r["peak_n"], r["total_n"])
-        for r in dc.q_alert_episodes(spark, d).collect()
+        for r in q_alert_episodes(spark, d).collect()
     }
     assert got == want
 
@@ -560,7 +613,7 @@ def test_source_drift_matches_literal_l1(spark, tmp_path):
     the literal fixed-point L1 computed over the FULL union vocabulary
     (one-sided words included), and a disjoint-vocab pair must score
     exactly 1000 permille."""
-    FP = 1 << dc.DRIFT_FP_BITS
+    FP = 1 << DRIFT_FP_BITS
     d = _src_docs_dir(spark, tmp_path, [
         ("src0", "a a b"),
         ("src1", "a b b b"),
@@ -581,7 +634,7 @@ def test_source_drift_matches_literal_l1(spark, tmp_path):
     got = {
         (r["source_a"], r["source_b"]):
             (r["shared_words"], r["l1_fp"], r["drift_permille"])
-        for r in dc.q_source_drift(spark, d).collect()
+        for r in q_source_drift(spark, d).collect()
     }
     s = {k: sum(v.values()) for k, v in dist.items()}
     want = {
@@ -602,7 +655,7 @@ def test_vocab_coverage_counts_first_occurrences(spark, tmp_path):
     d = _docs_dir(spark, tmp_path, texts)
     rows = {
         r["decile"]: (r["new_words"], r["cum_words"])
-        for r in dc.q_vocab_coverage(spark, d).collect()
+        for r in q_vocab_coverage(spark, d).collect()
     }
     want = {}
     cum = 0
@@ -625,7 +678,7 @@ def test_dod_compressibility_hand_census(spark, tmp_path):
            zip((0, 1, 2, 3), (5, 105, 405, 2405))]
     )
     d = _events_dir(spark, tmp_path, _hourly_events(hours))
-    rows = dc.q_dod_compressibility(spark, d).collect()
+    rows = q_dod_compressibility(spark, d).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["blocks"], r["points"]) == (2, 10)
@@ -663,7 +716,7 @@ def test_retention_policy_actions_and_reclaim(spark, tmp_path):
     got = {
         r["day"]: (r["age_days"], r["action"], r["n_raw"],
                    r["rows_kept"], r["rows_reclaimed"])
-        for r in dc.q_retention_policy(spark, d).collect()
+        for r in q_retention_policy(spark, d).collect()
     }
     assert got == {
         DAY0 + 25: (0, "keep_raw", 3, 3, 0),
@@ -687,7 +740,7 @@ def test_late_arrival_census_hand(spark, tmp_path):
     got = {
         r["source"]: (r["n_events"], r["n_late"], r["max_late_us"],
                       r["late_permille"])
-        for r in dc.q_late_arrival(spark, d).collect()
+        for r in q_late_arrival(spark, d).collect()
     }
     assert got == {
         "a": (3, 1, 50_000_000, 333),
@@ -711,7 +764,7 @@ def test_journey_paths_ties_and_threshold(spark, tmp_path):
              (30 * day + 2, 7, "click", 1)]
     d = _events_dir(spark, tmp_path, rows)
     got = {(r["path"], r["n"])
-           for r in dc.q_journey_paths(spark, d).collect()}
+           for r in q_journey_paths(spark, d).collect()}
     assert got == {("view>click>purchase", 5)}
 
 
@@ -734,7 +787,7 @@ def test_heavy_hitters_mg_differential(spark, tmp_path):
     )
     n = sum(exact.values())
     expected = {(w, c, n) for w, c in exact.items()
-                if c * dc.MG_K > n}
+                if c * MG_K > n}
     assert expected, "fixture must contain at least one heavy hitter"
 
     data = [(i, t, "en", f"s{i % 3}", len(t)) for i, t in enumerate(texts)]
@@ -746,7 +799,7 @@ def test_heavy_hitters_mg_differential(spark, tmp_path):
     df.write.mode("overwrite").parquet(out + "/documents.parquet")
 
     got = {(r["word"], r["n"], r["n_words"])
-           for r in dc.q_heavy_hitters_mg(spark, out).collect()}
+           for r in q_heavy_hitters_mg(spark, out).collect()}
     assert got == expected
 
 
@@ -760,12 +813,12 @@ def test_mg_candidates_keeps_guaranteed_survivor():
     for b in range(10):
         words = ["hot"] * 30 + [f"cold_{b}_{i}" for i in range(970)]
         batches.append(pd.DataFrame({"word": words}))
-    outs = list(dc._mg_candidates(iter(batches)))
+    outs = list(_mg_candidates(iter(batches)))
     cands = set()
     for o in outs:
         cands.update(o["word"])
     assert "hot" in cands
-    assert len(cands) <= dc.MG_CAPACITY
+    assert len(cands) <= MG_CAPACITY
 
 
 def test_slo_ribbon_exact_discrete_quantiles(spark, tmp_path):
@@ -776,7 +829,7 @@ def test_slo_ribbon_exact_discrete_quantiles(spark, tmp_path):
     rows += [(j, 1, "b", v) for j, v in enumerate([1.0, 1.0, 1.0, 3.0])]
     d = _events_dir(spark, tmp_path, rows)
     got = {r["source"]: (r["n"], r["p50_c"], r["p95_c"], r["max_c"])
-           for r in dc.q_slo_ribbon(spark, d).collect()}
+           for r in q_slo_ribbon(spark, d).collect()}
     assert got == {
         "a": (10, 5000, 10000, 10000),
         "b": (4, 100, 300, 300),
@@ -791,7 +844,7 @@ def test_mad_outliers_robust_to_extremes(spark, tmp_path):
     rows = [(j, 1, "a", v)
             for j, v in enumerate([10.0, 12.0, 14.0, 16.0, 100.0])]
     d = _events_dir(spark, tmp_path, rows)
-    rows_out = dc.q_mad_outliers(spark, d).collect()
+    rows_out = q_mad_outliers(spark, d).collect()
     assert len(rows_out) == 1
     r = rows_out[0]
     assert (r["n"], r["med_c"], r["mad_c"], r["n_outliers"]) == (
@@ -807,7 +860,7 @@ def test_triangle_counts_hand_graph(spark, tmp_path):
     rows = [(j * 10, u, "view", 1) for j, u in enumerate([1, 2, 3, 1, 3, 4])]
     d = _events_dir(spark, tmp_path, rows)
     got = {(r["user_id"], r["n_triangles"])
-           for r in dc.q_triangle_counts(spark, d).collect()}
+           for r in q_triangle_counts(spark, d).collect()}
     assert got == {(1, 1), (2, 1), (3, 1)}
 
 
@@ -827,7 +880,7 @@ def test_triangle_counts_hub_kept_out_of_wedges(spark, tmp_path):
     rows += [(n0 * 10, 1, "view", 1), (n0 * 10 + 10, 2, "view", 1)]
     d = _events_dir(spark, tmp_path, rows)
     got = {(r["user_id"], r["n_triangles"])
-           for r in dc.q_triangle_counts(spark, d).collect()}
+           for r in q_triangle_counts(spark, d).collect()}
     assert got == {(9, 2), (1, 2), (2, 1), (20, 1)}
 
 
@@ -844,7 +897,7 @@ def test_inverted_index_postings_capped_and_exact(spark, tmp_path):
         texts.append(t)
     d = _docs_dir(spark, tmp_path, texts)
     got = {r["term"]: (r["df"], r["tf_total"], r["postings"])
-           for r in dc.q_inverted_index(spark, d).collect()}
+           for r in q_inverted_index(spark, d).collect()}
     assert got == {
         "a": (10, 10, "0:1,1:1,2:1,3:1,4:1,5:1,6:1,7:1"),
         "b": (3, 6, "0:1,1:2,2:3"),
@@ -864,7 +917,7 @@ def test_state_durations_clip_at_midnight(spark, tmp_path):
     ]
     d = _events_dir(spark, tmp_path, rows)
     got = {(r["state"], r["day"]): (r["n_intervals"], r["total_us"])
-           for r in dc.q_state_durations(spark, d).collect()}
+           for r in q_state_durations(spark, d).collect()}
     us = 1_000_000
     assert got == {
         ("view", DAY0): (1, 3600 * us),
@@ -886,7 +939,7 @@ def test_slo_weekly_merges_day_histograms(spark, tmp_path):
     )
     d = _events_dir(spark, tmp_path, rows)
     got = {r["week"]: (r["n"], r["p50_c"], r["p95_c"], r["max_c"])
-           for r in dc.q_slo_weekly(spark, d).collect()}
+           for r in q_slo_weekly(spark, d).collect()}
     # merged week: values 10..100 cents*100 -> p50 = 5th smallest 5000
     assert got == {
         2817: (10, 5000, 10000, 10000),
@@ -902,14 +955,14 @@ def test_containment_subset_doc_detected(spark, tmp_path):
     long_ = short + " " + " ".join(f"w{i}" for i in range(40))
     other = "p q r s t u"                    # no overlap
     d = _docs_dir(spark, tmp_path, [short, long_, other])
-    rows = dc.q_containment(spark, d).collect()
+    rows = q_containment(spark, d).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r["doc_sub"], r["doc_super"]) == (0, 1)
     assert (r["n_sub"], r["inter"], r["cont_permille"]) == (3, 3, 1000)
     # the same pair must be BELOW q_ngram_jaccard's 50% bar — the
     # whole point of the asymmetric score
-    jac = dc.q_ngram_jaccard(spark, d).collect()
+    jac = q_ngram_jaccard(spark, d).collect()
     assert jac == []
 
 
@@ -919,7 +972,7 @@ def test_bpe_merge_step_hand_counts(spark, tmp_path):
     skipped by the length guard."""
     d = _docs_dir(spark, tmp_path, ["ab ab abc", "x"])
     got = {r["pair"]: r["wcount"]
-           for r in dc.q_bpe_merge_step(spark, d).collect()}
+           for r in q_bpe_merge_step(spark, d).collect()}
     assert got == {"ab": 3, "bc": 1}
 
 
@@ -933,8 +986,8 @@ def test_lsh_band_stats_identical_docs_collide_everywhere(spark, tmp_path):
         "totally different words here now",
     ])
     got = {r["band_idx"]: (r["n_buckets"], r["n_cand_pairs"], r["max_bucket"])
-           for r in dc.q_lsh_band_stats(spark, d).collect()}
+           for r in q_lsh_band_stats(spark, d).collect()}
     assert got == {bi: (1, 1, 2) for bi in range(4)}
     # census must agree with the materialized candidate pairs
-    pairs = dc.q_minhash_pairs(spark, d).collect()
+    pairs = q_minhash_pairs(spark, d).collect()
     assert [(p["doc_a"], p["doc_b"]) for p in pairs] == [(0, 1)]

@@ -11,7 +11,12 @@ import hashlib
 from pyspark.sql import functions as F
 
 from tinybrain_spark import bloom as B
-from tinybrain_spark import driver_contract as dc
+from tinybrain_spark.driver_contract.dedup import (
+    q_bloom_decontaminate,
+    q_decontaminate,
+)
+from tinybrain_spark.driver_contract.sequences import _doc_shingles
+from tinybrain_spark.session import load_table
 
 from conftest import SF_DIR
 
@@ -95,9 +100,9 @@ def test_bloom_decontaminate_agrees_with_exact(spark):
     bloom row (one-sided error, never a miss)."""
     exact = {
         r["doc_id"]: r["n_shared"]
-        for r in dc.q_decontaminate(spark, SF_DIR).collect()
+        for r in q_decontaminate(spark, SF_DIR).collect()
     }
-    rows = dc.q_bloom_decontaminate(spark, SF_DIR).collect()
+    rows = q_bloom_decontaminate(spark, SF_DIR).collect()
     got = {r["doc_id"]: (r["n_flagged"], r["n_shared"]) for r in rows}
     for doc, n_shared in exact.items():
         assert doc in got, f"bloom missed contaminated doc {doc}"
@@ -112,8 +117,8 @@ def test_probe_plan_is_broadcast_only(spark):
     must be evaluated once: exactly one broadcast join (the packed
     single-row map), zero SortMergeJoins, and only the bench-side
     exchanges (shingle distinct + bloom groupBy + single-row pack)."""
-    docs = dc.load_table(spark, SF_DIR, "documents")
-    sh = dc._doc_shingles(docs)
+    docs = load_table(spark, SF_DIR, "documents")
+    sh = _doc_shingles(docs)
     bench = sh.where(F.col("doc_id") % 20 == 0).select("sh").distinct()
     bloom = B.build_bloom(bench, "sh", m_words=64, k=K)
     probed = B.probe_bloom(

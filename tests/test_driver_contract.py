@@ -50,22 +50,31 @@ def test_registry_consistent():
     assert len(qs) >= 25
 
 
-def test_registry_has_no_shadowed_entries():
-    """A dict literal silently keeps only the LAST duplicate key — a
-    rotation edit that leaves a query name in both the head and the
-    tail would drop the head entry without any error (nearly happened
-    twice in r05).  Pin the textual key count to the dict size."""
-    import inspect
-    import re
-
+def test_registry_rejects_duplicate_names():
+    """The registry is one ordered table with one row per query; building
+    it from rows that repeat a name fails loudly, naming the query."""
     from tinybrain_spark import driver_contract as dc
 
-    src = inspect.getsource(dc.queries)
-    names = re.findall(r'^\s+"(q_\w+)"\s*:', src, re.M)
-    assert len(names) == len(set(names)), sorted(
-        n for n in set(names) if names.count(n) > 1
+    row = dc.TABLE[0]
+    with pytest.raises(ValueError, match=row[0]):
+        dc.build_table([row, *dc.TABLE[1:3], row])
+    assert len(dc.TABLE) == len(dc.queries()) == 248
+
+
+def test_registry_unchanged():
+    """Graded order and oracle texts pinned by hash: a registry edit
+    that reorders, renames, drops or rewrites any query shows here."""
+    import hashlib
+    import json
+
+    names = "\n".join(entrymod.queries())
+    oracles = json.dumps(entrymod.oracle_sql(), sort_keys=True)
+    assert hashlib.sha256(names.encode()).hexdigest() == (
+        "acba4410208d82e8c62f41b2a2e27288356be3eb72a31418ad534c2de540b886"
     )
-    assert len(names) == len(dc.queries())
+    assert hashlib.sha256(oracles.encode()).hexdigest() == (
+        "4776daa0a423f940087bface71164bb37c326f96e58e85dfbadc4e51fa801835"
+    )
 
 
 @pytest.mark.parametrize("name", SAMPLE)
@@ -83,7 +92,7 @@ def test_hot_user_sequence_capped(spark):
     window-sort, never an unbounded aggregation buffer."""
     from pyspark.sql import functions as F
 
-    from tinybrain_spark.driver_contract import MAX_SEQ, _sequence_table
+    from tinybrain_spark.driver_contract.sequences import MAX_SEQ, _sequence_table
 
     n_hot, n_cold = 40_000, 64
     ev = (
@@ -112,7 +121,7 @@ def test_m4_guard_rejects_out_of_domain(spark, tmp_path):
     domain or a value goes negative."""
     import datetime
 
-    from tinybrain_spark import driver_contract as dc
+    from tinybrain_spark.driver_contract.tiers import q_m4_decimate
 
     ts = datetime.datetime(2024, 1, 1)
     schema = "event_id long, ts timestamp, event_type string, value double"
@@ -122,20 +131,20 @@ def test_m4_guard_rejects_out_of_domain(spark, tmp_path):
         [(1 << 25, ts, "a", 1.0)], schema
     ).write.parquet(os.path.join(bad_id, "events.parquet"))
     with pytest.raises(Exception, match="id domain"):
-        dc.q_m4_decimate(spark, bad_id).collect()
+        q_m4_decimate(spark, bad_id).collect()
 
     bad_v = str(tmp_path / "bad_v")
     spark.createDataFrame(
         [(7, ts, "a", -3.5)], schema
     ).write.parquet(os.path.join(bad_v, "events.parquet"))
     with pytest.raises(Exception, match="negative value"):
-        dc.q_m4_decimate(spark, bad_v).collect()
+        q_m4_decimate(spark, bad_v).collect()
 
     ok = str(tmp_path / "ok")
     spark.createDataFrame(
         [(7, ts, "a", 3.5), ((1 << 24) - 1, ts, "a", 0.0)], schema
     ).write.parquet(os.path.join(ok, "events.parquet"))
-    assert dc.q_m4_decimate(spark, ok).count() == 1
+    assert q_m4_decimate(spark, ok).count() == 1
 
 
 def test_extract_features_plumbing(spark):
@@ -163,9 +172,10 @@ def test_cms_is_cell_wise_mergeable_and_one_sided(spark):
     exact, always)."""
     from pyspark.sql import functions as F
 
-    from tinybrain_spark.driver_contract import (
-        CMS_D, _cms_bucket, load_table, q_cms_heavy,
+    from tinybrain_spark.driver_contract.text import (
+        CMS_D, _cms_bucket, q_cms_heavy,
     )
+    from tinybrain_spark.session import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
 
@@ -202,7 +212,7 @@ def test_lm_surprisal_short_docs_drop_out(spark, tmp_path):
     """r06v: docs with < 2 words carry no bigram evidence and must
     drop out of the census (the sequence() guard takes the empty
     branch — no element_at(ws, 0) error on 1-word docs)."""
-    from tinybrain_spark import driver_contract as dc
+    from tinybrain_spark.driver_contract.text import q_lm_surprisal
 
     d = str(tmp_path / "short")
     spark.createDataFrame(
@@ -210,7 +220,7 @@ def test_lm_surprisal_short_docs_drop_out(spark, tmp_path):
          (3, "two words", "en", "s", 9)],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(os.path.join(d, "documents.parquet"))
-    rows = dc.q_lm_surprisal(spark, d).collect()
+    rows = q_lm_surprisal(spark, d).collect()
     # only doc 3 has a bigram; its count appears, docs 1-2 nowhere
     assert sum(r["n_docs"] for r in rows) == 1
     assert sum(r["sum_bigrams"] for r in rows) == 1
@@ -221,14 +231,14 @@ def test_dsir_weights_empty_target_stays_finite(spark, tmp_path):
     zero or go to -infinity — add-one smoothing keeps every bucket's
     log-ratio finite (bitlen(0+1) = 1), and every doc still gets a
     weight."""
-    from tinybrain_spark import driver_contract as dc
+    from tinybrain_spark.driver_contract.text import q_dsir_weights
 
     d = str(tmp_path / "notgt")
     spark.createDataFrame(
         [(1, "aa bb cc", "fr", "s", 8), (2, "dd ee", "de", "s", 5)],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.parquet(os.path.join(d, "documents.parquet"))
-    rows = dc.q_dsir_weights(spark, d).collect()
+    rows = q_dsir_weights(spark, d).collect()
     assert sum(r["n_docs"] for r in rows) == 2
     assert all(r["wbucket_dbits"] <= 0 for r in rows)
 
@@ -240,7 +250,7 @@ def test_snapshot_diff_census_matches_derivation(spark, tmp_path):
     classes."""
     from pyspark.sql import functions as F
 
-    from tinybrain_spark import driver_contract as dc
+    from tinybrain_spark.driver_contract.warehouse import q_snapshot_diff
 
     d = str(tmp_path / "snap")
     rows = [(i, f"text {i} body", "en", "s", 10) for i in range(0, 600)]
@@ -250,7 +260,7 @@ def test_snapshot_diff_census_matches_derivation(spark, tmp_path):
     ).write.parquet(os.path.join(d, "documents.parquet"))
     got = {
         (r["change"]): r["n_docs"]
-        for r in dc.q_snapshot_diff(spark, d)
+        for r in q_snapshot_diff(spark, d)
         .groupBy("change")
         .agg(F.sum("n_docs").alias("n_docs"))
         .collect()

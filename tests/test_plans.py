@@ -6,6 +6,63 @@ projection is wrong')."""
 from pyspark.sql import functions as F
 
 from tinybrain_spark import driver_contract as dc
+from tinybrain_spark.driver_contract.corpus import (
+    q_padding_waste,
+    q_pareto_front,
+    q_rrf_fusion,
+    q_shard_assign,
+)
+from tinybrain_spark.driver_contract.dedup import (
+    _NGRAM_DF_CAP,
+    _ngram_rare_shingles,
+    q_bloom_decontaminate,
+    q_containment,
+    q_ngram_jaccard,
+)
+from tinybrain_spark.driver_contract.events import (
+    q_interval_join,
+    q_journey_paths,
+    q_late_arrival,
+    q_topk_users,
+    q_triangle_counts,
+)
+from tinybrain_spark.driver_contract.sequences import token_table
+from tinybrain_spark.driver_contract.signals import (
+    q_forecast_baseline,
+    q_mad_outliers,
+    q_zscore_outliers,
+)
+from tinybrain_spark.driver_contract.text import (
+    _mg_candidate_counts,
+    q_bpe_merge_step,
+    q_cms_heavy,
+    q_dsir_weights,
+    q_heavy_hitters_mg,
+    q_lm_surprisal,
+    q_tfidf_terms,
+)
+from tinybrain_spark.driver_contract.tiers import (
+    q_cagg_hierarchy,
+    q_ohlc_bars,
+    q_retention_policy,
+    q_tier_fidelity,
+)
+from tinybrain_spark.driver_contract.timeseries import (
+    q_gapfill_zero,
+    q_heartbeat_uptime,
+    q_peak_concurrency,
+    q_rolling_distinct,
+    q_topn_hours,
+)
+from tinybrain_spark.driver_contract.vectors import q_ann_recall, q_ann_topk
+from tinybrain_spark.driver_contract.warehouse import (
+    q_delta_join_view,
+    q_join_cardinality,
+    q_json_props,
+    q_pivot_daily,
+    q_unpivot_metrics,
+    q_zone_map_prune,
+)
 from tinybrain_spark.session import load_table
 from tinybrain_spark.udfs import pool_tier
 
@@ -36,7 +93,7 @@ def assert_no_unpartitioned_windows(df) -> None:
 
 
 def test_token_table_scan_prunes_columns(spark):
-    plan = _plan(dc.token_table(spark, SF_DIR))
+    plan = _plan(token_table(spark, SF_DIR))
     # events has (event_id, ts, user_id, event_type, value, props);
     # the token table needs only 3 of 6 columns
     assert "event_type" not in plan
@@ -74,7 +131,7 @@ def test_pooling_is_shuffle_free(spark, workdir):
 
     # headline rollup leaf: the token table's own exchange, nothing more
     tree = _tree(dc.queries()["q_avg_rollup_t2"](spark, SF_DIR))
-    upstream = _tree(dc.token_table(spark, SF_DIR)).count("Exchange")
+    upstream = _tree(token_table(spark, SF_DIR)).count("Exchange")
     assert tree.count("Exchange") == upstream
     assert tree.count("MapInArrow") == 1
 
@@ -105,12 +162,12 @@ def test_pooling_is_shuffle_free(spark, workdir):
 
 
 def test_ann_broadcasts_probes(spark):
-    plan = _plan(dc.q_ann_topk(spark, SF_DIR))
+    plan = _plan(q_ann_topk(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
 def test_gapfill_uses_single_shuffle_side_broadcast(spark):
-    plan = _plan(dc.q_gapfill_zero(spark, SF_DIR))
+    plan = _plan(q_gapfill_zero(spark, SF_DIR))
     # the spine join must not blow up into a cartesian product
     assert "CartesianProduct" not in plan
 
@@ -125,16 +182,16 @@ def test_ngram_jaccard_df_cap_bounds_self_join(spark):
     r05j), and the capped table localCheckpoint-pinned so the four
     consumer branches (a/b join sides, both size branches) never
     recompute the scan->hash->window pipeline."""
-    stage = dc._ngram_rare_shingles(spark, SF_DIR)
+    stage = _ngram_rare_shingles(spark, SF_DIR)
     plan = _plan(stage)
     # the cap filter is a window count over f8 fingerprint partitions
     assert "count(1)" in plan and "windowspecdefinition(f8" in plan
-    cap_str = str(dc._NGRAM_DF_CAP)
+    cap_str = str(_NGRAM_DF_CAP)
     assert f"<= {cap_str}" in plan or f"(df_#" in plan
     assert plan.count("split(") == 1, plan.count("split(")
     assert "lambdafunction" not in plan
     # the full query reads ONLY the materialized checkpoint
-    full = _plan(dc.q_ngram_jaccard(spark, SF_DIR))
+    full = _plan(q_ngram_jaccard(spark, SF_DIR))
     assert "Scan parquet" not in full
     assert "ExistingRDD" in full
 
@@ -143,7 +200,7 @@ def test_topk_users_is_distributed_partial_topk(spark):
     """Top-k must plan TakeOrderedAndProject (per-partition partial
     top-k merged on the driver), never a global row_number() window
     sorting every group's count row in one task."""
-    plan = _plan(dc.q_topk_users(spark, SF_DIR))
+    plan = _plan(q_topk_users(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
     # exactly one Window node is allowed: the rank() over the 10 rows
     # TakeOrderedAndProject already collected (formatted explain names
@@ -168,7 +225,7 @@ def test_prefix_sum_queries_zero_unpartitioned_windows(spark):
 def test_interval_join_never_nested_loop(spark):
     """r04: the range-overlap join must plan as a bucket equi-join —
     a raw BETWEEN join degenerates to BroadcastNestedLoopJoin."""
-    plan = _plan(dc.q_interval_join(spark, SF_DIR))
+    plan = _plan(q_interval_join(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
@@ -176,7 +233,7 @@ def test_interval_join_never_nested_loop(spark):
 def test_tfidf_folds_ndocs_into_plan(spark):
     """r04 ADVICE: n_docs is a broadcast 1-row aggregate cross join in
     THE plan, not a separate driver-side .count() action."""
-    plan = _plan(dc.q_tfidf_terms(spark, SF_DIR))
+    plan = _plan(q_tfidf_terms(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan
 
 
@@ -194,7 +251,7 @@ def test_ohlc_bars_single_exchange_no_window(spark):
     """r04: the OHLC encoding turns first/last/min/max into one
     map-side-combinable groupBy — one shuffle of aggregated rows,
     no Window, no Sort anywhere in the plan."""
-    plan = _plan(dc.q_ohlc_bars(spark, SF_DIR))
+    plan = _plan(q_ohlc_bars(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert tree.count("Exchange") == 1, tree
     assert "Window" not in tree
@@ -205,7 +262,7 @@ def test_zscore_broadcasts_stats_no_window(spark):
     """r04: the z-score pass must broadcast the tiny per-(type,hour)
     stats table back onto the scan — a sort-merge join or a window
     over raw events would shuffle the full event volume twice."""
-    plan = _plan(dc.q_zscore_outliers(spark, SF_DIR))
+    plan = _plan(q_zscore_outliers(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "BroadcastHashJoin" in tree or "BroadcastExchange" in tree
     assert "Window" not in tree
@@ -216,7 +273,7 @@ def test_topn_hours_ranks_aggregated_rows_only(spark):
     """r04: the per-group rank window must sit ABOVE the hourly
     aggregate (bounded rows per group), never over raw events — the
     plan's Window input must be the aggregated relation."""
-    plan = _plan(dc.q_topn_hours(spark, SF_DIR))
+    plan = _plan(q_topn_hours(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "Window" in tree
     win_pos = tree.index("Window")
@@ -233,7 +290,7 @@ def test_cms_broadcasts_cells_partial_topk(spark):
     (never shuffle it against the probes), the top-k must be the
     distributed partial TakeOrderedAndProject, and the token scan must
     prune to the text column only."""
-    plan = _plan(dc.q_cms_heavy(spark, SF_DIR))
+    plan = _plan(q_cms_heavy(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "BroadcastExchange" in tree
     assert "TakeOrderedAndProject" in tree
@@ -251,7 +308,7 @@ def test_rolling_distinct_bounded_expand_broadcast_join(spark):
     """q_rolling_distinct: the 24x fan-out rides on DEDUPED triples and
     the real-hours filter is a broadcast hash join — never a sort-merge
     join or a range self-join over raw events."""
-    plan = _plan(dc.q_rolling_distinct(spark, SF_DIR))
+    plan = _plan(q_rolling_distinct(spark, SF_DIR))
     assert "SortMergeJoin" not in plan
     # formatted plans print each node twice (tree + detail); the
     # tree form pins exactly one join
@@ -264,7 +321,7 @@ def test_cagg_hierarchy_single_scan_two_aggregates(spark):
     """q_cagg_hierarchy: daily derives from hourly STATES — one events
     scan, the hourly aggregate, and a re-bucketing aggregate over cagg
     rows only (no second scan, no join)."""
-    plan = _plan(dc.q_cagg_hierarchy(spark, SF_DIR))
+    plan = _plan(q_cagg_hierarchy(spark, SF_DIR))
     # one scan == two mentions (tree + node detail) in formatted plans
     assert plan.count("Scan parquet") == 2
     assert "Join" not in plan
@@ -477,7 +534,7 @@ def test_bloom_probe_corpus_side_shuffle_free(spark):
     """q_bloom_decontaminate: the candidate-corpus branch reaches the
     verification join without any exchange of its own — all hash
     probes are in-row against the single broadcast bloom row."""
-    plan = _plan(dc.q_bloom_decontaminate(spark, SF_DIR))
+    plan = _plan(q_bloom_decontaminate(spark, SF_DIR))
     # one single-row pack + the final per-doc count; the eval-side
     # distinct + bloom build; nothing on the corpus probe path
     assert plan.count("Exchange SinglePartition") <= 1
@@ -495,7 +552,7 @@ def test_heavy_hitters_pass1_shuffle_free(spark):
     localCheckpoint, so the pass-1 pins run on the lazy
     _mg_candidate_counts subtree and the final plan is checked to
     read the checkpointed RDD instead of re-scanning."""
-    df = dc._mg_candidate_counts(spark, SF_DIR)
+    df = _mg_candidate_counts(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     lines = tree.splitlines()
     (idx,) = [i for i, l in enumerate(lines) if "MapInPandas" in l]
@@ -512,7 +569,7 @@ def test_heavy_hitters_pass1_shuffle_free(spark):
     assert tree.count("Exchange") <= 4, tree
     # the materialized query itself reads the checkpoint (Scan
     # ExistingRDD), re-scans nothing, and broadcasts the 1-row total
-    final = _plan(dc.q_heavy_hitters_mg(spark, SF_DIR)).split("\n\n")[0]
+    final = _plan(q_heavy_hitters_mg(spark, SF_DIR)).split("\n\n")[0]
     assert "ExistingRDD" in final or "LogicalRDD" in final, final
     assert "Scan parquet" not in final, final
     assert "MapInPandas" not in final, final
@@ -522,7 +579,7 @@ def test_journey_paths_two_exchanges_no_window(spark):
     """Day-journey assembly is ONE groupBy (in-row sort + trigrams),
     the path count another — and no Window node anywhere (the journey
     unit is (user, day), so nothing needs a running ordinal)."""
-    df = dc.q_journey_paths(spark, SF_DIR)
+    df = q_journey_paths(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     assert tree.count("Exchange") == 2, tree
     assert "Window" not in tree, tree
@@ -533,7 +590,7 @@ def test_retention_policy_census_single_pass(spark):
     as-of watermark both read the materialized metadata (two
     ExistingRDD scans) and events is NEVER re-scanned for the max —
     zero parquet scans survive into the final plan."""
-    df = dc.q_retention_policy(spark, SF_DIR)
+    df = q_retention_policy(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     assert tree.count("Scan parquet") == 0, tree
     assert tree.count("Scan ExistingRDD") == 2, tree
@@ -545,7 +602,7 @@ def test_late_arrival_bounded_windows_only(spark):
     """The global ingest-order running max ses the two-level prefix
     machinery: every Window node is partitioned (by the range
     partition id) — no one-task sort at any corpus size."""
-    assert_no_unpartitioned_windows(dc.q_late_arrival(spark, SF_DIR))
+    assert_no_unpartitioned_windows(q_late_arrival(spark, SF_DIR))
 
 
 def test_robust_stats_bounded_windows_broadcast_joins(spark):
@@ -558,7 +615,7 @@ def test_robust_stats_bounded_windows_broadcast_joins(spark):
     for q in ("q_slo_ribbon", "q_mad_outliers"):
         df = dc.queries()[q](spark, SF_DIR)
         assert_no_unpartitioned_windows(df)
-    tree = _plan(dc.q_mad_outliers(spark, SF_DIR)).split("\n\n")[0]
+    tree = _plan(q_mad_outliers(spark, SF_DIR)).split("\n\n")[0]
     assert tree.count("Scan parquet") == 0, tree
     # 3 = med join (replayed for the MAD branch and the final branch —
     # both replays read the checkpointed histogram, not events) + mad
@@ -571,7 +628,7 @@ def test_triangle_counts_checkpointed_no_cartesian(spark):
     """The edge set and its orientation are checkpoint-pinned (zero
     parquet scans survive into the enumeration plan) and the wedge/
     closing joins are equi-joins — never a cartesian/nested-loop."""
-    df = dc.q_triangle_counts(spark, SF_DIR)
+    df = q_triangle_counts(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     assert tree.count("Scan parquet") == 0, tree
     assert "CartesianProduct" not in tree, tree
@@ -584,7 +641,7 @@ def test_json_props_stacked_aggregate_no_expand(spark):
     partial (source, k) under final (source) — so exactly two bounded
     exchanges, no Expand, no Window, no Join; raw events never
     shuffle."""
-    df = dc.q_json_props(spark, SF_DIR)
+    df = q_json_props(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     assert tree.count("Exchange") == 2, tree
     assert "Expand" not in tree, tree
@@ -597,7 +654,7 @@ def test_heartbeat_uptime_one_exchange_partitioned_windows(spark):
     running island sum share the partitioning, and both groupBys
     (island rollup, user rollup) are map-side-combinable on the same
     keys — no second shuffle of event-sized data."""
-    df = dc.q_heartbeat_uptime(spark, SF_DIR)
+    df = q_heartbeat_uptime(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     assert tree.count("Exchange") == 1, tree
     assert "Join" not in tree, tree
@@ -608,7 +665,7 @@ def test_zone_map_prune_two_stacked_groupbys(spark):
     """Zone-map census: events -> (source, day) zone maps -> |sources|
     rows, two map-side-combinable groupBys and nothing else — raw rows
     never shuffle, no windows, no joins."""
-    df = dc.q_zone_map_prune(spark, SF_DIR)
+    df = q_zone_map_prune(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     assert tree.count("Exchange") == 2, tree
     assert "Window" not in tree, tree
@@ -620,7 +677,7 @@ def test_forecast_baseline_single_event_scan(spark):
     of the tb-168 self-join read the materialized table, events is
     never scanned twice, and the join is broadcast at test SF — no
     window anywhere."""
-    df = dc.q_forecast_baseline(spark, SF_DIR)
+    df = q_forecast_baseline(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     assert tree.count("Scan parquet") == 0, tree
     assert "Window" not in tree, tree
@@ -631,7 +688,7 @@ def test_join_cardinality_no_join_no_window(spark):
     """The join-size estimate never runs the join it predicts: the
     plan is two stacked aggregates plus the in-row pair Generate —
     zero Join nodes, zero windows, one parquet scan."""
-    df = dc.q_join_cardinality(spark, SF_DIR)
+    df = q_join_cardinality(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     assert "Join" not in tree, tree
     assert "Window" not in tree, tree
@@ -644,7 +701,7 @@ def test_peak_concurrency_bounded_windows_no_raw_sort(spark):
     _pid-partitioned (bounded per-partition sort), the offset table
     comes back by broadcast, and the delta table was checkpointed —
     no global Window.orderBy funnel anywhere."""
-    df = dc.q_peak_concurrency(spark, SF_DIR)
+    df = q_peak_concurrency(spark, SF_DIR)
     assert_no_unpartitioned_windows(df)
     tree = _plan(df).split("\n\n")[0]
     assert tree.count("BroadcastHashJoin") == 1, tree
@@ -655,7 +712,7 @@ def test_ann_recall_single_sort_shared_window(spark):
     """The exact rank and the bucket-restricted running count share one
     (probe_id)-partitioned window sort — exactly 1 Sort and 1 Window
     block in the plan; the probe side arrives by broadcast."""
-    df = dc.q_ann_recall(spark, SF_DIR)
+    df = q_ann_recall(spark, SF_DIR)
     tree = _plan(df).split("\n\n")[0]
     assert tree.count("Sort") == 1, tree
     assert tree.count("Window") == 1, tree
@@ -667,7 +724,7 @@ def test_containment_reads_only_checkpointed_shingles(spark):
     """r05q: q_containment shares q_ngram_jaccard's materialized
     rare-shingle stage — the full query must read the checkpoint RDD
     only (no re-scan of the parquet source for any of its branches)."""
-    plan = _plan(dc.q_containment(spark, SF_DIR))
+    plan = _plan(q_containment(spark, SF_DIR))
     assert "Scan parquet" not in plan
     assert "ExistingRDD" in plan
 
@@ -676,7 +733,7 @@ def test_bpe_pair_explode_runs_over_vocab_not_corpus(spark):
     """r05q: the adjacent-pair Generate must sit ABOVE the word-count
     aggregate (explode over the distinct vocab, weighted), and the
     top-20 must be a TakeOrderedAndProject — never a global sort."""
-    plan = _plan(dc.q_bpe_merge_step(spark, SF_DIR))
+    plan = _plan(q_bpe_merge_step(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
     assert "Sort " not in plan  # no full Sort node outside TakeOrdered
     tree = plan.split("\n\n")[0]
@@ -692,7 +749,7 @@ def test_padding_waste_one_exchange_scan_pruned(spark):
     """r05t: the padding census is one map-side-combinable groupBy —
     exactly one shuffle exchange, no window, no explode — and the scan
     prunes to (text, source)."""
-    plan = _plan(dc.q_padding_waste(spark, SF_DIR))
+    plan = _plan(q_padding_waste(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "Window" not in tree and "Generate" not in tree
     assert tree.count("Exchange") == 1, tree
@@ -709,7 +766,7 @@ def test_shard_assign_flat_hashes_no_explode(spark):
     """r05t: the HRW argmax is 8 flat md5 columns under one greatest()
     — never a corpus x S explode or a window — and the only shuffle of
     corpus-derived rows is the 8-row shard groupBy."""
-    plan = _plan(dc.q_shard_assign(spark, SF_DIR))
+    plan = _plan(q_shard_assign(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "Window" not in tree and "Generate" not in tree
     # tree exchanges: the 8-row shard groupBy, the 1-row total's
@@ -724,7 +781,7 @@ def test_pareto_front_two_level_partitioned_growing_frames(spark):
     per-task sort even for a single hot source) and both the
     incremental UNBOUNDED PRECEDING frame shape, never the O(n^2)
     CURRENT->UNBOUNDED FOLLOWING scan."""
-    df = dc.q_pareto_front(spark, SF_DIR)
+    df = q_pareto_front(spark, SF_DIR)
     assert_no_unpartitioned_windows(df)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     wins = [l for l in plan.splitlines() if "Window [" in l]
@@ -737,7 +794,7 @@ def test_rrf_fusion_takeordered_no_raw_scan(spark):
     """r05t: both rankings ride ranking.global_rank (checkpointed range
     partitions — the fused plan reads ExistingRDD, not parquet) and the
     top-32 is a TakeOrderedAndProject, never a global sort."""
-    df = dc.q_rrf_fusion(spark, SF_DIR)
+    df = q_rrf_fusion(spark, SF_DIR)
     assert_no_unpartitioned_windows(df)
     plan = _plan(df)
     assert "TakeOrderedAndProject" in plan
@@ -749,7 +806,7 @@ def test_lm_surprisal_index_explodes_no_window_pruned_scan(spark):
     transform-built array ever explodes — no lambdafunction survives
     optimization), there is no window anywhere, and the scan prunes
     the documents table to (doc_id, text)."""
-    df = dc.q_lm_surprisal(spark, SF_DIR)
+    df = q_lm_surprisal(spark, SF_DIR)
     plan = _plan(df)
     tree = plan.split("\n\n")[0]
     assert "Window" not in tree, tree
@@ -772,7 +829,7 @@ def test_dsir_weights_broadcast_lut_bounded_exchanges(spark):
     at any scale); the only corpus-sized plain exchanges are the two
     map-side LUT groupBys, the per-doc groupBy, and the census — and
     no window or string-keyed shuffle appears."""
-    df = dc.q_dsir_weights(spark, SF_DIR)
+    df = q_dsir_weights(spark, SF_DIR)
     plan = _plan(df)
     tree = plan.split("\n\n")[0]
     assert "Window" not in tree, tree
@@ -787,7 +844,7 @@ def test_tier_fidelity_reads_checkpoint_not_parquet(spark):
     tier renders — the fidelity plan reads ExistingRDD only (the
     sequence window ran once, at checkpoint time), so raw + 2 renders
     never re-run the parquet scan or the sequence sort."""
-    df = dc.q_tier_fidelity(spark, SF_DIR)
+    df = q_tier_fidelity(spark, SF_DIR)
     plan = _plan(df)
     assert "Scan parquet" not in plan, plan
     assert "ExistingRDD" in plan, plan
@@ -800,7 +857,7 @@ def test_delta_join_view_deltas_broadcast(spark):
     slot (>= 3 BroadcastExchanges — at tiny sf the size-driven base
     quadrant may broadcast too; the explicit F.broadcast hints pin
     the delta sides regardless of scale)."""
-    plan = _plan(dc.q_delta_join_view(spark, SF_DIR))
+    plan = _plan(q_delta_join_view(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert tree.count("HashJoin") == 4, tree
     assert tree.count("BroadcastExchange") >= 3, tree
@@ -811,7 +868,7 @@ def test_pivot_daily_single_aggregate_no_expand(spark):
     """r06y: pivot with pinned values must lower to one map-side-
     combinable aggregate on the day key — exactly one exchange, no
     Expand node, no second scan for distinct pivot values."""
-    plan = _plan(dc.q_pivot_daily(spark, SF_DIR))
+    plan = _plan(q_pivot_daily(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     # pivot lowers to TWO stacked map-side-combinable aggregates
     # ((day, type) counts, then the per-day pivot combine) — the
@@ -825,7 +882,7 @@ def test_unpivot_expand_above_aggregate_only(spark):
     """r06y: the unpivot Expand must sit ABOVE the pivot aggregate
     (bounded |days|-row input, never raw events) and add no exchange
     beyond the pivot's own two."""
-    plan = _plan(dc.q_unpivot_metrics(spark, SF_DIR))
+    plan = _plan(q_unpivot_metrics(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "Expand" in tree, tree
     exp_pos = tree.index("Expand")

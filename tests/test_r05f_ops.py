@@ -9,7 +9,16 @@ plus the plan shapes (no unpartitioned windows, bounded exchanges)."""
 import numpy as np
 from pyspark.sql import functions as F
 
-from tinybrain_spark import driver_contract as dc
+from tinybrain_spark.driver_contract.corpus import (
+    TOKEN_BUDGET_PERMILLE,
+    q_token_budget_fill,
+)
+from tinybrain_spark.driver_contract.sequences import TRUNC, token_table
+from tinybrain_spark.driver_contract.text import q_bigram_rarity
+from tinybrain_spark.driver_contract.tiers import (
+    q_haar_pyramid,
+    q_zorder_tiles,
+)
 
 from .test_plans import SF_DIR, assert_no_unpartitioned_windows
 
@@ -52,12 +61,12 @@ def test_haar_s_transform_is_exactly_invertible():
 def test_haar_pyramid_differential_vs_numpy(spark):
     tok = {
         r["user_id"]: np.array(r["tokens"], dtype=np.int64)
-        for r in dc.token_table(spark, SF_DIR).collect()
-        if len(r["tokens"]) >= dc.TRUNC
+        for r in token_table(spark, SF_DIR).collect()
+        if len(r["tokens"]) >= TRUNC
     }
     got = {
         r["user_id"]: r.asDict()
-        for r in dc.q_haar_pyramid(spark, SF_DIR).collect()
+        for r in q_haar_pyramid(spark, SF_DIR).collect()
     }
     assert set(got) == set(tok)
     for uid, t in tok.items():
@@ -75,7 +84,7 @@ def test_haar_pyramid_differential_vs_numpy(spark):
 def test_haar_pyramid_plan_no_extra_exchange(spark):
     # the in-row lifting must add NOTHING to token_table's plan: one
     # window+groupBy pair (same hash partitioning), zero new exchanges
-    df = dc.q_haar_pyramid(spark, SF_DIR)
+    df = q_haar_pyramid(spark, SF_DIR)
     assert_no_unpartitioned_windows(df)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 2
@@ -95,7 +104,7 @@ def _zkey(x: int, y: int) -> int:
 
 
 def test_zorder_blocks_are_aligned_8x8_squares(spark):
-    rows = dc.q_zorder_tiles(spark, SF_DIR).collect()
+    rows = q_zorder_tiles(spark, SF_DIR).collect()
     assert rows
     for r in rows:
         # 64 consecutive z-keys == one aligned 8x8 square: the locality
@@ -109,7 +118,7 @@ def test_zorder_blocks_are_aligned_8x8_squares(spark):
 
 def test_zorder_single_exchange(spark):
     plan = (
-        dc.q_zorder_tiles(spark, SF_DIR)
+        q_zorder_tiles(spark, SF_DIR)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -135,11 +144,11 @@ def _brute_waterfill(toks: list[int], budget: int):
 
 
 def test_token_budget_fill_is_max_min_fair(spark):
-    rows = dc.q_token_budget_fill(spark, SF_DIR).collect()
+    rows = q_token_budget_fill(spark, SF_DIR).collect()
     assert rows
     toks = [r["toks"] for r in rows]
     total = sum(toks)
-    budget = total * dc.TOKEN_BUDGET_PERMILLE // 1000
+    budget = total * TOKEN_BUDGET_PERMILLE // 1000
     assert sum(r["alloc"] for r in rows) <= budget
     cstar = _brute_waterfill(toks, budget)
     for r in rows:
@@ -156,7 +165,7 @@ def test_token_budget_fill_is_max_min_fair(spark):
 
 
 def test_token_budget_fill_zero_windows(spark):
-    df = dc.q_token_budget_fill(spark, SF_DIR)
+    df = q_token_budget_fill(spark, SF_DIR)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "Window" not in plan  # in-row waterfill: no window, ever
     phys = df._jdf.queryExecution().executedPlan().toString()
@@ -169,7 +178,7 @@ def test_token_budget_fill_zero_windows(spark):
 
 
 def test_bigram_rarity_bounds_and_hapax(spark):
-    rows = dc.q_bigram_rarity(spark, SF_DIR).collect()
+    rows = q_bigram_rarity(spark, SF_DIR).collect()
     assert rows
     for r in rows:
         assert 0 <= r["hapax"] <= r["n_bigrams"]
@@ -181,7 +190,7 @@ def test_bigram_rarity_hashes_after_explode(spark):
     # r05h rule: md5 must appear in a flat projection, never inside a
     # transform/filter lambda (the MessageDigest-contention cliff)
     plan = (
-        dc.q_bigram_rarity(spark, SF_DIR)
+        q_bigram_rarity(spark, SF_DIR)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()

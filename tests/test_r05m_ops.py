@@ -9,7 +9,21 @@ plans' scale shapes.
 
 from pyspark.sql import functions as F
 
-from tinybrain_spark import driver_contract as dc
+from tinybrain_spark.driver_contract.events import (
+    q_bitmap_distinct,
+    q_key_skew,
+)
+from tinybrain_spark.driver_contract.signals import q_trend_slope
+from tinybrain_spark.driver_contract.text import (
+    q_pmi_bigrams,
+    q_quality_calibration,
+    q_token_fertility,
+)
+from tinybrain_spark.driver_contract.timeseries import (
+    _asof_state_inputs,
+    q_asof_interp,
+)
+from tinybrain_spark.driver_contract.vectors import q_semantic_dedup
 from tinybrain_spark.asof import asof_both
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -114,18 +128,18 @@ def test_asof_interp_matches_literal_formula(spark):
         expect[r["event_id"]] = v
     got = {
         r["event_id"]: r["v_interp_milli"]
-        for r in dc.q_asof_interp(spark, SF_DIR).collect()
+        for r in q_asof_interp(spark, SF_DIR).collect()
     }
     assert got == expect
 
 
 def _state_inputs(spark):
-    return dc._asof_state_inputs(spark, SF_DIR)
+    return _asof_state_inputs(spark, SF_DIR)
 
 
 def test_asof_interp_plan(spark):
     """One union-scan shape: no cartesian, every window partitioned."""
-    df = dc.q_asof_interp(spark, SF_DIR)
+    df = q_asof_interp(spark, SF_DIR)
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     _no_unpartitioned_windows(df)
@@ -141,7 +155,7 @@ def test_pmi_bigrams_partial_topk_no_lambda(spark):
     <=100 already-collected rows; index-explode idiom — no
     higher-order-function lambda may survive into the optimized plan
     (the r05j InferFiltersFromGenerate trap)."""
-    df = dc.q_pmi_bigrams(spark, SF_DIR)
+    df = q_pmi_bigrams(spark, SF_DIR)
     plan = _plan(df)
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
@@ -152,7 +166,7 @@ def test_pmi_bigrams_partial_topk_no_lambda(spark):
 def test_key_skew_two_stacked_aggregations(spark):
     """Raw rows collapse to (event_type, user_id) in the map stage:
     exactly two exchanges (the two groupBys), zero windows, zero joins."""
-    df = dc.q_key_skew(spark, SF_DIR)
+    df = q_key_skew(spark, SF_DIR)
     tree = _tree(df)
     assert tree.count("Exchange") == 2, tree
     assert "Window" not in tree
@@ -163,7 +177,7 @@ def test_semantic_dedup_single_exchange_pruned_scan(spark):
     """Quantize + hash happen in the scan-stage projection: ONE
     exchange (the bucket groupBy), and the unused label column never
     leaves the parquet scan."""
-    df = dc.q_semantic_dedup(spark, SF_DIR)
+    df = q_semantic_dedup(spark, SF_DIR)
     tree = _tree(df)
     assert tree.count("Exchange") == 1, tree
     plan = _plan(df)
@@ -172,7 +186,7 @@ def test_semantic_dedup_single_exchange_pruned_scan(spark):
 
 def test_token_fertility_single_exchange_no_joins(spark):
     """Pure per-row Catalyst features into one 5-row groupBy."""
-    df = dc.q_token_fertility(spark, SF_DIR)
+    df = q_token_fertility(spark, SF_DIR)
     tree = _tree(df)
     assert tree.count("Exchange") == 1, tree
     assert "Join" not in tree
@@ -198,7 +212,7 @@ def test_trend_slope_split_division_is_exact_milli_floor():
 def test_trend_slope_plan_single_exchange(spark):
     """Five moment sums in ONE map-side-combinable groupBy: a single
     exchange, no windows, no joins; slope math on aggregated rows."""
-    df = dc.q_trend_slope(spark, SF_DIR)
+    df = q_trend_slope(spark, SF_DIR)
     tree = _tree(df)
     assert tree.count("Exchange") == 1, tree
     assert "Window" not in tree
@@ -210,7 +224,7 @@ def test_quality_calibration_windows_partitioned_no_cartesian(spark):
     every window partitions by source over histogram rows; the global
     median folds in-row (sort_array + aggregate), never through an
     unpartitioned window; broadcast joins only."""
-    df = dc.q_quality_calibration(spark, SF_DIR)
+    df = q_quality_calibration(spark, SF_DIR)
     _no_unpartitioned_windows(df)
     plan = _plan(df)
     assert "CartesianProduct" not in plan
@@ -219,7 +233,7 @@ def test_quality_calibration_windows_partitioned_no_cartesian(spark):
 def test_quality_calibration_median_is_consistent(spark):
     """The in-row global median must sit between the per-source p50
     extremes, and below_ppm must be < 1e6 with n_below < n_docs."""
-    rows = dc.q_quality_calibration(spark, SF_DIR).collect()
+    rows = q_quality_calibration(spark, SF_DIR).collect()
     meds = {r["global_med"] for r in rows}
     assert len(meds) == 1
     (gmed,) = meds
@@ -233,7 +247,7 @@ def test_quality_calibration_median_is_consistent(spark):
 def test_bitmap_distinct_two_stacked_aggregations(spark):
     """Bitmap words OR-combine map-side: exactly two exchanges, zero
     windows, zero joins, no count(DISTINCT) expansion node."""
-    df = dc.q_bitmap_distinct(spark, SF_DIR)
+    df = q_bitmap_distinct(spark, SF_DIR)
     tree = _tree(df)
     assert tree.count("Exchange") == 2, tree
     assert "Window" not in tree
@@ -316,7 +330,7 @@ def test_user_streaks_hand_case(spark):
 def test_semantic_dedup_buckets_partition_vectors(spark):
     """Every vector lands in exactly one bucket (counts partition the
     table) and each keep_vec_id is a member of its own bucket (min)."""
-    out = dc.q_semantic_dedup(spark, SF_DIR).collect()
+    out = q_semantic_dedup(spark, SF_DIR).collect()
     total = sum(r["n_vecs"] for r in out)
     n = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
     assert total == n

@@ -10,7 +10,15 @@ windows only; the profile reads its table ONCE)."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
+from tinybrain_spark.driver_contract.signals import (
+    BURST_MIN_PREV,
+    BURST_X,
+    CHG_MIN_HOURS,
+    q_burst_hours,
+    q_changepoint,
+    q_fano_factor,
+)
+from tinybrain_spark.driver_contract.warehouse import q_column_profile
 
 from .test_plans import SF_DIR, assert_no_unpartitioned_windows
 
@@ -39,7 +47,7 @@ def _hourly_pd(sf_dir: str) -> pd.DataFrame:
 
 def test_fano_differential_vs_literal(spark):
     hourly = _hourly_pd(SF_DIR)
-    got = {r["source"]: r.asDict() for r in dc.q_fano_factor(spark, SF_DIR).collect()}
+    got = {r["source"]: r.asDict() for r in q_fano_factor(spark, SF_DIR).collect()}
     for source, grp in hourly.groupby("source"):
         n = grp["n"].to_numpy(dtype=np.int64)
         nh, s1, s2 = len(n), int(n.sum()), int((n * n).sum())
@@ -85,19 +93,19 @@ def test_burst_differential_vs_pandas_rolling(spark):
         for i in range(len(n)):
             lo = max(0, i - 24)
             prev = n[lo:i]
-            if len(prev) >= dc.BURST_MIN_PREV and n[i] * len(prev) > dc.BURST_X * int(
+            if len(prev) >= BURST_MIN_PREV and n[i] * len(prev) > BURST_X * int(
                 prev.sum()
             ):
                 expect.add((source, int(tbs[i]), int(n[i])))
     got = {
         (r["source"], r["tb"], r["n"])
-        for r in dc.q_burst_hours(spark, SF01).collect()
+        for r in q_burst_hours(spark, SF01).collect()
     }
     assert got == expect and len(got) > 0
 
 
 def test_burst_plan_windows_partitioned(spark):
-    assert_no_unpartitioned_windows(dc.q_burst_hours(spark, SF_DIR))
+    assert_no_unpartitioned_windows(q_burst_hours(spark, SF_DIR))
 
 
 # ---------------------------------------------------------------------------
@@ -109,7 +117,7 @@ def test_profile_differential_vs_pandas(spark):
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     got = {
         r["column_name"]: r.asDict()
-        for r in dc.q_column_profile(spark, SF_DIR).collect()
+        for r in q_column_profile(spark, SF_DIR).collect()
     }
     assert set(got) == {"text", "lang", "source"}
     for c in got:
@@ -127,7 +135,7 @@ def test_profile_scans_documents_once(spark):
     """The fifteen aggregates come from ONE pass (multi-DISTINCT via
     Expand) — a UNION-of-scans shape would print three parquet scans."""
     plan = (
-        dc.q_column_profile(spark, SF_DIR)
+        q_column_profile(spark, SF_DIR)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -143,13 +151,13 @@ def test_profile_scans_documents_once(spark):
 def test_changepoint_differential_vs_numpy(spark):
     hourly = _hourly_pd(SF01)
     got = {
-        r["source"]: r.asDict() for r in dc.q_changepoint(spark, SF01).collect()
+        r["source"]: r.asDict() for r in q_changepoint(spark, SF01).collect()
     }
     for source, grp in hourly.groupby("source"):
         n = grp["n"].to_numpy(dtype=np.int64)
         tbs = grp["tb"].to_numpy(dtype=np.int64)
         nn, s = len(n), int(n.sum())
-        if nn < dc.CHG_MIN_HOURS:
+        if nn < CHG_MIN_HOURS:
             assert source not in got
             continue
         cum = np.cumsum(n)
@@ -213,4 +221,4 @@ def test_changepoint_plan_windows_partitioned(spark):
     # bracket groups like an unpartitioned ordered window does
     from .test_r05m_ops import _no_unpartitioned_windows
 
-    _no_unpartitioned_windows(dc.q_changepoint(spark, SF_DIR))
+    _no_unpartitioned_windows(q_changepoint(spark, SF_DIR))

@@ -11,8 +11,24 @@ import json
 
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import HEARTBEAT_TOL_S, ZONE_THRESH_CENTI
+from tinybrain_spark.driver_contract.signals import q_forecast_baseline
+from tinybrain_spark.driver_contract.timeseries import (
+    CONC_WINDOW_S,
+    HEARTBEAT_TOL_S,
+    q_heartbeat_uptime,
+    q_peak_concurrency,
+)
+from tinybrain_spark.driver_contract.vectors import (
+    _ANN_PROBES,
+    _ANN_TOPK,
+    q_ann_recall,
+)
+from tinybrain_spark.driver_contract.warehouse import (
+    ZONE_THRESH_CENTI,
+    q_join_cardinality,
+    q_json_props,
+    q_zone_map_prune,
+)
 
 from .test_plans import SF_DIR
 
@@ -42,7 +58,7 @@ def test_json_props_differential_vs_literal(spark):
         .sort_values("source", ignore_index=True)
     )
     got = (
-        dc.q_json_props(spark, SF_DIR)
+        q_json_props(spark, SF_DIR)
         .toPandas()
         .sort_values("source", ignore_index=True)
     )
@@ -79,7 +95,7 @@ def test_heartbeat_differential_vs_literal(spark):
     ref = {}
     for uid, grp in pd.DataFrame({"u": ev["user_id"], "es": es}).groupby("u"):
         ref[int(uid)] = _uptime_literal(grp["es"].tolist())
-    got = dc.q_heartbeat_uptime(spark, SF_DIR).toPandas()
+    got = q_heartbeat_uptime(spark, SF_DIR).toPandas()
     assert len(got) == len(ref)
     for row in got.itertuples():
         assert (
@@ -113,14 +129,14 @@ def test_heartbeat_edges_chain_and_break(spark):
         ],
         "user_id long, ts timestamp",
     )
-    import tinybrain_spark.driver_contract as d
+    import tinybrain_spark.driver_contract.timeseries as d
 
     orig = d.load_table
     d.load_table = lambda sp, sf, name: df
     try:
         got = {
             int(r.user_id): (int(r.n_heartbeats), int(r.n_islands), int(r.live_s))
-            for r in dc.q_heartbeat_uptime(spark, "ignored").collect()
+            for r in q_heartbeat_uptime(spark, "ignored").collect()
         }
     finally:
         d.load_table = orig
@@ -161,7 +177,7 @@ def test_zone_map_differential_vs_literal(spark):
         .sort_values("source", ignore_index=True)
     )
     got = (
-        dc.q_zone_map_prune(spark, SF_DIR)
+        q_zone_map_prune(spark, SF_DIR)
         .toPandas()
         .sort_values("source", ignore_index=True)
     )
@@ -205,7 +221,7 @@ def test_forecast_baseline_differential_vs_literal(spark):
     )
     ref["mae_milli"] = (ref["sum_abs_err"] * 1000) // ref["n_scored"]
     got = (
-        dc.q_forecast_baseline(spark, SF_DIR)
+        q_forecast_baseline(spark, SF_DIR)
         .toPandas()
         .sort_values("source", ignore_index=True)
     )
@@ -228,7 +244,7 @@ def test_join_cardinality_matches_actually_running_the_join(spark):
     ev = pd.read_parquet(
         f"{SF_DIR}/events.parquet", columns=["user_id", "event_type"]
     )
-    got = dc.q_join_cardinality(spark, SF_DIR).toPandas()
+    got = q_join_cardinality(spark, SF_DIR).toPandas()
     types = sorted(ev["event_type"].unique())
     for row in got.itertuples():
         a = ev[ev["event_type"] == row.type_a][["user_id"]]
@@ -277,10 +293,10 @@ def test_peak_concurrency_differential_vs_literal(spark):
     es = (
         ev["ts"].astype("datetime64[ns]").astype("int64") // 10**9
     ).tolist()
-    ref = _peak_literal(es, dc.CONC_WINDOW_S)
+    ref = _peak_literal(es, CONC_WINDOW_S)
     got = {
         int(r.day): int(r.peak)
-        for r in dc.q_peak_concurrency(spark, SF_DIR).collect()
+        for r in q_peak_concurrency(spark, SF_DIR).collect()
     }
     assert got == ref
 
@@ -292,7 +308,7 @@ def test_peak_concurrency_midnight_carry_in(spark):
     the new day."""
     from datetime import datetime, timezone
 
-    tol = dc.CONC_WINDOW_S
+    tol = CONC_WINDOW_S
     day1 = 86400
     rows = [
         # two intervals open just before midnight and span into day 1
@@ -310,14 +326,14 @@ def test_peak_concurrency_midnight_carry_in(spark):
         ],
         "ts timestamp",
     )
-    import tinybrain_spark.driver_contract as d
+    import tinybrain_spark.driver_contract.timeseries as d
 
     orig = d.load_table
     d.load_table = lambda sp, sf, name: df
     try:
         got = {
             int(r.day): int(r.peak)
-            for r in dc.q_peak_concurrency(spark, "ignored").collect()
+            for r in q_peak_concurrency(spark, "ignored").collect()
         }
     finally:
         d.load_table = orig
@@ -355,13 +371,13 @@ def test_ann_recall_matches_literal_numpy_eval(spark):
         .toPandas()
     )
     bucket = dict(zip(bdf["vec_id"], bdf["b"]))
-    k = dc._ANN_TOPK
+    k = _ANN_TOPK
     got = {
         int(r.probe_id): (int(r.n_approx), int(r.n_hits), int(r.recall_permille))
-        for r in dc.q_ann_recall(spark, SF_DIR).collect()
+        for r in q_ann_recall(spark, SF_DIR).collect()
     }
-    assert len(got) == dc._ANN_PROBES
-    for pi in range(dc._ANN_PROBES):
+    assert len(got) == _ANN_PROBES
+    for pi in range(_ANN_PROBES):
         p = np.where(ids == pi)[0][0]
         cos = (mat @ mat[p]) / (norms * norms[p])
         order = sorted(

@@ -15,8 +15,16 @@ from math import floor
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import KMEANS_K, KMEANS_Q
+from tinybrain_spark.driver_contract.corpus import q_gini_doclen, q_word_runs
+from tinybrain_spark.driver_contract.dedup import q_cross_source_dup
+from tinybrain_spark.driver_contract.events import q_type_lift
+from tinybrain_spark.driver_contract.signals import q_benford
+from tinybrain_spark.driver_contract.vectors import (
+    KMEANS_K,
+    KMEANS_Q,
+    q_kmeans_assign,
+    q_kmeans_update,
+)
 
 from .test_plans import SF_DIR, _plan
 
@@ -63,7 +71,7 @@ def test_word_runs_differential_vs_literal(spark):
         .sort_values("source", ignore_index=True)
     )
     got = (
-        dc.q_word_runs(spark, SF_DIR)
+        q_word_runs(spark, SF_DIR)
         .toPandas()
         .sort_values("source", ignore_index=True)
     )
@@ -85,7 +93,7 @@ def test_word_runs_degenerate_repetition(spark):
 
     with tempfile.TemporaryDirectory() as d:
         df.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-        row = dc.q_word_runs(spark, d).collect()[0]
+        row = q_word_runs(spark, d).collect()[0]
     assert row["docs"] == 2
     assert row["total_words"] == 8
     assert row["total_runs"] == 2 + 3
@@ -95,7 +103,7 @@ def test_word_runs_degenerate_repetition(spark):
 def test_word_runs_single_exchange(spark):
     """The run scan is in-row (one F.aggregate) — the plan's only
     exchange is the final groupBy(source)."""
-    plan = _plan(dc.q_word_runs(spark, SF_DIR))
+    plan = _plan(q_word_runs(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert tree.count("Exchange") == 1, tree
 
@@ -112,7 +120,7 @@ def test_gini_differential_vs_pairwise_literal(spark):
         f"{SF_DIR}/documents.parquet", columns=["source", "n_chars"]
     )
     got = (
-        dc.q_gini_doclen(spark, SF_DIR)
+        q_gini_doclen(spark, SF_DIR)
         .toPandas()
         .sort_values("source", ignore_index=True)
     )
@@ -131,7 +139,7 @@ def test_gini_differential_vs_pairwise_literal(spark):
 def test_gini_windows_partitioned_by_source(spark):
     from .test_plans import assert_no_unpartitioned_windows
 
-    assert_no_unpartitioned_windows(dc.q_gini_doclen(spark, SF_DIR))
+    assert_no_unpartitioned_windows(q_gini_doclen(spark, SF_DIR))
 
 
 # ---------------------------------------------------------------------------
@@ -156,7 +164,7 @@ def test_benford_differential_vs_literal(spark):
     tot = ref.groupby("event_type")["n"].transform("sum")
     ref["permille"] = (ref["n"] * 1000 // tot).astype("int64")
     got = (
-        dc.q_benford(spark, SF_DIR)
+        q_benford(spark, SF_DIR)
         .toPandas()
         .sort_values(["event_type", "digit"], ignore_index=True)
     )
@@ -185,7 +193,7 @@ def test_type_lift_differential_vs_literal(spark):
     n_t = Counter(t for b in baskets for t in b)
     n_ab = Counter(p for b in baskets for p in combinations(b, 2))
     got = (
-        dc.q_type_lift(spark, SF_DIR)
+        q_type_lift(spark, SF_DIR)
         .toPandas()
         .sort_values(["type_a", "type_b"], ignore_index=True)
     )
@@ -204,7 +212,7 @@ def test_type_lift_differential_vs_literal(spark):
 def test_type_lift_pairs_in_row_no_self_join(spark):
     """Pair enumeration is the source_overlap nested-transform pattern:
     no self-join of the basket table, no cartesian."""
-    plan = _plan(dc.q_type_lift(spark, SF_DIR))
+    plan = _plan(q_type_lift(spark, SF_DIR))
     assert "CartesianProduct" not in plan
     tree = plan.split("\n\n")[0]
     assert "SortMergeJoin" not in tree, tree
@@ -246,7 +254,7 @@ def _kmeans_literal(sf_dir: str):
 def test_kmeans_assign_differential_vs_literal(spark):
     stats = _kmeans_literal(SF_DIR)
     got = (
-        dc.q_kmeans_assign(spark, SF_DIR)
+        q_kmeans_assign(spark, SF_DIR)
         .toPandas()
         .sort_values("cluster_id", ignore_index=True)
     )
@@ -265,7 +273,7 @@ def test_kmeans_broadcasts_centroids_no_windows(spark):
     plan has no CartesianProduct and no unpartitioned WindowExec."""
     from .test_plans import assert_no_unpartitioned_windows
 
-    df = dc.q_kmeans_assign(spark, SF_DIR)
+    df = q_kmeans_assign(spark, SF_DIR)
     plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert_no_unpartitioned_windows(df)
@@ -300,7 +308,7 @@ def test_kmeans_update_differential_vs_literal(spark):
     def trunc_div(a: int, b: int) -> int:
         return abs(a) // b * (1 if a >= 0 else -1)
 
-    got = dc.q_kmeans_update(spark, SF_DIR).toPandas()
+    got = q_kmeans_update(spark, SF_DIR).toPandas()
     assert len(got) == KMEANS_K * dims
     for _, row in got.iterrows():
         cid, dim = int(row["cluster_id"]), int(row["dim"])
@@ -327,5 +335,5 @@ def test_cross_source_dup_hand_counts(spark, tmp_path):
     d = _docs_dir(spark, tmp_path, ["x y", "x y", "x y", "unique z"])
     got = {r["source"]: (r["n_docs"], r["n_dups"], r["n_cross_source"],
                          r["dup_permille"])
-           for r in dc.q_cross_source_dup(spark, d).collect()}
+           for r in q_cross_source_dup(spark, d).collect()}
     assert got == {"src0": (2, 1, 0, 500), "src1": (2, 1, 1, 500)}

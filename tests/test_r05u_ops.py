@@ -14,8 +14,12 @@ from math import floor, isqrt
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import _MIXTURE_EPOCH
+from tinybrain_spark.driver_contract.corpus import (
+    _MIXTURE_EPOCH,
+    q_source_mixture,
+    q_zipf_slope,
+)
+from tinybrain_spark.driver_contract.signals import q_max_drawdown
 
 from .test_plans import SF_DIR, _plan, assert_no_unpartitioned_windows
 
@@ -60,7 +64,7 @@ def test_max_drawdown_differential_vs_literal(spark):
     events = pd.read_parquet(f"{SF_DIR}/events.parquet")
     want = _drawdown_literal(events)
     got = (
-        dc.q_max_drawdown(spark, SF_DIR)
+        q_max_drawdown(spark, SF_DIR)
         .toPandas()
         .sort_values(["event_type", "day"])
         .reset_index(drop=True)
@@ -73,7 +77,7 @@ def test_max_drawdown_differential_vs_literal(spark):
 def test_max_drawdown_windows_day_bounded(spark):
     """The running max must partition by (type, day) — never an
     unpartitioned one-task funnel, never a FOLLOWING frame."""
-    df = dc.q_max_drawdown(spark, SF_DIR)
+    df = q_max_drawdown(spark, SF_DIR)
     assert_no_unpartitioned_windows(df)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "following" not in plan.lower().replace(
@@ -87,7 +91,7 @@ def test_max_drawdown_windows_day_bounded(spark):
 
 
 def test_source_mixture_exact_apportionment(spark):
-    out = dc.q_source_mixture(spark, SF_DIR).toPandas()
+    out = q_source_mixture(spark, SF_DIR).toPandas()
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
     by_src = docs.groupby("source").agg(
         docs=("doc_id", "size"), chars=("n_chars", "sum")
@@ -111,7 +115,7 @@ def test_source_mixture_alpha_flattens(spark):
     """alpha=0.5 must compress the spread: the quota ratio between the
     largest and smallest source is at most the doc-count ratio (and at
     least 1) — the whole point of temperature sampling."""
-    out = dc.q_source_mixture(spark, SF_DIR).toPandas()
+    out = q_source_mixture(spark, SF_DIR).toPandas()
     big, small = out["docs"].max(), out["docs"].min()
     qbig = int(out.loc[out["docs"].idxmax(), "epoch_quota"])
     qsmall = int(out.loc[out["docs"].idxmin(), "epoch_quota"])
@@ -165,7 +169,7 @@ def test_zipf_slope_differential_vs_literal(spark):
     )
     want = _zipf_literal(docs)
     got = (
-        dc.q_zipf_slope(spark, SF_DIR)
+        q_zipf_slope(spark, SF_DIR)
         .toPandas()
         .sort_values("source")
         .reset_index(drop=True)
@@ -178,7 +182,7 @@ def test_zipf_slope_differential_vs_literal(spark):
 def test_zipf_slope_plan_fingerprinted_no_hof(spark):
     """The corpus-dominant shuffle keys on the 8-byte fingerprint and
     no lambda survives into the optimized plan (the r05j rule)."""
-    df = dc.q_zipf_slope(spark, SF_DIR)
+    df = q_zipf_slope(spark, SF_DIR)
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert "lambdafunction" not in opt
     plan = _plan(df)

@@ -8,8 +8,15 @@ minimality/monotonicity invariants the oracle hash alone can't name."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import COMPACT_TARGET, NUCLEUS_PERMILLE
+from tinybrain_spark.driver_contract.events import (
+    NUCLEUS_PERMILLE,
+    q_nucleus_keys,
+)
+from tinybrain_spark.driver_contract.media import q_wav_energy
+from tinybrain_spark.driver_contract.warehouse import (
+    COMPACT_TARGET,
+    q_compaction_plan,
+)
 
 from .test_plans import SF_DIR, assert_no_unpartitioned_windows
 
@@ -30,7 +37,7 @@ def _signal(did: int) -> np.ndarray:
 def test_wav_energy_differential_vs_literal(spark):
     from math import isqrt
 
-    got = dc.q_wav_energy(spark, SF_DIR).toPandas().set_index("doc_id")
+    got = q_wav_energy(spark, SF_DIR).toPandas().set_index("doc_id")
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet", columns=["doc_id"])
     assert len(got) == len(docs)
     for did in docs["doc_id"].head(40):
@@ -46,7 +53,7 @@ def test_wav_energy_differential_vs_literal(spark):
 
 def test_wav_energy_rms_bracket(spark):
     """rms_u is the integer floor RMS: rms^2 <= energy/n < (rms+1)^2."""
-    out = dc.q_wav_energy(spark, SF_DIR).toPandas()
+    out = q_wav_energy(spark, SF_DIR).toPandas()
     ms = out["energy"] // out["n_samples"]
     assert (out["rms_u"] ** 2 <= ms).all()
     assert ((out["rms_u"] + 1) ** 2 > ms).all()
@@ -59,7 +66,7 @@ def test_wav_energy_rms_bracket(spark):
 
 def test_compaction_plan_next_fit_invariants(spark):
     out = (
-        dc.q_compaction_plan(spark, SF_DIR)
+        q_compaction_plan(spark, SF_DIR)
         .toPandas()
         .sort_values(["event_type", "day"])
     )
@@ -75,7 +82,7 @@ def test_compaction_plan_next_fit_invariants(spark):
         sizes = g.groupby("job_id")["rows"].sum()
         assert (sizes.iloc[:-1].cumsum() >=
                 COMPACT_TARGET * np.arange(1, len(sizes))).all()
-    assert_no_unpartitioned_windows(dc.q_compaction_plan(spark, SF_DIR))
+    assert_no_unpartitioned_windows(q_compaction_plan(spark, SF_DIR))
 
 
 # ---------------------------------------------------------------------------
@@ -112,7 +119,7 @@ def test_nucleus_keys_differential_vs_literal(spark):
     )
     want = _nucleus_literal(events)
     got = (
-        dc.q_nucleus_keys(spark, SF_DIR)
+        q_nucleus_keys(spark, SF_DIR)
         .toPandas()
         .sort_values("event_type")
         .reset_index(drop=True)
@@ -126,7 +133,7 @@ def test_nucleus_keys_minimality(spark):
     events = pd.read_parquet(
         f"{SF_DIR}/events.parquet", columns=["event_type", "user_id"]
     )
-    got = dc.q_nucleus_keys(spark, SF_DIR).toPandas()
+    got = q_nucleus_keys(spark, SF_DIR).toPandas()
     for _, row in got.iterrows():
         counts = (
             events[events["event_type"] == row["event_type"]]
@@ -140,4 +147,4 @@ def test_nucleus_keys_minimality(spark):
         assert int(counts.head(k).sum()) >= target
         if k > 1:
             assert int(counts.head(k - 1).sum()) < target
-    assert_no_unpartitioned_windows(dc.q_nucleus_keys(spark, SF_DIR))
+    assert_no_unpartitioned_windows(q_nucleus_keys(spark, SF_DIR))

@@ -6,8 +6,11 @@ from collections import Counter
 
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import _BLOCKLIST, CHAR_COVER_PERMILLE
+from tinybrain_spark.driver_contract.corpus import (
+    CHAR_COVER_PERMILLE,
+    q_char_coverage,
+)
+from tinybrain_spark.driver_contract.text import _BLOCKLIST, q_blocklist_filter
 
 from .test_plans import SF_DIR, _plan, assert_no_unpartitioned_windows
 
@@ -35,7 +38,7 @@ def test_blocklist_differential_vs_literal(spark):
         want["flagged_docs"] * 1000 // want["docs"]
     )
     got = (
-        dc.q_blocklist_filter(spark, SF_DIR)
+        q_blocklist_filter(spark, SF_DIR)
         .toPandas()
         .sort_values("source")
         .reset_index(drop=True)
@@ -49,7 +52,7 @@ def test_blocklist_differential_vs_literal(spark):
 
 
 def test_blocklist_plan_lambda_free_one_exchange(spark):
-    df = dc.q_blocklist_filter(spark, SF_DIR)
+    df = q_blocklist_filter(spark, SF_DIR)
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert "lambdafunction" not in opt
     plan = _plan(df)
@@ -87,13 +90,13 @@ def test_char_coverage_differential_vs_literal(spark):
     )
     want = _coverage_literal(docs)
     got = (
-        dc.q_char_coverage(spark, SF_DIR)
+        q_char_coverage(spark, SF_DIR)
         .toPandas()
         .sort_values("lang")
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()))
-    assert_no_unpartitioned_windows(dc.q_char_coverage(spark, SF_DIR))
+    assert_no_unpartitioned_windows(q_char_coverage(spark, SF_DIR))
 
 
 def test_char_coverage_minimality(spark):
@@ -102,7 +105,7 @@ def test_char_coverage_minimality(spark):
     docs = pd.read_parquet(
         f"{SF_DIR}/documents.parquet", columns=["lang", "text"]
     )
-    got = dc.q_char_coverage(spark, SF_DIR).toPandas()
+    got = q_char_coverage(spark, SF_DIR).toPandas()
     for _, row in got.iterrows():
         cnt: Counter = Counter()
         for t in docs[docs["lang"] == row["lang"]]["text"]:

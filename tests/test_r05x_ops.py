@@ -10,12 +10,15 @@ from math import floor
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.dedup import (
+    _MH_ACC_SAMPLE,
     _MINHASH_AB,
     _MINHASH_K,
     _MINHASH_P,
+    q_minhash_accuracy,
+    q_minhash_pairs,
 )
+from tinybrain_spark.driver_contract.events import q_ab_uplift
 
 from .test_plans import SF_DIR, _plan
 
@@ -54,7 +57,7 @@ def test_ab_uplift_differential_vs_literal(spark):
         .reset_index(drop=True)
     )
     got = (
-        dc.q_ab_uplift(spark, SF_DIR)
+        q_ab_uplift(spark, SF_DIR)
         .toPandas()
         .sort_values("event_type")
         .reset_index(drop=True)
@@ -63,7 +66,7 @@ def test_ab_uplift_differential_vs_literal(spark):
 
 
 def test_ab_uplift_one_exchange(spark):
-    plan = _plan(dc.q_ab_uplift(spark, SF_DIR))
+    plan = _plan(q_ab_uplift(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert tree.count("Exchange") == 1, "uplift must be one groupBy"
 
@@ -93,7 +96,7 @@ def _literal_accuracy() -> pd.DataFrame:
     cand = set()
     for ids in buckets.values():
         for x, y in combinations(sorted(ids), 2):
-            if _h56(f"{x}:{y}") % dc._MH_ACC_SAMPLE == 0:
+            if _h56(f"{x}:{y}") % _MH_ACC_SAMPLE == 0:
                 cand.add((x, y))
     rows = defaultdict(list)
     for x, y in cand:
@@ -129,7 +132,7 @@ def _literal_accuracy() -> pd.DataFrame:
 def test_minhash_accuracy_differential_vs_literal(spark):
     want = _literal_accuracy()
     got = (
-        dc.q_minhash_accuracy(spark, SF_DIR)
+        q_minhash_accuracy(spark, SF_DIR)
         .toPandas()
         .sort_values("n_agree")
         .reset_index(drop=True)
@@ -138,16 +141,16 @@ def test_minhash_accuracy_differential_vs_literal(spark):
 
 
 def test_minhash_accuracy_bucket_sanity(spark):
-    out = dc.q_minhash_accuracy(spark, SF_DIR).toPandas()
+    out = q_minhash_accuracy(spark, SF_DIR).toPandas()
     assert out["n_agree"].between(0, 8).all()
     assert (out["min_jac_permille"] <= out["mean_jac_permille"]).all()
     assert (out["mean_jac_permille"] <= out["max_jac_permille"]).all()
     assert out["max_jac_permille"].le(1000).all()
     # total pairs equals the deterministically sampled candidate count
-    pairs = dc.q_minhash_pairs(spark, SF_DIR).toPandas()
+    pairs = q_minhash_pairs(spark, SF_DIR).toPandas()
     n_cand = sum(
         1
         for a, b in zip(pairs["doc_a"], pairs["doc_b"])
-        if _h56(f"{int(a)}:{int(b)}") % dc._MH_ACC_SAMPLE == 0
+        if _h56(f"{int(a)}:{int(b)}") % _MH_ACC_SAMPLE == 0
     )
     assert int(out["n_pairs"].sum()) == n_cand

@@ -7,7 +7,14 @@ from collections import Counter
 
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
+from tinybrain_spark.driver_contract.corpus import (
+    q_curriculum_order,
+    q_unigram_entropy,
+)
+from tinybrain_spark.driver_contract.vectors import (
+    q_ann_nn_bucketed,
+    q_knn_purity,
+)
 
 from .test_plans import SF_DIR, _plan
 
@@ -46,7 +53,7 @@ def test_unigram_entropy_differential_vs_literal(spark):
         .reset_index(drop=True)
     )
     got = (
-        dc.q_unigram_entropy(spark, SF_DIR)
+        q_unigram_entropy(spark, SF_DIR)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -55,16 +62,16 @@ def test_unigram_entropy_differential_vs_literal(spark):
 
 
 def test_unigram_entropy_zero_exchange_one_split(spark):
-    plan = _plan(dc.q_unigram_entropy(spark, SF_DIR))
+    plan = _plan(q_unigram_entropy(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "Exchange" not in tree, "entropy must be embarrassingly parallel"
     # the sorted array must be built once, not re-inlined per element_at
-    opt = dc.q_unigram_entropy(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+    opt = q_unigram_entropy(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
     assert opt.count("split(") == 1, "split(text) must appear exactly once"
 
 
 def test_unigram_entropy_bounds(spark):
-    out = dc.q_unigram_entropy(spark, SF_DIR).toPandas()
+    out = q_unigram_entropy(spark, SF_DIR).toPandas()
     # 0 <= ent_units <= n*bitlen(n); all-same-word doc scores exactly 0
     assert (out["ent_units"] >= 0).all()
     ub = out["n_words"] * out["n_words"].map(lambda n: int(n).bit_length())
@@ -95,7 +102,7 @@ def test_curriculum_order_differential_vs_literal(spark):
         columns=["rank", "doc_id", "bucket"],
     )
     got = (
-        dc.q_curriculum_order(spark, SF_DIR)
+        q_curriculum_order(spark, SF_DIR)
         .toPandas()
         .sort_values("rank")
         .reset_index(drop=True)
@@ -104,7 +111,7 @@ def test_curriculum_order_differential_vs_literal(spark):
 
 
 def test_curriculum_order_is_total_permutation(spark):
-    out = dc.q_curriculum_order(spark, SF_DIR).toPandas()
+    out = q_curriculum_order(spark, SF_DIR).toPandas()
     n = len(out)
     assert sorted(out["rank"]) == list(range(1, n + 1))
     assert out["doc_id"].nunique() == n
@@ -119,7 +126,7 @@ def test_curriculum_order_is_total_permutation(spark):
 
 
 def test_knn_purity_consistent_with_bucketed_nn(spark):
-    nn = dc.q_ann_nn_bucketed(spark, SF_DIR).toPandas()
+    nn = q_ann_nn_bucketed(spark, SF_DIR).toPandas()
     emb = pd.read_parquet(
         f"{SF_DIR}/embeddings.parquet", columns=["vec_id", "label"]
     )
@@ -141,7 +148,7 @@ def test_knn_purity_consistent_with_bucketed_nn(spark):
         .reset_index(drop=True)
     )
     got = (
-        dc.q_knn_purity(spark, SF_DIR)
+        q_knn_purity(spark, SF_DIR)
         .toPandas()
         .sort_values("label")
         .reset_index(drop=True)
@@ -150,6 +157,6 @@ def test_knn_purity_consistent_with_bucketed_nn(spark):
 
 
 def test_knn_purity_bounds(spark):
-    out = dc.q_knn_purity(spark, SF_DIR).toPandas()
+    out = q_knn_purity(spark, SF_DIR).toPandas()
     assert (out["n_pure"] <= out["n_vecs"]).all()
     assert out["purity_permille"].between(0, 1000).all()

@@ -6,8 +6,8 @@ from collections import Counter, defaultdict
 
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import _LANG_MARKERS
+from tinybrain_spark.driver_contract.signals import q_peak_rate
+from tinybrain_spark.driver_contract.text import _LANG_MARKERS, q_lang_margin
 
 from .test_plans import SF_DIR, _plan
 
@@ -44,7 +44,7 @@ def _literal_peak() -> pd.DataFrame:
 def test_peak_rate_differential_vs_literal(spark):
     want = _literal_peak()
     got = (
-        dc.q_peak_rate(spark, SF_DIR)
+        q_peak_rate(spark, SF_DIR)
         .toPandas()
         .sort_values(["event_type", "day"])
         .reset_index(drop=True)
@@ -53,7 +53,7 @@ def test_peak_rate_differential_vs_literal(spark):
 
 
 def test_peak_rate_plan_bounded(spark):
-    plan = _plan(dc.q_peak_rate(spark, SF_DIR))
+    plan = _plan(q_peak_rate(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     # pre-agg exchange + window re-key; the final census reuses the
     # window's (type, day) clustering
@@ -113,7 +113,7 @@ def test_lang_margin_differential_vs_literal(spark):
         .reset_index(drop=True)
     )
     got = (
-        dc.q_lang_margin(spark, SF_DIR)
+        q_lang_margin(spark, SF_DIR)
         .toPandas()
         .sort_values("guess_lang")
         .reset_index(drop=True)
@@ -122,7 +122,7 @@ def test_lang_margin_differential_vs_literal(spark):
 
 
 def test_lang_margin_staged_projection_and_one_exchange(spark):
-    df = dc.q_lang_margin(spark, SF_DIR)
+    df = q_lang_margin(spark, SF_DIR)
     plan = _plan(df)
     tree = plan.split("\n\n")[0]
     assert tree.count("Exchange") == 1, "census must be one groupBy"

@@ -9,14 +9,15 @@ from itertools import combinations
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.dedup import (
+    EDITDIST_PREFIX,
+    EDITDIST_SIM_PPT,
     _MINHASH_AB,
     _MINHASH_K,
     _MINHASH_P,
-    EDITDIST_PREFIX,
-    EDITDIST_SIM_PPT,
+    q_editdist_verify,
 )
+from tinybrain_spark.driver_contract.tiers import q_native_resolution
 
 from .test_plans import SF_DIR, _plan
 
@@ -155,7 +156,7 @@ def test_lev_batch_matches_textbook_dp():
 def test_editdist_differential_vs_literal(spark):
     want = _literal_editdist()
     got = (
-        dc.q_editdist_verify(spark, SF_DIR)
+        q_editdist_verify(spark, SF_DIR)
         .toPandas()
         .sort_values(["doc_a", "doc_b"])
         .reset_index(drop=True)
@@ -164,7 +165,7 @@ def test_editdist_differential_vs_literal(spark):
 
 
 def test_editdist_bounds_and_prefix_projection(spark):
-    df = dc.q_editdist_verify(spark, SF_DIR)
+    df = q_editdist_verify(spark, SF_DIR)
     out = df.toPandas()
     assert (out["doc_a"] < out["doc_b"]).all()
     assert out["sim_ppt"].between(EDITDIST_SIM_PPT, 1000).all()
@@ -218,7 +219,7 @@ def _literal_native_resolution() -> pd.DataFrame:
 def test_native_resolution_differential_vs_literal(spark):
     want = _literal_native_resolution()
     got = (
-        dc.q_native_resolution(spark, SF_DIR)
+        q_native_resolution(spark, SF_DIR)
         .toPandas()
         .sort_values("source")
         .reset_index(drop=True)
@@ -227,14 +228,14 @@ def test_native_resolution_differential_vs_literal(spark):
 
 
 def test_native_resolution_plan_day_bounded(spark):
-    plan = _plan(dc.q_native_resolution(spark, SF_DIR))
+    plan = _plan(q_native_resolution(spark, SF_DIR))
     # never the O(n^2) frame, never a one-task full-history sort
     assert "UNBOUNDED FOLLOWING" not in plan
     assert "WindowExec: No Partition Defined" not in plan
 
 
 def test_native_resolution_dominance_invariants(spark):
-    out = dc.q_native_resolution(spark, SF_DIR).toPandas()
+    out = q_native_resolution(spark, SF_DIR).toPandas()
     assert (out["n_dominant"] <= out["n_deltas"]).all()
     assert out["share_ppt"].between(1, 1000).all()
     assert out["dominant_delta_s"].ge(0).all()

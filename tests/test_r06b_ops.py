@@ -6,12 +6,16 @@ from collections import Counter
 
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.sequences import DAY_US
+from tinybrain_spark.driver_contract.text import (
     BM25_TERMS,
     BM25_TOPK,
+    q_bm25_topk,
+)
+from tinybrain_spark.driver_contract.tiers import (
     TIER_LADDER_S,
-    DAY_US,
+    q_native_resolution,
+    q_tier_plan,
 )
 
 from .test_plans import SF_DIR, _plan, assert_no_unpartitioned_windows
@@ -57,12 +61,12 @@ def _literal_bm25() -> pd.DataFrame:
 
 def test_bm25_differential_vs_literal(spark):
     want = _literal_bm25()
-    got = dc.q_bm25_topk(spark, SF_DIR).toPandas()
+    got = q_bm25_topk(spark, SF_DIR).toPandas()
     pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()))
 
 
 def test_bm25_invariants(spark):
-    out = dc.q_bm25_topk(spark, SF_DIR).toPandas()
+    out = q_bm25_topk(spark, SF_DIR).toPandas()
     assert len(out) == BM25_TOPK
     assert out["n_terms"].between(1, len(BM25_TERMS)).all()
     assert out["score"].gt(0).all()
@@ -72,12 +76,12 @@ def test_bm25_invariants(spark):
 
 
 def test_bm25_plan_topk_never_global_sort(spark):
-    plan = _plan(dc.q_bm25_topk(spark, SF_DIR))
+    plan = _plan(q_bm25_topk(spark, SF_DIR))
     # top-k is per-partition partial + merge, never Sort + GlobalLimit
     assert "TakeOrderedAndProject" in plan
     # the |terms|-row df table and the 1-row (N, L) table broadcast
     assert plan.count("BroadcastExchange") >= 2
-    assert_no_unpartitioned_windows(dc.q_bm25_topk(spark, SF_DIR))
+    assert_no_unpartitioned_windows(q_bm25_topk(spark, SF_DIR))
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +91,7 @@ def test_bm25_plan_topk_never_global_sort(spark):
 
 def _literal_tier_plan(spark) -> pd.DataFrame:
     dom = (
-        dc.q_native_resolution(spark, SF_DIR)
+        q_native_resolution(spark, SF_DIR)
         .toPandas()
         .set_index("source")["dominant_delta_s"]
     )
@@ -125,7 +129,7 @@ def _literal_tier_plan(spark) -> pd.DataFrame:
 def test_tier_plan_differential_vs_literal(spark):
     want = _literal_tier_plan(spark)
     got = (
-        dc.q_tier_plan(spark, SF_DIR)
+        q_tier_plan(spark, SF_DIR)
         .toPandas()
         .sort_values("source")
         .reset_index(drop=True)
@@ -134,7 +138,7 @@ def test_tier_plan_differential_vs_literal(spark):
 
 
 def test_tier_plan_invariants(spark):
-    out = dc.q_tier_plan(spark, SF_DIR).toPandas()
+    out = q_tier_plan(spark, SF_DIR).toPandas()
     assert set(out["rec_width_s"]).issubset(set(TIER_LADDER_S))
     # a tier is never finer than the native cadence (unless at the cap)
     cap = TIER_LADDER_S[-1]
@@ -147,7 +151,7 @@ def test_tier_plan_invariants(spark):
 
 
 def test_tier_plan_plan_bounded(spark):
-    df = dc.q_tier_plan(spark, SF_DIR)
+    df = q_tier_plan(spark, SF_DIR)
     plan = _plan(df)
     assert "UNBOUNDED FOLLOWING" not in plan
     assert_no_unpartitioned_windows(df)

@@ -7,11 +7,12 @@ from collections import Counter, defaultdict
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
-    _DRIFT_FP,
-    DAY_US,
+from tinybrain_spark.driver_contract.media import q_image_quality
+from tinybrain_spark.driver_contract.sequences import DAY_US
+from tinybrain_spark.driver_contract.timeseries import (
     HIST_BIN,
+    _DRIFT_FP,
+    q_value_drift,
 )
 
 from .test_plans import SF_DIR, _plan, assert_no_unpartitioned_windows
@@ -70,7 +71,7 @@ def _literal_value_drift() -> pd.DataFrame:
 def test_value_drift_differential_vs_literal(spark):
     want = _literal_value_drift()
     got = (
-        dc.q_value_drift(spark, SF_DIR)
+        q_value_drift(spark, SF_DIR)
         .toPandas()
         .sort_values("source")
         .reset_index(drop=True)
@@ -79,7 +80,7 @@ def test_value_drift_differential_vs_literal(spark):
 
 
 def test_value_drift_invariants(spark):
-    out = dc.q_value_drift(spark, SF_DIR).toPandas()
+    out = q_value_drift(spark, SF_DIR).toPandas()
     # TVD is a metric bounded by the fixed-point unit
     assert out["tvd_fp"].between(0, _DRIFT_FP).all()
     assert out["drift_ppt"].between(0, 1000).all()
@@ -89,7 +90,7 @@ def test_value_drift_invariants(spark):
 
 
 def test_value_drift_plan_one_corpus_exchange(spark):
-    df = dc.q_value_drift(spark, SF_DIR)
+    df = q_value_drift(spark, SF_DIR)
     plan = _plan(df)
     assert_no_unpartitioned_windows(df)
     # the census is localCheckpoint-materialized, so the plan reads it
@@ -136,7 +137,7 @@ def _literal_image_quality() -> pd.DataFrame:
 def test_image_quality_differential_vs_literal(spark):
     want = _literal_image_quality()
     got = (
-        dc.q_image_quality(spark, SF_DIR)
+        q_image_quality(spark, SF_DIR)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -145,7 +146,7 @@ def test_image_quality_differential_vs_literal(spark):
 
 
 def test_image_quality_invariants(spark):
-    out = dc.q_image_quality(spark, SF_DIR).toPandas()
+    out = q_image_quality(spark, SF_DIR).toPandas()
     assert (out[["h0", "h1", "h2", "h3"]].sum(axis=1) == out["n_pix"]).all()
     assert (out["lum_min"] <= out["lum_max"]).all()
     assert out["lum_max"].le(240).all()  # bytes are mod 241
@@ -154,7 +155,7 @@ def test_image_quality_invariants(spark):
 
 
 def test_image_quality_plan_zero_shuffles(spark):
-    plan = _plan(dc.q_image_quality(spark, SF_DIR))
+    plan = _plan(q_image_quality(spark, SF_DIR))
     assert "Exchange" not in plan, plan
     # two chained Arrow stages: synth + quality (formatted explain
     # names each node twice — once in the tree, once in the details)

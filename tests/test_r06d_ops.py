@@ -4,8 +4,11 @@ tables — Q1-style pricing summary, Q5-topology star join."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import PRICING_CUTOFF
+from tinybrain_spark.driver_contract.tpch import (
+    PRICING_CUTOFF,
+    q_pricing_summary,
+    q_region_revenue,
+)
 
 from .test_plans import SF_DIR, _plan
 
@@ -55,7 +58,7 @@ def _literal_pricing() -> pd.DataFrame:
 def test_pricing_differential_vs_literal(spark):
     want = _literal_pricing()
     got = (
-        dc.q_pricing_summary(spark, SF_DIR)
+        q_pricing_summary(spark, SF_DIR)
         .toPandas()
         .sort_values(["l_returnflag", "l_linestatus"])
         .reset_index(drop=True)
@@ -64,7 +67,7 @@ def test_pricing_differential_vs_literal(spark):
 
 
 def test_pricing_plan_pushdown_one_exchange(spark):
-    plan = _plan(dc.q_pricing_summary(spark, SF_DIR))
+    plan = _plan(q_pricing_summary(spark, SF_DIR))
     # the cutoff predicate reaches the parquet scan
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan, plan
     # one map-side-combinable groupBy: partial agg below the exchange
@@ -111,7 +114,7 @@ def _literal_region_revenue() -> pd.DataFrame:
 def test_region_revenue_differential_vs_literal(spark):
     want = _literal_region_revenue()
     got = (
-        dc.q_region_revenue(spark, SF_DIR)
+        q_region_revenue(spark, SF_DIR)
         .toPandas()
         .sort_values(["r_name", "o_year"])
         .reset_index(drop=True)
@@ -120,7 +123,7 @@ def test_region_revenue_differential_vs_literal(spark):
 
 
 def test_region_revenue_plan_broadcast_dims(spark):
-    plan = _plan(dc.q_region_revenue(spark, SF_DIR))
+    plan = _plan(q_region_revenue(spark, SF_DIR))
     # dimension tables broadcast (region+nation fold into the customer
     # side; supplier broadcasts into the fact chain) — and the
     # same-nation predicate rides a join condition, never a cartesian

@@ -5,8 +5,7 @@ Q10 returned-revenue top-k, Q19 bracket filter."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.tpch import (
     BIG_ORDER_MIN_QTY,
     BRACKETS,
     ORDER_DIST_END,
@@ -17,6 +16,13 @@ from tinybrain_spark.driver_contract import (
     RETURNED_REV_START,
     SHIP_PRIORITY_CUTOFF,
     SHIP_PRIORITY_SEGMENT,
+    q_big_orders,
+    q_bracket_revenue,
+    q_forecast_revenue,
+    q_order_count_dist,
+    q_promo_share,
+    q_returned_revenue,
+    q_ship_priority,
 )
 
 from .test_plans import SF_DIR, _plan
@@ -70,12 +76,12 @@ def _literal_ship_priority() -> pd.DataFrame:
 
 def test_ship_priority_differential_vs_literal(spark):
     want = _literal_ship_priority()
-    got = dc.q_ship_priority(spark, SF_DIR).toPandas()
+    got = q_ship_priority(spark, SF_DIR).toPandas()
     pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()))
 
 
 def test_ship_priority_plan_semi_join_takeordered(spark):
-    plan = _plan(dc.q_ship_priority(spark, SF_DIR))
+    plan = _plan(q_ship_priority(spark, SF_DIR))
     # top-k never materializes a global sort
     assert "TakeOrderedAndProject" in plan, plan
     # the segment filter feeds a LEFT SEMI join (no customer column out)
@@ -109,7 +115,7 @@ def _literal_order_count_dist() -> pd.DataFrame:
 def test_order_count_dist_differential_vs_literal(spark):
     want = _literal_order_count_dist()
     got = (
-        dc.q_order_count_dist(spark, SF_DIR)
+        q_order_count_dist(spark, SF_DIR)
         .toPandas()
         .sort_values("c_count")
         .reset_index(drop=True)
@@ -118,7 +124,7 @@ def test_order_count_dist_differential_vs_literal(spark):
 
 
 def test_order_count_dist_zero_customers_present(spark):
-    got = dc.q_order_count_dist(spark, SF_DIR).toPandas()
+    got = q_order_count_dist(spark, SF_DIR).toPandas()
     # the LEFT join keeps customers with no qualifying order
     assert (got["c_count"] == 0).any()
     cust = pd.read_parquet(f"{SF_DIR}/customer.parquet")
@@ -126,7 +132,7 @@ def test_order_count_dist_zero_customers_present(spark):
 
 
 def test_order_count_dist_plan_aggregate_below_join(spark):
-    plan = _plan(dc.q_order_count_dist(spark, SF_DIR))
+    plan = _plan(q_order_count_dist(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     # the join keeps zero-order customers
     assert "LeftOuter" in tree, tree
@@ -179,7 +185,7 @@ def _literal_big_orders() -> pd.DataFrame:
 def test_big_orders_differential_vs_literal(spark):
     want = _literal_big_orders()
     got = (
-        dc.q_big_orders(spark, SF_DIR)
+        q_big_orders(spark, SF_DIR)
         .toPandas()
         .sort_values("o_orderkey")
         .reset_index(drop=True)
@@ -189,7 +195,7 @@ def test_big_orders_differential_vs_literal(spark):
 
 
 def test_big_orders_plan_having_below_joins(spark):
-    plan = _plan(dc.q_big_orders(spark, SF_DIR))
+    plan = _plan(q_big_orders(spark, SF_DIR))
     # the HAVING filter sits on the aggregate output, before any join
     assert f"> {BIG_ORDER_MIN_QTY}" in plan, plan
     # lineitem scan reads only orderkey + quantity
@@ -225,7 +231,7 @@ def _literal_promo_share() -> pd.DataFrame:
 def test_promo_share_differential_vs_literal(spark):
     want = _literal_promo_share()
     got = (
-        dc.q_promo_share(spark, SF_DIR)
+        q_promo_share(spark, SF_DIR)
         .toPandas()
         .sort_values("ship_month")
         .reset_index(drop=True)
@@ -234,7 +240,7 @@ def test_promo_share_differential_vs_literal(spark):
 
 
 def test_promo_share_plan_broadcast_one_exchange(spark):
-    plan = _plan(dc.q_promo_share(spark, SF_DIR))
+    plan = _plan(q_promo_share(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
     # the only hash exchange is the month groupBy
     assert plan.count("Arguments: hashpartitioning") == 1, plan
@@ -287,12 +293,12 @@ def _literal_returned_revenue() -> pd.DataFrame:
 
 def test_returned_revenue_differential_vs_literal(spark):
     want = _literal_returned_revenue()
-    got = dc.q_returned_revenue(spark, SF_DIR).toPandas()
+    got = q_returned_revenue(spark, SF_DIR).toPandas()
     pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()))
 
 
 def test_returned_revenue_plan_agg_before_customer_join(spark):
-    plan = _plan(dc.q_returned_revenue(spark, SF_DIR))
+    plan = _plan(q_returned_revenue(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan
     # returnflag predicate reaches the lineitem scan
     assert "EqualTo(l_returnflag,R)" in plan, plan
@@ -334,13 +340,13 @@ def _literal_bracket_revenue() -> pd.DataFrame:
 
 def test_bracket_revenue_differential_vs_literal(spark):
     want = _literal_bracket_revenue()
-    got = dc.q_bracket_revenue(spark, SF_DIR).toPandas()
+    got = q_bracket_revenue(spark, SF_DIR).toPandas()
     assert int(got["n_lines"].iloc[0]) > 0  # brackets not vacuous
     pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()))
 
 
 def test_bracket_revenue_plan_broadcast_filtered_part(spark):
-    plan = _plan(dc.q_bracket_revenue(spark, SF_DIR))
+    plan = _plan(q_bracket_revenue(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan
     # the brand/size half of the brackets filters part BELOW the join
@@ -374,13 +380,13 @@ def test_forecast_revenue_differential_vs_literal(spark):
         & (li["l_quantity"] < 24)
     ]
     delta = int((_cents(sel["l_extendedprice"]) * _cents(sel["l_discount"])).sum()) if len(sel) else 0
-    got = dc.q_forecast_revenue(spark, SF_DIR).toPandas()
+    got = q_forecast_revenue(spark, SF_DIR).toPandas()
     assert int(got["n_lines"].iloc[0]) == len(sel) and len(sel) > 0
     assert int(got["revenue_delta_cpct"].iloc[0]) == delta
 
 
 def test_forecast_revenue_plan_full_pushdown(spark):
-    plan = _plan(dc.q_forecast_revenue(spark, SF_DIR))
+    plan = _plan(q_forecast_revenue(spark, SF_DIR))
     # every predicate reaches the parquet scan
     for frag in (
         "GreaterThanOrEqual(l_shipdate",

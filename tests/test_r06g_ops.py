@@ -4,12 +4,14 @@ max-with-ties, Q22-topology anti join + scalar average."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.tpch import (
     IDLE_SINCE,
     SMALL_QTY_BRAND,
     TOP_SUPPLIER_END,
     TOP_SUPPLIER_START,
+    q_idle_rich_customers,
+    q_small_qty_revenue,
+    q_top_supplier,
 )
 
 from .test_plans import SF_DIR, _plan
@@ -49,13 +51,13 @@ def _literal_small_qty() -> pd.DataFrame:
 
 def test_small_qty_differential_vs_literal(spark):
     want = _literal_small_qty()
-    got = dc.q_small_qty_revenue(spark, SF_DIR).toPandas()
+    got = q_small_qty_revenue(spark, SF_DIR).toPandas()
     assert int(got["n_small_lines"].iloc[0]) > 0  # not vacuous
     pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()))
 
 
 def test_small_qty_plan_brand_prunes_both_sides(spark):
-    plan = _plan(dc.q_small_qty_revenue(spark, SF_DIR))
+    plan = _plan(q_small_qty_revenue(spark, SF_DIR))
     # part filters on brand below a broadcast join
     assert "EqualTo(p_brand," in plan, plan
     assert "BroadcastHashJoin" in plan, plan
@@ -99,7 +101,7 @@ def _literal_top_supplier() -> pd.DataFrame:
 def test_top_supplier_differential_vs_literal(spark):
     want = _literal_top_supplier()
     got = (
-        dc.q_top_supplier(spark, SF_DIR)
+        q_top_supplier(spark, SF_DIR)
         .toPandas()
         .sort_values("s_suppkey")
         .reset_index(drop=True)
@@ -109,7 +111,7 @@ def test_top_supplier_differential_vs_literal(spark):
 
 
 def test_top_supplier_plan_no_window_broadcast_max(spark):
-    plan = _plan(dc.q_top_supplier(spark, SF_DIR))
+    plan = _plan(q_top_supplier(spark, SF_DIR))
     # the global max is a broadcast 1-row aggregate, never a window
     assert "Window" not in plan, plan
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
@@ -149,7 +151,7 @@ def _literal_idle_rich() -> pd.DataFrame:
 def test_idle_rich_differential_vs_literal(spark):
     want = _literal_idle_rich()
     got = (
-        dc.q_idle_rich_customers(spark, SF_DIR)
+        q_idle_rich_customers(spark, SF_DIR)
         .toPandas()
         .sort_values("c_nationkey")
         .reset_index(drop=True)
@@ -159,7 +161,7 @@ def test_idle_rich_differential_vs_literal(spark):
 
 
 def test_idle_rich_plan_anti_join_pruned_orders(spark):
-    plan = _plan(dc.q_idle_rich_customers(spark, SF_DIR))
+    plan = _plan(q_idle_rich_customers(spark, SF_DIR))
     assert "LeftAnti" in plan, plan
     # orders scan is date-pruned and reads only the custkey + date
     read = [

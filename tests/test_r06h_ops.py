@@ -5,8 +5,12 @@ production avg kernel."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import LOOP_MAX_PERIOD, LOOP_MAX_REPS
+from tinybrain_spark.driver_contract.media import q_audio_downsample
+from tinybrain_spark.driver_contract.text import (
+    LOOP_MAX_PERIOD,
+    LOOP_MAX_REPS,
+    q_loop_detect,
+)
 
 from .test_plans import SF_DIR, _plan
 
@@ -57,7 +61,7 @@ def _literal_loops() -> pd.DataFrame:
 def test_loop_detect_differential_vs_literal(spark):
     want = _literal_loops()
     got = (
-        dc.q_loop_detect(spark, SF_DIR)
+        q_loop_detect(spark, SF_DIR)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -83,7 +87,7 @@ def test_loop_detect_order_sensitivity(spark):
     with tempfile.TemporaryDirectory() as td:
         df.write.parquet(f"{td}/documents.parquet")
         got = (
-            dc.q_loop_detect(spark, td)
+            q_loop_detect(spark, td)
             .toPandas()
             .sort_values("doc_id")
             .reset_index(drop=True)
@@ -96,14 +100,14 @@ def test_loop_detect_order_sensitivity(spark):
 
 
 def test_loop_detect_plan_zero_exchanges_bounded_splits(spark):
-    plan = _plan(dc.q_loop_detect(spark, SF_DIR))
+    plan = _plan(q_loop_detect(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     # entirely in-row: scan -> project -> filter, never a shuffle
     assert "Exchange" not in tree, tree
     # the split() inlining pathology stays dead: the optimized plan
     # carries a handful of split nodes (project + inferred filter),
     # never one per slice (was 94 before the lambda-bound rewrite)
-    df = dc.q_loop_detect(spark, SF_DIR)
+    df = q_loop_detect(spark, SF_DIR)
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     assert opt.count("split(") <= 4, opt.count("split(")
 
@@ -161,7 +165,7 @@ def _literal_audio() -> pd.DataFrame:
 def test_audio_downsample_differential_vs_literal(spark):
     want = _literal_audio()
     got = (
-        dc.q_audio_downsample(spark, SF_DIR)
+        q_audio_downsample(spark, SF_DIR)
         .toPandas()
         .sort_values(["doc_id", "tier"])
         .reset_index(drop=True)
@@ -173,7 +177,7 @@ def test_audio_downsample_differential_vs_literal(spark):
 
 
 def test_audio_downsample_plan_zero_exchanges(spark):
-    plan = _plan(dc.q_audio_downsample(spark, SF_DIR))
+    plan = _plan(q_audio_downsample(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "Exchange" not in tree, tree
     assert "MapInPandas" in plan, plan

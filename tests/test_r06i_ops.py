@@ -4,8 +4,12 @@ stats from the domain-bounded value census."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import WINSOR_HI_PCT, WINSOR_LO_PCT
+from tinybrain_spark.driver_contract.media import q_image_downsample
+from tinybrain_spark.driver_contract.timeseries import (
+    WINSOR_HI_PCT,
+    WINSOR_LO_PCT,
+    q_winsorized_stats,
+)
 
 from .test_plans import SF_DIR, _plan
 
@@ -53,7 +57,7 @@ def _literal_image() -> pd.DataFrame:
 def test_image_downsample_differential_vs_literal(spark):
     want = _literal_image()
     got = (
-        dc.q_image_downsample(spark, SF_DIR)
+        q_image_downsample(spark, SF_DIR)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -65,7 +69,7 @@ def test_image_downsample_differential_vs_literal(spark):
 
 
 def test_image_downsample_plan_zero_exchanges(spark):
-    plan = _plan(dc.q_image_downsample(spark, SF_DIR))
+    plan = _plan(q_image_downsample(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "Exchange" not in tree, tree
     assert "MapInPandas" in plan, plan
@@ -111,7 +115,7 @@ def _literal_winsor() -> pd.DataFrame:
 def test_winsorized_differential_vs_literal(spark):
     want = _literal_winsor()
     got = (
-        dc.q_winsorized_stats(spark, SF_DIR)
+        q_winsorized_stats(spark, SF_DIR)
         .toPandas()
         .sort_values("event_type")
         .reset_index(drop=True)
@@ -122,7 +126,7 @@ def test_winsorized_differential_vs_literal(spark):
 
 
 def test_winsorized_plan_one_corpus_exchange(spark):
-    plan = _plan(dc.q_winsorized_stats(spark, SF_DIR))
+    plan = _plan(q_winsorized_stats(spark, SF_DIR))
     # the raw events table crosses exactly one exchange (the census
     # groupBy); every later stage runs on domain-bounded census rows
     read = [l for l in plan.splitlines() if "ReadSchema" in l]

@@ -3,8 +3,15 @@ Structured Streaming."""
 
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import IMAGE_GATE_MIN_CONTRAST
+from tinybrain_spark.driver_contract.dedup import (
+    q_dedup_clusters_star,
+    q_dedup_survivors,
+)
+from tinybrain_spark.driver_contract.media import (
+    IMAGE_GATE_MIN_CONTRAST,
+    q_image_quality,
+    q_stream_image_gate,
+)
 
 from .test_plans import SF_DIR
 
@@ -13,7 +20,7 @@ def test_dedup_survivors_consistent_with_cluster_labels(spark):
     """The census must agree with the already-oracle-verified cluster
     table: survivors are exactly the docs that are their own label,
     per source, and every doc is either survivor or dropped."""
-    cc = dc.q_dedup_clusters_star(spark, SF_DIR).toPandas()
+    cc = q_dedup_clusters_star(spark, SF_DIR).toPandas()
     docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")[
         ["doc_id", "source"]
     ]
@@ -28,7 +35,7 @@ def test_dedup_survivors_consistent_with_cluster_labels(spark):
     )
     want["n_dropped"] = want["n_docs"] - want["n_survivors"]
     got = (
-        dc.q_dedup_survivors(spark, SF_DIR)
+        q_dedup_survivors(spark, SF_DIR)
         .toPandas()
         .sort_values("source")
         .reset_index(drop=True)
@@ -45,14 +52,14 @@ def test_stream_image_gate_equals_batch_gate(spark):
     """Drained-stream end state == the batch gate on the same docs
     (the stateless-decode-under-streaming equivalence)."""
     batch = (
-        dc.q_image_quality(spark, SF_DIR)
+        q_image_quality(spark, SF_DIR)
         .where(f"contrast_u >= {IMAGE_GATE_MIN_CONTRAST}")
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
     streamed = (
-        dc.q_stream_image_gate(spark, SF_DIR)
+        q_stream_image_gate(spark, SF_DIR)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)

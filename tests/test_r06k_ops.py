@@ -4,8 +4,14 @@ latency census."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import SHIP_LAG_MAX_DAYS
+from tinybrain_spark.driver_contract.tpch import (
+    SHIP_LAG_MAX_DAYS,
+    q_ship_latency,
+)
+from tinybrain_spark.driver_contract.vectors import (
+    q_ann_nn_bucketed,
+    q_mutual_nn,
+)
 
 from .test_plans import SF_DIR, _plan
 
@@ -14,14 +20,14 @@ def test_mutual_nn_is_reciprocal_subset_of_nn(spark):
     """Every reported pair must be mutually each other's 1-NN, and
     every mutual 1-NN pair must be reported — both directions checked
     against the already-oracle-verified NN table."""
-    nn = dc.q_ann_nn_bucketed(spark, SF_DIR).toPandas()
+    nn = q_ann_nn_bucketed(spark, SF_DIR).toPandas()
     nn_map = dict(zip(nn["vec_id"], nn["nn_id"]))
     want = sorted(
         (a, b)
         for a, b in nn_map.items()
         if nn_map.get(b) == a and a < b
     )
-    got = dc.q_mutual_nn(spark, SF_DIR).toPandas()
+    got = q_mutual_nn(spark, SF_DIR).toPandas()
     got_pairs = sorted(zip(got["vec_a"], got["vec_b"]))
     assert got_pairs == want
     assert len(got_pairs) > 0
@@ -72,7 +78,7 @@ def _literal_ship_latency() -> pd.DataFrame:
 def test_ship_latency_differential_vs_literal(spark):
     want = _literal_ship_latency()
     got = (
-        dc.q_ship_latency(spark, SF_DIR)
+        q_ship_latency(spark, SF_DIR)
         .toPandas()
         .sort_values("o_orderpriority")
         .reset_index(drop=True)
@@ -81,7 +87,7 @@ def test_ship_latency_differential_vs_literal(spark):
 
 
 def test_ship_latency_plan_census_shape(spark):
-    plan = _plan(dc.q_ship_latency(spark, SF_DIR))
+    plan = _plan(q_ship_latency(spark, SF_DIR))
     # one orderkey join; the quantile windows run over the census,
     # never over raw joined lines (the census groupBy sits between)
     read = [l for l in plan.splitlines() if "ReadSchema" in l]

@@ -3,11 +3,15 @@ Q4-topology EXISTS census."""
 
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.tpch import (
     LATE_ORDER_MIN_LAG_DAYS,
     LATE_ORDER_QUARTER_END,
     LATE_ORDER_QUARTER_START,
+    q_late_order_census,
+)
+from tinybrain_spark.driver_contract.vectors import (
+    q_ann_nn_bucketed,
+    q_label_prop,
 )
 
 from .test_plans import SF_DIR, _plan
@@ -16,7 +20,7 @@ from .test_plans import SF_DIR, _plan
 def test_label_prop_majority_vs_literal(spark):
     """Literal recompute from the already-oracle-verified NN table:
     undirected neighbor majority with smallest-label tie-break."""
-    nn = dc.q_ann_nn_bucketed(spark, SF_DIR).toPandas()
+    nn = q_ann_nn_bucketed(spark, SF_DIR).toPandas()
     edges = set()
     for a, b in zip(nn["vec_id"], nn["nn_id"]):
         edges.add((int(a), int(b)))
@@ -33,7 +37,7 @@ def test_label_prop_majority_vs_literal(spark):
     for a, vs in votes.items():
         best = max(vs.items(), key=lambda kv: (kv[1], -kv[0]))
         want[a] = best[0]
-    got = dc.q_label_prop(spark, SF_DIR).toPandas()
+    got = q_label_prop(spark, SF_DIR).toPandas()
     assert len(got) == len(want)
     for _, r in got.iterrows():
         assert r["new_label"] == want[int(r["vec_id"])]
@@ -44,7 +48,7 @@ def test_label_prop_majority_vs_literal(spark):
 
 
 def test_label_prop_plan_no_window(spark):
-    plan = _plan(dc.q_label_prop(spark, SF_DIR))
+    plan = _plan(q_label_prop(spark, SF_DIR))
     # the majority vote is an argmax groupBy, never a window
     assert "Window" not in plan, plan
 
@@ -75,7 +79,7 @@ def test_late_order_census_vs_literal(spark):
         .reset_index()
     )
     got = (
-        dc.q_late_order_census(spark, SF_DIR)
+        q_late_order_census(spark, SF_DIR)
         .toPandas()
         .sort_values("o_orderpriority")
         .reset_index(drop=True)
@@ -87,7 +91,7 @@ def test_late_order_census_vs_literal(spark):
 
 
 def test_late_order_plan_semi_join_pushdown(spark):
-    plan = _plan(dc.q_late_order_census(spark, SF_DIR))
+    plan = _plan(q_late_order_census(spark, SF_DIR))
     assert "LeftSemi" in plan, plan
     assert "GreaterThanOrEqual(o_orderdate" in plan, plan
     # lineitem ships only (orderkey, shipdate)

@@ -3,7 +3,10 @@
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
+from tinybrain_spark.driver_contract.media import (
+    q_image_equalize,
+    q_image_phash,
+)
 
 from .test_plans import SF_DIR, _plan
 
@@ -41,7 +44,7 @@ def _literal_phash() -> pd.DataFrame:
 def test_phash_differential_vs_literal(spark):
     want = _literal_phash()
     got = (
-        dc.q_image_phash(spark, SF_DIR)
+        q_image_phash(spark, SF_DIR)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -93,7 +96,7 @@ def _literal_equalize() -> pd.DataFrame:
 def test_equalize_differential_vs_literal(spark):
     want = _literal_equalize()
     got = (
-        dc.q_image_equalize(spark, SF_DIR)
+        q_image_equalize(spark, SF_DIR)
         .toPandas()
         .sort_values("doc_id")
         .reset_index(drop=True)
@@ -105,7 +108,7 @@ def test_equalize_differential_vs_literal(spark):
 
 
 def test_image_transform_plans_zero_exchanges(spark):
-    for q in (dc.q_image_phash, dc.q_image_equalize):
+    for q in (q_image_phash, q_image_equalize):
         plan = _plan(q(spark, SF_DIR))
         tree = plan.split("\n\n")[0]
         assert "Exchange" not in tree, (q.__name__, tree)

@@ -4,8 +4,11 @@ hash (group-collapsed — the exact-dup/near-dup split)."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import PHASH_MAX_HAMMING
+from tinybrain_spark.driver_contract.media import (
+    PHASH_MAX_HAMMING,
+    q_image_phash,
+    q_phash_dup_pairs,
+)
 
 from .test_plans import SF_DIR
 
@@ -25,7 +28,7 @@ def _bands(h):
 
 
 def test_phash_pairs_literal_and_recall(spark):
-    ph = dc.q_image_phash(spark, SF_DIR).toPandas()
+    ph = q_image_phash(spark, SF_DIR).toPandas()
     groups: dict = {}
     for did, hi, lo in zip(ph["doc_id"], ph["phash_hi"], ph["phash_lo"]):
         k = (int(hi), int(lo))
@@ -43,7 +46,7 @@ def test_phash_pairs_literal_and_recall(spark):
             d = _hamming(ka, kb)
             if d <= PHASH_MAX_HAMMING:
                 want.add((ra, rb, d, len(groups[ka]), len(groups[kb])))
-    got = dc.q_phash_dup_pairs(spark, SF_DIR).toPandas()
+    got = q_phash_dup_pairs(spark, SF_DIR).toPandas()
     got_set = set(
         map(
             tuple,

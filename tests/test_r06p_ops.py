@@ -4,11 +4,11 @@ float parity by construction)."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.vectors import (
     PQ_CENTROIDS,
     PQ_SUBDIM,
     PQ_SUBSPACES,
+    q_pq_encode,
 )
 
 from .test_plans import SF_DIR, _plan
@@ -49,7 +49,7 @@ def _literal_pq() -> pd.DataFrame:
 def test_pq_encode_differential_vs_literal(spark):
     want = _literal_pq()
     got = (
-        dc.q_pq_encode(spark, SF_DIR)
+        q_pq_encode(spark, SF_DIR)
         .toPandas()
         .sort_values("vec_id")
         .reset_index(drop=True)
@@ -60,6 +60,6 @@ def test_pq_encode_differential_vs_literal(spark):
 
 
 def test_pq_encode_plan_zero_exchanges(spark):
-    plan = _plan(dc.q_pq_encode(spark, SF_DIR))
+    plan = _plan(q_pq_encode(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "Exchange" not in tree, tree

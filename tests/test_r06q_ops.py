@@ -4,8 +4,7 @@ scoring path over the float-parity code assignment)."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.vectors import (
     PQ_CENTROIDS,
     PQ_SUBDIM,
     PQ_SUBSPACES,
@@ -13,6 +12,7 @@ from tinybrain_spark.driver_contract import (
     _pq_centroid_num,
     _pq_ilut,
     _pq_query_num,
+    q_pq_search,
 )
 
 from .test_plans import SF_DIR, _plan
@@ -53,7 +53,7 @@ def _literal_adc() -> pd.DataFrame:
 def test_pq_search_differential_vs_literal(spark):
     want = _literal_adc()
     got = (
-        dc.q_pq_search(spark, SF_DIR)
+        q_pq_search(spark, SF_DIR)
         .toPandas()
         .sort_values(["score64", "vec_id"])
         .reset_index(drop=True)
@@ -79,7 +79,7 @@ def test_pq_ilut_is_exactly_64x_float_distance():
 
 
 def test_pq_search_plan_topk_no_exchange(spark):
-    plan = _plan(dc.q_pq_search(spark, SF_DIR))
+    plan = _plan(q_pq_search(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "TakeOrderedAndProject" in tree, tree
     assert "Exchange" not in tree, tree

@@ -4,8 +4,7 @@ share, Q9-topology (minus supplycost) product-line revenue."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.tpch import (
     PROFIT_PART_MARK,
     SHARE_NATION,
     SHARE_PART_TYPE,
@@ -14,6 +13,9 @@ from tinybrain_spark.driver_contract import (
     TRADE_NATION_B,
     TRADE_YEAR_HI,
     TRADE_YEAR_LO,
+    q_market_share,
+    q_nation_trade,
+    q_parttype_profit,
 )
 
 from .test_plans import SF_DIR, _plan
@@ -79,7 +81,7 @@ def test_nation_trade_differential_vs_literal(spark):
     want = _literal_trade(SF01_DIR)
     assert len(want) > 0  # the fixture really exercises both directions
     got = (
-        dc.q_nation_trade(spark, SF01_DIR)
+        q_nation_trade(spark, SF01_DIR)
         .toPandas()
         .sort_values(["supp_nation", "cust_nation", "l_year"])
         .reset_index(drop=True)
@@ -88,7 +90,7 @@ def test_nation_trade_differential_vs_literal(spark):
 
 
 def test_nation_trade_plan_broadcast_and_pushdown(spark):
-    plan = _plan(dc.q_nation_trade(spark, SF_DIR))
+    plan = _plan(q_nation_trade(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "BroadcastHashJoin" in tree, tree
     # the ship-year window reaches the lineitem parquet scan
@@ -143,7 +145,7 @@ def test_market_share_differential_vs_literal(spark):
     want = _literal_share(SF_DIR)
     assert (want["nation_cp"] > 0).any()  # the share is non-degenerate
     got = (
-        dc.q_market_share(spark, SF_DIR)
+        q_market_share(spark, SF_DIR)
         .toPandas()
         .sort_values("o_year")
         .reset_index(drop=True)
@@ -152,7 +154,7 @@ def test_market_share_differential_vs_literal(spark):
 
 
 def test_market_share_plan_semi_join_narrow_probe(spark):
-    plan = _plan(dc.q_market_share(spark, SF_DIR))
+    plan = _plan(q_market_share(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "LeftSemi" in tree, tree  # region filter rides a semi join
     assert "BroadcastHashJoin" in tree, tree
@@ -203,7 +205,7 @@ def test_parttype_profit_differential_vs_literal(spark):
     want = _literal_profit(SF_DIR)
     assert len(want) > 0
     got = (
-        dc.q_parttype_profit(spark, SF_DIR)
+        q_parttype_profit(spark, SF_DIR)
         .toPandas()
         .sort_values(["nation", "o_year"])
         .reset_index(drop=True)
@@ -212,7 +214,7 @@ def test_parttype_profit_differential_vs_literal(spark):
 
 
 def test_parttype_profit_plan_broadcast_dims(spark):
-    plan = _plan(dc.q_parttype_profit(spark, SF_DIR))
+    plan = _plan(q_parttype_profit(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "BroadcastHashJoin" in tree, tree
     # exactly the fact-fact shuffle + final agg exchange family: the

@@ -4,12 +4,14 @@ supplier diversity census, Q21-topology sole-late-supplier blame."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.tpch import (
     DIVERSITY_EXCL_BRAND,
     DIVERSITY_MIN_BAL_C,
     DIVERSITY_SIZES,
     SOLE_LATE_DAYS,
+    q_sole_late_supplier,
+    q_supplier_diversity,
+    q_value_concentration,
 )
 
 from .test_plans import SF_DIR, _plan
@@ -58,7 +60,7 @@ def test_value_concentration_differential_vs_literal(spark):
         want = _literal_concentration(sf_dir)
         assert len(want) > 0  # the 1.5x-mean cut is non-degenerate
         got = (
-            dc.q_value_concentration(spark, sf_dir)
+            q_value_concentration(spark, sf_dir)
             .toPandas()
             .sort_values("l_partkey")
             .reset_index(drop=True)
@@ -80,7 +82,7 @@ def test_value_concentration_scale_free_selectivity():
 
 
 def test_value_concentration_plan_broadcast_scalar(spark):
-    plan = _plan(dc.q_value_concentration(spark, SF_DIR))
+    plan = _plan(q_value_concentration(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     # the global (total, n_parts) rides a broadcast, never a window
     assert "BroadcastNestedLoopJoin" in tree or "BroadcastHashJoin" in tree, tree
@@ -150,7 +152,7 @@ def test_supplier_diversity_differential_vs_literal(spark):
     sup = pd.read_parquet(f"{SF01_DIR}/supplier.parquet")
     assert (_cents(sup["s_acctbal"]) < DIVERSITY_MIN_BAL_C).any()
     got = (
-        dc.q_supplier_diversity(spark, SF01_DIR)
+        q_supplier_diversity(spark, SF01_DIR)
         .toPandas()
         .sort_values(["p_brand", "p_type", "p_size"])
         .reset_index(drop=True)
@@ -159,7 +161,7 @@ def test_supplier_diversity_differential_vs_literal(spark):
 
 
 def test_supplier_diversity_plan_anti_join_and_collapse(spark):
-    plan = _plan(dc.q_supplier_diversity(spark, SF_DIR))
+    plan = _plan(q_supplier_diversity(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "LeftAnti" in tree, tree  # blocklist is an anti join
     assert "BroadcastHashJoin" in tree, tree
@@ -224,7 +226,7 @@ def test_sole_late_differential_vs_literal(spark):
         want = _literal_sole_late(sf_dir)
         assert len(want) > 0  # sole-late blame is non-degenerate
         got = (
-            dc.q_sole_late_supplier(spark, sf_dir)
+            q_sole_late_supplier(spark, sf_dir)
             .toPandas()
             .sort_values("s_suppkey")
             .reset_index(drop=True)
@@ -264,7 +266,7 @@ def test_sole_late_plan_two_level_collapse_no_window(spark):
     # sf0.001 Catalyst broadcasts the tiny orders side, at corpus
     # scale both sides exceed the threshold and it degrades to a
     # shuffle join on the 8-byte orderkey.
-    plan = _plan(dc.q_sole_late_supplier(spark, SF_DIR))
+    plan = _plan(q_sole_late_supplier(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "Window" not in tree, tree
     assert "SortMergeJoin Exists" not in tree, tree  # no correlated

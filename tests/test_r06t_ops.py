@@ -4,11 +4,12 @@ Q20-topology dominant-supplier nested semi chain."""
 import numpy as np
 import pandas as pd
 
-from tinybrain_spark import driver_contract as dc
-from tinybrain_spark.driver_contract import (
+from tinybrain_spark.driver_contract.tpch import (
     CHEAPEST_REGION,
     CHEAPEST_SIZE,
     DOMINANT_PART_MARK,
+    q_cheapest_supplier,
+    q_dominant_supplier,
 )
 
 from .test_plans import SF_DIR, _plan
@@ -70,7 +71,7 @@ def test_cheapest_supplier_differential_vs_literal(spark):
         want = _literal_cheapest(sf_dir)
         assert len(want) > 0
         got = (
-            dc.q_cheapest_supplier(spark, sf_dir)
+            q_cheapest_supplier(spark, sf_dir)
             .toPandas()
             .sort_values(["p_partkey", "s_suppkey"])
             .reset_index(drop=True)
@@ -83,7 +84,7 @@ def test_cheapest_supplier_differential_vs_literal(spark):
 def test_cheapest_supplier_min_is_per_part(spark):
     # every emitted row carries ITS part's minimum — and genuine ties
     # all emerge (the Q2 equality-join-back contract)
-    got = dc.q_cheapest_supplier(spark, SF01_DIR).toPandas()
+    got = q_cheapest_supplier(spark, SF01_DIR).toPandas()
     per_part_min = got.groupby("p_partkey")["unit_price_c"].transform(
         "min"
     )
@@ -91,7 +92,7 @@ def test_cheapest_supplier_min_is_per_part(spark):
 
 
 def test_cheapest_supplier_plan_broadcast_dims(spark):
-    plan = _plan(dc.q_cheapest_supplier(spark, SF_DIR))
+    plan = _plan(q_cheapest_supplier(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "BroadcastHashJoin" in tree, tree
     assert "Window" not in tree, tree
@@ -146,7 +147,7 @@ def test_dominant_supplier_differential_vs_literal(spark):
         want = _literal_dominant(sf_dir)
         assert len(want) > 0  # the 2x-mean cut is non-degenerate
         got = (
-            dc.q_dominant_supplier(spark, sf_dir)
+            q_dominant_supplier(spark, sf_dir)
             .toPandas()
             .sort_values("s_suppkey")
             .reset_index(drop=True)
@@ -157,7 +158,7 @@ def test_dominant_supplier_differential_vs_literal(spark):
 
 
 def test_dominant_supplier_plan_collapse_before_joinback(spark):
-    plan = _plan(dc.q_dominant_supplier(spark, SF_DIR))
+    plan = _plan(q_dominant_supplier(spark, SF_DIR))
     tree = plan.split("\n\n")[0]
     assert "BroadcastHashJoin" in tree, tree
     assert "Window" not in tree, tree

@@ -25,7 +25,7 @@ touches the int64 sign bit in either engine.
 
 Reference analog: none (tinybrain has no membership structures); this
 generalizes the broadcast LEFT SEMI decontamination join
-(driver_contract.q_decontaminate) to a constant-size sketch.
+(driver_contract.dedup.q_decontaminate) to a constant-size sketch.
 """
 
 from __future__ import annotations

@@ -250,7 +250,7 @@ def cms_cells(df: DataFrame, token_col: str = "tokens",
     fans out to its ``depth`` (row, bucket) cells IN-ROW and collapses
     through one map-side-combinable groupBy onto a table bounded by
     ``depth * width`` rows regardless of input volume.  Same salted-md5
-    bucket family as driver_contract.q_cms_heavy."""
+    bucket family as driver_contract.text.q_cms_heavy."""
 
     def bucket(col, row: int):
         return (
