@@ -318,17 +318,7 @@ def _rows() -> list[Row]:
         ("q_token_count_bpe", text.q_token_count_bpe, text._TOKEN_COUNT_BPE),
         ("q_running_sum", timeseries.q_running_sum, timeseries._RUNNING_SUM),
         ("q_avg_rollup_t2", tiers._pool_query("avg", 4, 2, False), tiers._AVG_T2),
-        (
-            "q_avg_rollup_w8",
-            tiers._pool_query("avg", 8, 1, False),
-            sequences.SEQ_CTE
-        + """
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       CAST(pos // 8 AS BIGINT) AS pos,
-       CAST(sum(tok) // 8 AS BIGINT) AS token
-FROM seq GROUP BY user_id, pos // 8
-""",
-        ),
+        ("q_avg_rollup_w8", tiers._pool_query("avg", 8, 1, False), tiers._AVG_W8),
         (
             "q_avg_sparse_t5",
             tiers._long_pool_query("avg", 4, 5, True, sequences.LONG_UNIT),
@@ -339,32 +329,11 @@ FROM seq GROUP BY user_id, pos // 8
             tiers._long_pool_query("avg", 8, 2, True, sequences.W8_UNIT),
             tiers._AVG_SPARSE_W8_T2,
         ),
-        (
-            "q_avg_rollup_w2",
-            tiers._pool_query("avg", 2, 1, False),
-            sequences.SEQ_CTE + """
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       CAST(pos // 2 AS BIGINT) AS pos,
-       CAST(sum(tok) // 2 AS BIGINT) AS token
-FROM seq GROUP BY user_id, pos // 2
-""",
-        ),
-        # sparse pair mode: first nonzero of (a, b), else 0
+        ("q_avg_rollup_w2", tiers._pool_query("avg", 2, 1, False), tiers._AVG_W2),
         (
             "q_mode_sparse_w2",
             tiers._pool_query("mode", 2, 1, True),
-            sequences.SEQ_CTE + """
-, win AS (
-  SELECT user_id, pos // 2 AS opos,
-         max(CASE WHEN pos % 2 = 0 THEN stok END) AS a,
-         max(CASE WHEN pos % 2 = 1 THEN stok END) AS b
-  FROM seq GROUP BY user_id, pos // 2
-)
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       CAST(opos AS BIGINT) AS pos,
-       CAST(CASE WHEN a <> 0 THEN a ELSE b END AS BIGINT) AS token
-FROM win
-""",
+            tiers._MODE_SPARSE_W2,
         ),
         ("q_mode_rollup_t2", tiers._pool_query("mode", 4, 2, False), tiers._MODE_T2),
         ("q_tile_avg_2d_t2", tiers._tile_query("avg", 2), tiers._TILE_AVG_T2),

@@ -189,6 +189,34 @@ SELECT CAST(user_id AS BIGINT) AS user_id,
 FROM seq WHERE pos % 4 = 0
 """
 
+_AVG_W8 = SEQ_CTE + """
+SELECT CAST(user_id AS BIGINT) AS user_id,
+       CAST(pos // 8 AS BIGINT) AS pos,
+       CAST(sum(tok) // 8 AS BIGINT) AS token
+FROM seq GROUP BY user_id, pos // 8
+"""
+
+_AVG_W2 = SEQ_CTE + """
+SELECT CAST(user_id AS BIGINT) AS user_id,
+       CAST(pos // 2 AS BIGINT) AS pos,
+       CAST(sum(tok) // 2 AS BIGINT) AS token
+FROM seq GROUP BY user_id, pos // 2
+"""
+
+# sparse pair mode: first nonzero of (a, b), else 0
+_MODE_SPARSE_W2 = SEQ_CTE + """
+, win AS (
+  SELECT user_id, pos // 2 AS opos,
+         max(CASE WHEN pos % 2 = 0 THEN stok END) AS a,
+         max(CASE WHEN pos % 2 = 1 THEN stok END) AS b
+  FROM seq GROUP BY user_id, pos // 2
+)
+SELECT CAST(user_id AS BIGINT) AS user_id,
+       CAST(opos AS BIGINT) AS pos,
+       CAST(CASE WHEN a <> 0 THEN a ELSE b END AS BIGINT) AS token
+FROM win
+"""
+
 # -- float tiers + non-power-of-two windows (engine paths) -----------------
 
 
