@@ -32,7 +32,7 @@ from . import (
 )
 
 Builder = Callable[[SparkSession, str], DataFrame]
-Row = tuple[str, Builder, "str | None"]
+Row = tuple[str, Builder, str | None]
 
 
 def build_table(rows: Iterable[Row]) -> tuple[Row, ...]:
