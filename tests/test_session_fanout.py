@@ -6,6 +6,7 @@ scan unit) and scale-adaptive: wide layouts and small inputs keep
 their plans byte-identical to the pre-r06 shape.
 """
 
+import logging
 import os
 
 import pyarrow as pa
@@ -79,3 +80,47 @@ def test_fanout_rows_match_plain_read(spark, tmp_path):
     fan = load_table(spark, sf, "documents", fanout_on=["doc_id"],
                      fanout_min_rows=10)
     assert sorted(r.doc_id for r in fan.collect()) == list(range(500))
+
+
+def test_layout_probe_is_memoized_per_listing(spark, tmp_path, monkeypatch):
+    sf = str(tmp_path / "sf")
+    path = os.path.join(sf, "documents.parquet")
+    _write(path, 100)
+    opened = []
+    real = pq.ParquetFile
+
+    def counting(f, *a, **kw):
+        opened.append(f)
+        return real(f, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+
+    def load():
+        return load_table(spark, sf, "documents", fanout_on=["doc_id"],
+                          fanout_min_rows=10)
+
+    load()
+    assert len(opened) == 1
+    load()
+    assert len(opened) == 1  # same listing: no footer opened again
+    _write(path, 50)  # rewritten table (new size): probed again
+    load()
+    assert len(opened) == 2
+
+
+def test_layout_probe_without_footer_warns_once(tmp_path, caplog):
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-00000.parquet").write_bytes(b"not parquet")
+    paths = ["s3a://bucket/sf/documents.parquet",  # remote: nothing local
+             str(tmp_path / "empty"),  # empty glob
+             str(bad)]  # unreadable footer
+    with caplog.at_level(logging.WARNING, logger="tinybrain_spark.session"):
+        for _ in range(2):
+            for p in paths:
+                assert _parquet_layout(p) == (1 << 30, 0)
+    warned = [r.getMessage() for r in caplog.records
+              if "no parquet footer" in r.getMessage()]
+    assert len(warned) == len(paths), warned
+    for p in paths:
+        assert sum(p in m for m in warned) == 1, (p, warned)

@@ -10,6 +10,7 @@ from tinybrain_spark.aggregates import aggregate_batch
 from tinybrain_spark.catalog import Catalog
 from tinybrain_spark.datagen import generate
 from tinybrain_spark.streaming import (
+    drain,
     run_incremental_stream,
     windowed_aggregate,
     with_event_time,
@@ -26,19 +27,6 @@ def seq_dir(spark, tmp_path_factory):
     return path
 
 
-def _drain(q, timeout=300):
-    """awaitTermination with the timeout actually CHECKED — a stream
-    that fails to drain must fail loudly here, not as a confusing
-    partial-output set mismatch downstream (and must not keep running
-    against the session-scoped Spark fixture)."""
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise AssertionError(
-            f"stream did not drain within {timeout}s — refusing to "
-            "read a partial end state"
-        )
-
-
 def _state(df):
     return {
         (r["source"], r["time_bucket"]): (
@@ -52,7 +40,7 @@ def test_incremental_stream_equals_batch(spark, seq_dir, workdir):
     q = run_incremental_stream(
         spark, seq_dir, workdir, table="cs", max_files_per_trigger=2
     )
-    _drain(q)
+    drain(q, "stream", 300)
     result = Catalog(spark, workdir).read("cs")
     batch = aggregate_batch(spark.read.parquet(seq_dir))
     assert _state(result) == _state(batch)
@@ -62,10 +50,10 @@ def test_stream_resume_is_exactly_once(spark, seq_dir, workdir):
     """Re-running the drained stream with the same checkpoint must not
     double-count anything."""
     q = run_incremental_stream(spark, seq_dir, workdir, table="cs2")
-    _drain(q)
+    drain(q, "stream", 300)
     first = _state(Catalog(spark, workdir).read("cs2"))
     q2 = run_incremental_stream(spark, seq_dir, workdir, table="cs2")
-    _drain(q2)
+    drain(q2, "stream", 300)
     second = _state(Catalog(spark, workdir).read("cs2"))
     assert first == second
 
@@ -94,7 +82,7 @@ def test_windowed_aggregate_streams(spark, seq_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q)
+    drain(q, "stream", 300)
     got = _state(spark.sql("SELECT * FROM win_agg"))
     want = _state(aggregate_batch(spark.read.parquet(seq_dir)))
     assert got == want
@@ -113,7 +101,7 @@ def test_stateful_running_rollup(spark, seq_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q)
+    drain(q, "stream", 300)
     # last emitted row per source == full batch totals
     rows = spark.sql(
         """SELECT source, n_docs, n_points, token_sum FROM (
@@ -156,7 +144,7 @@ def test_stream_rollup_tier_equals_batch(spark, seq_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q)
+    drain(q, "stream", 300)
     got = {
         r["doc_id"]: (tuple(r["tokens"]), r["n_tok"])
         for r in spark.sql("SELECT doc_id, tokens, n_tok FROM stream_tier")
@@ -200,7 +188,7 @@ def test_stream_dedup_drops_reingested_duplicates(spark, seq_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q)
+    drain(q, "stream", 300)
     got = spark.sql("SELECT fingerprint FROM dedup_stream")
     want = (
         base.withColumn(
@@ -267,7 +255,7 @@ def test_session_window_stream_equals_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q, 120)
+    drain(q, "stream", 120)
     got = {
         (r["user_id"], r["started_at"]): (r["n_events"], r["duration_s"])
         for r in spark.table("sess_sw").collect()
@@ -287,7 +275,7 @@ def test_cms_stream_equals_batch_and_stays_bounded(spark, seq_dir, tmp_path):
     q = run_cms_stream(
         spark, seq_dir, wd, table="cms", max_files_per_trigger=2
     )
-    _drain(q)
+    drain(q, "stream", 300)
     stored = Catalog(spark, wd).read("cms")
     batch = cms_cells(spark.read.parquet(seq_dir))
     got = {(r.r, r.b): r.c for r in stored.collect()}
@@ -302,11 +290,11 @@ def test_cms_stream_resume_no_double_count(spark, seq_dir, tmp_path):
     from tinybrain_spark.streaming import cms_cells, run_cms_stream
 
     wd = str(tmp_path / "wh")
-    _drain(run_cms_stream(spark, seq_dir, wd, table="cms"))
+    drain(run_cms_stream(spark, seq_dir, wd, table="cms"), "stream", 300)
     first = {
         (r.r, r.b): r.c for r in Catalog(spark, wd).read("cms").collect()
     }
-    _drain(run_cms_stream(spark, seq_dir, wd, table="cms"))
+    drain(run_cms_stream(spark, seq_dir, wd, table="cms"), "stream", 300)
     again = {
         (r.r, r.b): r.c for r in Catalog(spark, wd).read("cms").collect()
     }
@@ -411,7 +399,7 @@ def test_correction_stream_end_state_equals_batch(spark, seq_dir, workdir):
         spark, ops_dir, workdir, raw_table="rawc", cagg_table="caggc",
         max_files_per_trigger=1,
     )
-    _drain(q, 600)
+    drain(q, "stream", 600)
     want_raw = base.where(~kill)
     got_raw = Catalog(spark, workdir).read("rawc")
     assert _state(aggregate_batch(got_raw)) == _state(
@@ -473,7 +461,7 @@ def test_attribution_stream_multibatch_time_ordered(spark, tmp_path):
         str(tmp_path / "ckpt"),
         max_files_per_trigger=1,
     )
-    _drain(q)
+    drain(q, "stream", 300)
     got = {
         (r["purchase_id"], r["click_id"])
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
@@ -512,7 +500,7 @@ def test_alert_episode_stream_state_survives_batches(spark, tmp_path):
         spark, hot_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
         threshold=4, max_files_per_trigger=1,
     )
-    _drain(q)
+    drain(q, "stream", 300)
     got = {
         (r["source"], r["start_tb"], r["end_tb"], r["n_hours"],
          r["peak_n"], r["total_n"])

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .partitioning import with_salt
+from .session import pin
 
 AGG_KEY = ("source", "time_bucket")
 
@@ -194,7 +195,7 @@ def refresh_invalidated(
         merged = fresh
     # the merged state is cagg-sized (small); pin it so the
     # present-source probe and the write don't recompute the plan
-    merged = merged.localCheckpoint()
+    merged = pin(merged)
     present = {
         r["source"] for r in merged.select("source").distinct().collect()
     }

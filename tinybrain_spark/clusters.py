@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import pin
+
 
 class ConvergenceError(RuntimeError):
     """Label propagation exhausted max_iter without converging."""
@@ -58,13 +60,11 @@ def connected_components(
     sym = sym.repartition("src").persist()
     sym.count()
 
-    # localCheckpoint (not just persist): each round's plan must be CUT,
+    # pin (not just persist): each round's plan must be CUT,
     # or the iterative lineage grows a tree that eventually OOMs the
     # driver just STRINGIFYING the plan (observed at ~10 rounds on the
     # sf0.1 graph) — the standard Spark iterative-algorithm requirement
-    labels = nodes.select(
-        F.col("node"), F.col("node").alias("label")
-    ).localCheckpoint()
+    labels = pin(nodes.select(F.col("node"), F.col("node").alias("label")))
     # labels only ever decrease, so sum(label) is a strictly-decreasing
     # convergence witness: one cheap aggregate per round instead of a
     # changed-rows join
@@ -76,11 +76,10 @@ def connected_components(
             sym.join(labels, sym.src == labels.node)
             .select(F.col("dst").alias("node"), "label")
         )
-        new_labels = (
+        new_labels = pin(
             labels.unionByName(neighbor)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint()
         )
         new_sum = new_labels.agg(F.sum("label")).collect()[0][0]
         labels.unpersist()
@@ -142,9 +141,9 @@ def connected_components_star(
     mode, unlike a sum).  The converged graph is a forest of stars
     rooted at each component minimum, so labels are one left join.
     """
-    e = _canonical(
+    e = pin(_canonical(
         edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    ).localCheckpoint()
+    ))
 
     def fingerprint(df: DataFrame) -> tuple:
         row = df.agg(
@@ -166,20 +165,20 @@ def connected_components_star(
             .agg(F.min("v").alias("mv"))
             .select("u", F.least("mv", F.col("u")).alias("m"))
         )
-        large = _canonical(
+        large = pin(_canonical(
             sym.where(F.col("v") > F.col("u"))
             .join(m_large, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        ).localCheckpoint()
+        ))
 
         # canonical edges already orient child > parent, so N<(u) is
         # exactly large's v-side for each u
         m_small = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = _canonical(
+        small = pin(_canonical(
             large.join(m_small, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(m_small.select("u", F.col("m").alias("v")))
-        ).localCheckpoint()
+        ))
 
         e = small
         cur = fingerprint(e)

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, pin
 from .sequences import (
     SOURCE_OVERLAP_MAX,
     _KMV_K,
@@ -623,14 +623,14 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes with the identical recipe, so even a 56-bit collision
     behaves the same on both engines.
 
-    The capped shingle table is localCheckpoint-pinned (the
+    The capped shingle table is pinned (``session.pin``; the
     q_forecast_baseline precedent): without it, Catalyst recomputes
     the whole scan->explode->hash->two-window pipeline FOUR times (the
     a/b join sides plus both size branches — no ReusedExchange, their
     pushed filters differ), which at 100 TB quadruples the dominant
     stage; the checkpoint is a linear 16-byte-per-row (doc_id, f8)
     table that every branch then re-reads."""
-    shingles = _ngram_rare_shingles(spark, sf_dir).localCheckpoint()
+    shingles = pin(_ngram_rare_shingles(spark, sf_dir))
     sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = shingles.alias("a")
     b = shingles.alias("b")
@@ -701,12 +701,12 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to q_ngram_jaccard — the same DF-capped
     (<= _NGRAM_DF_CAP) 56-bit-fingerprint shingle stage
-    (localCheckpoint-pinned so the join sides and the size aggregate
+    (pinned so the join sides and the size aggregate
     read one materialized 16-byte-per-row table), a CAP^2-bounded
     self-join on 8-byte keys, and broadcast size lookups.  Only the
     final scoring expression differs: inter*1000 DIV least(na, nb)
     instead of the symmetric union denominator."""
-    shingles = _ngram_rare_shingles(spark, sf_dir).localCheckpoint()
+    shingles = pin(_ngram_rare_shingles(spark, sf_dir))
     sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = shingles.alias("a")
     b = shingles.alias("b")
@@ -1417,18 +1417,17 @@ def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col(f"a{i}") == F.col(f"b{i}")).cast("long")
         for i in range(_MINHASH_K)
     )
-    out = (
+    # eager pin: materializes the (small) verified-pair set NOW so the
+    # signature cache can be released before we return — a bare
+    # persist() here leaked three cached signature DataFrames per oracle
+    # run (this query is also the input of q_dedup_clusters and
+    # q_unique_docs_anti)
+    out = pin(
         cand.join(a, "doc_a")
         .join(b, "doc_b")
         .withColumn("n_agree", agree)
         .where(F.col("n_agree") >= _MINHASH_AGREE)
         .select("doc_a", "doc_b", "n_agree")
-        # eager localCheckpoint: materializes the (small) verified-pair
-        # set NOW so the signature cache can be released before we
-        # return — a bare persist() here leaked three cached signature
-        # DataFrames per oracle run (this query is also the input of
-        # q_dedup_clusters and q_unique_docs_anti)
-        .localCheckpoint()
     )
     sig.unpersist()
     return out
@@ -1591,7 +1590,7 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the cluster computation dominates and is the already-
     proven O(log^2 n) star path (clusters.connected_components_star,
-    localCheckpoint per round); the census adds ONE join of the (doc,
+    one pin per round); the census adds ONE join of the (doc,
     label) table to the (doc, source) projection on the 8-byte doc_id
     and a map-side-combinable source groupBy.  Oracle: the identical
     recursive CTE extended with the source rollup (quadratic per
@@ -1655,13 +1654,13 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative to the corpus, join on 16-byte composite keys, and the
     final groupBy is <= 6 decile rows.  The signature subplan is
     persisted across the band self-join's two sides and released after
-    an eager localCheckpoint (the q_minhash_verified_pairs pattern)."""
+    an eager pin (the q_minhash_verified_pairs pattern)."""
     truth = q_ngram_jaccard(spark, sf_dir)
     sig = q_minhash_signature(spark, sf_dir).persist()
     cand = _minhash_pairs_from(sig).withColumn(
         "hit", F.lit(1).cast("long")
     )
-    out = (
+    out = pin(
         truth.join(cand, ["doc_a", "doc_b"], "left")
         .groupBy(F.expr("jac_pct DIV 10").cast("long").alias("jac_decile"))
         .agg(
@@ -1678,7 +1677,6 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("recall_ppt"),
         )
-        .localCheckpoint()
     )
     sig.unpersist()
     return out
@@ -1792,7 +1790,7 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("jac_pm"),
         )
     )
-    out = jac.groupBy("n_agree").agg(
+    out = pin(jac.groupBy("n_agree").agg(
         F.count("*").cast("long").alias("n_pairs"),
         F.expr("sum(jac_pm) DIV count(*)").cast("long").alias(
             "mean_jac_permille"
@@ -1808,7 +1806,7 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mean_jac_permille",
         "min_jac_permille",
         "max_jac_permille",
-    ).localCheckpoint()
+    ))
     sig.unpersist()
     return out
 

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..prefix import running_mins
-from ..session import load_table
+from ..session import load_table, pin
 from .sequences import DAY_US, WEEK_S, _KMV_K
 
 
@@ -445,13 +445,13 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow batch, the deterministic mode (the multi-batch
     watermark path is pinned separately in test_streaming.py with
     forced file modtimes)."""
-    import shutil
     import tempfile
 
-    from ..streaming import run_attribution_stream
+    from ..streaming import drain, run_attribution_stream
 
-    work = tempfile.mkdtemp(prefix="tb_attr_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="tb_attr_", ignore_cleanup_errors=True
+    ) as work:
         src = f"{work}/events.parquet"
         (
             load_table(spark, sf_dir, "events")
@@ -459,22 +459,15 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(4)
             .write.parquet(src)
         )
-        q = run_attribution_stream(
-            spark, src, f"{work}/out", f"{work}/ckpt"
+        drain(
+            run_attribution_stream(spark, src, f"{work}/out", f"{work}/ckpt"),
+            "stream",
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                "stream did not drain within 600s — refusing to "
-                "return a partial end state"
-            )
         pairs = spark.read.parquet(f"{work}/out").select(
             F.col("purchase_id").cast("long").alias("purchase_id"),
             F.col("click_id").cast("long").alias("click_id"),
         )
-        return pairs.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return pin(pairs)
 
 
 _STREAM_ATTRIBUTION = """
@@ -538,7 +531,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins reassemble — same ranks, same quartiles, ~40% less wall.
     from concurrent.futures import ThreadPoolExecutor
 
-    stats_c = stats.localCheckpoint()
+    stats_c = pin(stats)
 
     def _rank(metric: str, out: str):
         return global_rank(
@@ -640,7 +633,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     teleport term only (the standard simple variant; their outflow
     leak is documented, not redistributed).
 
-    Scale shape: edges materialize once behind a localCheckpoint (the
+    Scale shape: edges materialize once behind a pin (the
     iteration reuses them without recomputing the lag windows), each
     round is one join keyed on src (both sides hash-partitioned on
     the same key — exchange reuse) + one groupBy(dst) of per-edge
@@ -653,11 +646,10 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
     ).withColumn("day", F.expr(f"us DIV {DAY_US}"))
     w = Window.partitionBy("stream", "day").orderBy("us", "event_id")
-    edges = (
+    edges = pin(  # pin once; 3 rounds reuse without recompute
         ev.withColumn("src", F.lag("user_id").over(w))
         .where(F.col("src").isNotNull())
         .select("src", F.col("user_id").alias("dst"))
-        .localCheckpoint()  # pin once; 3 rounds reuse without recompute
     )
     # r06: the node table (union+distinct, 2 exchanges) and the degree
     # aggregate were un-pinned subtrees re-evaluated by EVERY power
@@ -668,12 +660,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nodes, which by construction never match an edge src, so
     # r DIV d never sees the NULL.
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
-    nodes = (
+    nodes = pin(  # (u, d) pinned once; 3 rounds reuse it
         edges.select(F.col("src").alias("u"))
         .union(edges.select(F.col("dst").alias("u")))
         .distinct()
         .join(deg.withColumnRenamed("src", "u"), "u", "left")
-        .localCheckpoint()  # (u, d) pinned once; 3 rounds reuse it
     )
     ranks = nodes.select("u", "d", F.lit(PR_SCALE).cast("long").alias("r"))
     teleport = (15 * PR_SCALE) // 100
@@ -1426,7 +1417,7 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).cast("long")
     )
-    sym = raw.select("x", guard.alias("y")).distinct().localCheckpoint()
+    sym = pin(raw.select("x", guard.alias("y")).distinct())
     deg = (
         sym.select(F.col("x").alias("u"))
         .unionAll(sym.select(F.col("y").alias("u")))
@@ -1434,7 +1425,7 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("d"))
         .select("u", (F.col("d") * bound + F.col("u")).alias("rk"))
     )
-    oriented = (
+    oriented = pin(
         sym.join(deg.select(F.col("u").alias("x"), F.col("rk").alias("rkx")), "x")
         .join(deg.select(F.col("u").alias("y"), F.col("rk").alias("rky")), "y")
         .select(
@@ -1448,7 +1439,6 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.col("x"))
             .alias("hi"),
         )
-        .localCheckpoint()
     )
     e1 = oriented.select(
         F.col("lo").alias("a"),

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, pin
 
 
 def q_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -390,13 +390,14 @@ def q_stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (parquet sink, availableNow drain, exactly-once checkpoint).  The
     end state must value-hash-equal the batch gate: the image-quality
     oracle with the same WHERE, which no streaming state can fudge."""
-    import shutil
     import tempfile
 
     from ..multimodal import image_quality, synth_pgm_payloads
+    from ..streaming import drain
 
-    work = tempfile.mkdtemp(prefix="tb_stream_imggate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="tb_stream_imggate_", ignore_cleanup_errors=True
+    ) as work:
         ids_dir = f"{work}/ids"
         (
             load_table(spark, sf_dir, "documents")
@@ -413,26 +414,17 @@ def q_stream_image_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("contrast_u") >= IMAGE_GATE_MIN_CONTRAST
         )
         out_dir = f"{work}/out"
-        q = (
+        drain(
             gated.writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", f"{work}/ckpt")
             .trigger(availableNow=True)
-            .start()
+            .start(),
+            "image-gate stream",
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                "image-gate stream did not drain within 600s — "
-                "refusing to return a partial end state"
-            )
-        rows = spark.read.parquet(out_dir)
         # the sink lives in a temp dir we are about to delete — pin
-        # the rows in executor memory before cleanup
-        rows = spark.createDataFrame(rows.collect(), rows.schema)
-        return rows
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        # the rows before cleanup
+        return pin(spark.read.parquet(out_dir))
 
 
 _STREAM_IMAGE_GATE = f"""
@@ -581,14 +573,13 @@ def q_phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id")
     )
-    g = (
+    g = pin(
         image_phash(synth_pgm_payloads(docs))
         .groupBy("phash_hi", "phash_lo")
         .agg(
             F.count("*").cast("long").alias("n_docs"),
             F.min("doc_id").cast("long").alias("rep"),
         )
-        .localCheckpoint()
     )
     bands = g.select(
         "phash_hi",

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..prefix import running_mins, running_sums
-from ..session import load_table
+from ..session import load_table, pin
 from .sequences import ACF_MAX_LAG, ACF_SPINE_MAX, _hourly_counts
 
 
@@ -758,16 +758,14 @@ def q_stream_alert_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     episode; the closed episodes landed exactly-once under the
     streaming checkpoint must value-hash-equal the batch islands
     oracle (_ALERT_EPISODES)."""
-    import shutil
     import tempfile
 
-    from ..streaming import run_alert_episode_stream
+    from ..streaming import drain, run_alert_episode_stream
 
-    hot = (
+    hot = pin(
         _hourly_counts(spark, sf_dir)
         .where(F.col("n") >= ALERT_HOT)
         .select("source", "tb", "n")
-        .localCheckpoint()
     )
     lo, hi = hot.agg(F.min("tb"), F.max("tb")).first()
     if lo is None:  # no hot hours at this scale: no episodes
@@ -782,8 +780,9 @@ def q_stream_alert_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(hi + 2).cast("long").alias("tb"),
         F.lit(0).cast("long").alias("n"),
     )
-    work = tempfile.mkdtemp(prefix="tb_alert_stream_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="tb_alert_stream_", ignore_cleanup_errors=True
+    ) as work:
         hot_dir = f"{work}/hot"
         # phase files are ordered by modification time (the same
         # FileStreamSource contract run_attribution_stream pins)
@@ -795,22 +794,17 @@ def q_stream_alert_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
             hot_dir, mode="append"
         )
         sentinel.coalesce(1).write.parquet(hot_dir, mode="append")
-        q = run_alert_episode_stream(
-            spark, hot_dir, f"{work}/out", f"{work}/ckpt",
-            threshold=ALERT_HOT, max_files_per_trigger=1,
+        drain(
+            run_alert_episode_stream(
+                spark, hot_dir, f"{work}/out", f"{work}/ckpt",
+                threshold=ALERT_HOT, max_files_per_trigger=1,
+            ),
+            "alert episode stream",
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                "alert episode stream did not drain within 600s — "
-                "refusing to return a partial episode set"
-            )
-        return spark.read.parquet(f"{work}/out").select(
+        return pin(spark.read.parquet(f"{work}/out").select(
             "source", "start_tb", "end_tb", "n_hours", "peak_n",
             "total_n",
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ))
 
 
 def q_slo_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -882,7 +876,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two passes of the SAME exact-quantile machinery, both over the
     VALUE HISTOGRAM: events collapse to (source, day, v, cnt) once
     (the only event-wide exchange) and that histogram is
-    localCheckpoint-pinned, so the median pass, the deviation
+    pinned, so the median pass, the deviation
     histogram (|v - median| re-binned by a histogram-sized groupBy,
     counts summed — never a second pass over raw events), the MAD
     pass, and the final outlier count all read the pinned metadata.
@@ -890,9 +884,9 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast joins.  Pure integers throughout; ties resolve
     identically on both engines because the quantile definition is
     the same explicit formula."""
-    hist = _day_value_hist(
+    hist = pin(_day_value_hist(
         _day_value_cents(spark, sf_dir)
-    ).localCheckpoint()
+    ))
     med = _exact_day_quantiles(hist).select(
         "source", "day", F.col("p50_c").alias("med")
     )
@@ -1412,10 +1406,10 @@ def q_forecast_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     a gap is "no forecast", not "forecast 0".  All arithmetic exact
     int64; MAE milli-digits via DIV (truncating on both engines;
     sum_abs_err >= 0 so trunc == floor).  The hourly aggregate is
-    localCheckpoint-pinned so events is scanned ONCE — both join
+    pinned so events is scanned ONCE — both join
     sides read the materialized table (zero parquet scans survive
     into the final plan, pinned)."""
-    h = _hourly_counts(spark, sf_dir).localCheckpoint()
+    h = pin(_hourly_counts(spark, sf_dir))
     prev = h.select(
         "source",
         (F.col("tb") + FORECAST_SEASON_H).alias("tb"),

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, pin
 from .sequences import (
     SOURCE_OVERLAP_MAX,
     _BPE_PATTERN,
@@ -1126,7 +1126,7 @@ def _mg_candidate_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate words; grouping on the candidate word (NULL for
     non-candidates) yields the exact per-candidate counts AND, summed,
     the total word count, from the same map-side-combinable aggregate
-    (<= |cands|+1 rows).  Lazy — q_heavy_hitters_mg localCheckpoints
+    (<= |cands|+1 rows).  Lazy — q_heavy_hitters_mg pins
     it so the total and the candidate rows read one materialization;
     kept separate so the plan pin (tests/test_plans.py: no keyed
     exchange below MapInPandas) can still see the pass-1 subtree."""
@@ -1161,7 +1161,7 @@ def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle = the definition itself: exact counts filtered at the same
     bar."""
-    agg = _mg_candidate_counts(spark, sf_dir).localCheckpoint()
+    agg = pin(_mg_candidate_counts(spark, sf_dir))
     total = agg.agg(F.sum("n").cast("long").alias("n_words"))
     counted = agg.where(F.col("word").isNotNull())
     return (

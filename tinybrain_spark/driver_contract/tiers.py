@@ -12,7 +12,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, pin
 from ..udfs import pool_tier
 from .sequences import (
     DAY_US,
@@ -328,19 +328,25 @@ def _events_as_sequences(spark, sf_dir) -> DataFrame:
     )
 
 
+def _cagg_state(df: DataFrame) -> DataFrame:
+    """The continuous-aggregate state columns, cast as the oracles type
+    them."""
+    return df.select(
+        F.col("source"),
+        *[
+            F.col(c).cast("long").alias(c)
+            for c in (
+                "time_bucket", "n_docs", "n_points",
+                "token_sum", "token_min", "token_max",
+            )
+        ],
+    )
+
+
 def q_continuous_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..aggregates import aggregate_batch
 
-    agg = aggregate_batch(_events_as_sequences(spark, sf_dir))
-    return agg.select(
-        F.col("source"),
-        F.col("time_bucket").cast("long").alias("time_bucket"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("n_points").cast("long").alias("n_points"),
-        F.col("token_sum").cast("long").alias("token_sum"),
-        F.col("token_min").cast("long").alias("token_min"),
-        F.col("token_max").cast("long").alias("token_max"),
-    )
+    return _cagg_state(aggregate_batch(_events_as_sequences(spark, sf_dir)))
 
 
 _CONT_AGG = """
@@ -364,14 +370,14 @@ def q_stream_cagg_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible, but its end state is: it must value-hash-equal
     ``q_continuous_agg``'s oracle on the same data — the
     batch-equivalence invariant of incremental view maintenance."""
-    import shutil
     import tempfile
 
     from ..catalog import Catalog
-    from ..streaming import run_incremental_stream
+    from ..streaming import drain, run_incremental_stream
 
-    work = tempfile.mkdtemp(prefix="tb_stream_equiv_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="tb_stream_equiv_", ignore_cleanup_errors=True
+    ) as work:
         seq_dir = f"{work}/seq"
         (
             _events_as_sequences(spark, sf_dir)
@@ -380,30 +386,17 @@ def q_stream_cagg_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(4)  # several files -> several micro-batches
             .write.parquet(seq_dir)
         )
-        q = run_incremental_stream(
-            spark, seq_dir, f"{work}/wh", table="cagg_equiv",
-            max_files_per_trigger=2,
+        drain(
+            run_incremental_stream(
+                spark, seq_dir, f"{work}/wh", table="cagg_equiv",
+                max_files_per_trigger=2,
+            ),
+            "stream",
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                "stream did not drain within 600s — refusing to "
-                "return a partial end state"
-            )
-        stored = Catalog(spark, f"{work}/wh").read("cagg_equiv").select(
-            F.col("source"),
-            F.col("time_bucket").cast("long").alias("time_bucket"),
-            F.col("n_docs").cast("long").alias("n_docs"),
-            F.col("n_points").cast("long").alias("n_points"),
-            F.col("token_sum").cast("long").alias("token_sum"),
-            F.col("token_min").cast("long").alias("token_min"),
-            F.col("token_max").cast("long").alias("token_max"),
-        )
+        stored = _cagg_state(Catalog(spark, f"{work}/wh").read("cagg_equiv"))
         # the stored table lives in a temp dir we are about to delete —
-        # pin the rows in executor memory before cleanup
-        return stored.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        # pin the rows before cleanup
+        return pin(stored)
 
 
 def q_cagg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,7 +411,6 @@ def q_cagg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute over corrected data — i.e. exactly q_continuous_agg's
     oracle — which is the TimescaleDB-style invalidation-log invariant.
     """
-    import shutil
     import tempfile
 
     from ..aggregates import refresh_invalidated, update_continuous_aggregate
@@ -442,24 +434,14 @@ def q_cagg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .collect()
     ]
-    work = tempfile.mkdtemp(prefix="tb_cagg_refresh_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="tb_cagg_refresh_", ignore_cleanup_errors=True
+    ) as work:
         cat = Catalog(spark, work)
         update_continuous_aggregate(cat, "cagg", corrupted)
         refreshed = refresh_invalidated(cat, "cagg", seq, log)
-        out = refreshed.select(
-            F.col("source"),
-            F.col("time_bucket").cast("long").alias("time_bucket"),
-            F.col("n_docs").cast("long").alias("n_docs"),
-            F.col("n_points").cast("long").alias("n_points"),
-            F.col("token_sum").cast("long").alias("token_sum"),
-            F.col("token_min").cast("long").alias("token_min"),
-            F.col("token_max").cast("long").alias("token_max"),
-        )
         # stored table lives in the temp dir being deleted — pin rows
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return pin(_cagg_state(refreshed))
 
 
 def q_stream_upsert_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,11 +456,10 @@ def q_stream_upsert_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     must value-hash-equal a plain GROUP BY over the corrected raw in
     DuckDB — upserts un-counted, deleted docs gone, which no append-only
     fold can express."""
-    import shutil
     import tempfile
 
     from ..catalog import Catalog
-    from ..streaming import run_correction_stream
+    from ..streaming import drain, run_correction_stream
 
     seq = _events_as_sequences(spark, sf_dir)
     kill = F.col("doc_id").cast("long") % 101 == 0
@@ -503,8 +484,9 @@ def q_stream_upsert_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("op", F.lit("delete"))
         .select(cols)
     )
-    work = tempfile.mkdtemp(prefix="tb_upsert_refresh_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="tb_upsert_refresh_", ignore_cleanup_errors=True
+    ) as work:
         ops_dir = f"{work}/ops"
         # phase files are ordered by modification time (FileStreamSource
         # processes (timestamp, path) ascending); keys are disjoint
@@ -513,28 +495,14 @@ def q_stream_upsert_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         fixes.unionByName(deletes).repartition(2).write.parquet(
             ops_dir, mode="append"
         )
-        q = run_correction_stream(
-            spark, ops_dir, f"{work}/wh", raw_table="raw",
-            cagg_table="cagg", max_files_per_trigger=2,
+        drain(
+            run_correction_stream(
+                spark, ops_dir, f"{work}/wh", raw_table="raw",
+                cagg_table="cagg", max_files_per_trigger=2,
+            ),
+            "stream",
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                "stream did not drain within 600s — refusing to "
-                "return a partial end state"
-            )
-        stored = Catalog(spark, f"{work}/wh").read("cagg").select(
-            F.col("source"),
-            F.col("time_bucket").cast("long").alias("time_bucket"),
-            F.col("n_docs").cast("long").alias("n_docs"),
-            F.col("n_points").cast("long").alias("n_points"),
-            F.col("token_sum").cast("long").alias("token_sum"),
-            F.col("token_min").cast("long").alias("token_min"),
-            F.col("token_max").cast("long").alias("token_max"),
-        )
-        return stored.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return pin(_cagg_state(Catalog(spark, f"{work}/wh").read("cagg")))
 
 
 _CONT_AGG_CORRECTED = """
@@ -564,7 +532,6 @@ def q_serve_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     source/time predicates (none here) hit the tier scan before the
     UDF, and the residual step is one mapInArrow pass over the served
     slice only."""
-    import shutil
     import tempfile
 
     from ..rollup import RollupConfig, RollupEngine
@@ -580,8 +547,9 @@ def q_serve_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 8).cast("string").alias("source"),
         F.col("user_id").cast("long").alias("time_bucket"),
     )
-    work = tempfile.mkdtemp(prefix="tb_serve_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="tb_serve_", ignore_cleanup_errors=True
+    ) as work:
         engine = RollupEngine(spark, work)
         cfg = RollupConfig(
             kernel="avg", window=4, num_tiers=1, run_kind="serve_q"
@@ -596,9 +564,7 @@ def q_serve_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("pos").cast("long").alias("pos"),
             F.col("token").cast("long").alias("token"),
         )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return pin(out)
 
 
 def q_retention_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -611,7 +577,6 @@ def q_retention_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same cutoff — i.e. enforcement dropped exactly the expired
     buckets and nothing else.  (Until r04d retention was only
     pytest-pinned; this grades it in the driver.)"""
-    import shutil
     import tempfile
 
     from ..retention import RetentionPolicy, enforce_retention
@@ -625,8 +590,9 @@ def q_retention_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 8).cast("string").alias("source"),
         F.col("user_id").cast("long").alias("time_bucket"),
     )
-    work = tempfile.mkdtemp(prefix="tb_retention_q_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="tb_retention_q_", ignore_cleanup_errors=True
+    ) as work:
         engine = RollupEngine(spark, work)
         cfg = RollupConfig(
             kernel="avg", window=4, num_tiers=1, run_kind="ret_q"
@@ -650,9 +616,7 @@ def q_retention_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("pos").cast("long").alias("pos"),
             F.col("token").cast("long").alias("token"),
         )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return pin(out)
 
 
 # tier-1 oracle restricted to the retention window: time_bucket is the
@@ -687,15 +651,7 @@ def q_cagg_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long"),
         )
     )
-    return daily.select(
-        F.col("source"),
-        F.col("time_bucket").cast("long").alias("time_bucket"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("n_points").cast("long").alias("n_points"),
-        F.col("token_sum").cast("long").alias("token_sum"),
-        F.col("token_min").cast("long").alias("token_min"),
-        F.col("token_max").cast("long").alias("token_max"),
-    )
+    return _cagg_state(daily)
 
 
 _CONT_AGG_DAILY = """
@@ -1444,7 +1400,7 @@ def q_retention_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the census is partition METADATA (millions of rows at 100 TB,
     # not billions) — pin it so the as-of watermark and the sweep plan
     # both read it without a second full scan of events
-    census = census.localCheckpoint()
+    census = pin(census)
     as_of = census.agg(F.max("day").alias("as_of"))
     aged = census.crossJoin(F.broadcast(as_of)).withColumn(
         "age_days", (F.col("as_of") - F.col("day")).cast("long")
@@ -1525,7 +1481,7 @@ def q_tier_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier.  Window counts per user are bounded by MAX_SEQ, so no join
     side ever skews past the cap."""
     tt = token_table(spark, sf_dir)
-    tt = tt.localCheckpoint()  # one sequence build feeds raw + 2 renders
+    tt = pin(tt)  # one sequence build feeds raw + 2 renders
     raw = tt.select(
         "user_id", F.posexplode("tokens").alias("pos", "tok")
     )

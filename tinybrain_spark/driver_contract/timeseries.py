@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..prefix import running_sums, running_sums_bucketed
-from ..session import load_table
+from ..session import load_table, pin
 from .sequences import DAY_US, WEEK_S, _stitched_deltas
 
 
@@ -710,7 +710,10 @@ def q_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = ev.agg(
         F.expr("(min(day) + max(day) + 1) DIV 2").alias("mid")
     )
-    census = (
+    # two consumers (totals + shares): materialize the tiny census
+    # once so the corpus scan/shuffle never re-runs (the
+    # q_ngram_jaccard checkpointed-stage pattern)
+    census = pin(
         ev.crossJoin(F.broadcast(bounds))
         .select(
             "source",
@@ -722,10 +725,6 @@ def q_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("source", "era", "bin")
         .agg(F.count("*").cast("long").alias("cnt"))
-        # two consumers (totals + shares): materialize the tiny census
-        # once so the corpus scan/shuffle never re-runs (the
-        # q_ngram_jaccard checkpointed-stage pattern)
-        .localCheckpoint()
     )
     tot = census.groupBy("source", "era").agg(
         F.sum("cnt").alias("tot")

@@ -11,7 +11,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, pin
 from .sequences import _word_hash_expr
 
 
@@ -225,16 +225,15 @@ def q_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-directional NN can be a hub, a MUTUAL one is a genuine pair).
 
     Scale shape: composes q_ann_nn_bucketed (LSH-bucket-local 1-NN,
-    never a corpus cross join); the NN table localCheckpoints ONCE
+    never a corpus cross join); the NN table is pinned ONCE
     (|vectors| rows — linear) so the self-join's two sides read the
     materialized table instead of re-running the bucketed argmax
     twice; the join keys are 8-byte vec ids, labels broadcast on.
     Integer outputs only (cos_c is the floor-milli cosine already
     under the parent's oracle)."""
-    nn = (
+    nn = pin(
         q_ann_nn_bucketed(spark, sf_dir)
         .select("vec_id", "nn_id", "cos_c")
-        .localCheckpoint()
     )
     x = nn.select(
         F.col("vec_id").alias("vec_a"),
@@ -301,17 +300,16 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     label: one round of propagation shows which assignments the
     embedding space itself disputes.
 
-    Scale shape: the NN table localCheckpoints once (the q_mutual_nn
+    Scale shape: the NN table is pinned once (the q_mutual_nn
     discipline), edges are its two directions (map-side union +
     distinct on 8-byte pairs), neighbor labels broadcast on, and the
     majority vote is the q_m4_decimate argmax encoding cnt*2^20 +
     (2^20-1-label) — two map-side-combinable groupBys, never a
     window.  Labels are runtime-bounded < 2^20 by the encoding
     (fixture labels are single digits)."""
-    nn = (
+    nn = pin(
         q_ann_nn_bucketed(spark, sf_dir)
         .select("vec_id", "nn_id")
-        .localCheckpoint()
     )
     edges = (
         nn.select(F.col("vec_id").alias("a"), F.col("nn_id").alias("b"))
@@ -967,7 +965,7 @@ def q_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces, and the squared per-dim shift.  Empty clusters keep
     their seed (the standard Lloyd convention).  One assign + one
     update = one full k-means iteration, each half oracle-pinned; the
-    pipeline iterates them from a driver loop (localCheckpoint per
+    pipeline iterates them from a driver loop (one pin per
     round — the clusters.py lesson).
 
     Shape: the per-dim sums come from a posexplode of the ALREADY

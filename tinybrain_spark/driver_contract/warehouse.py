@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, pin
 from .sequences import _word_hash_expr
 
 
@@ -400,11 +400,13 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     small and slowly changing); the stream side never shuffles before
     the sink (join is broadcast, the census runs on the landed
     table); cents are floor(value*100) exact-integer both engines."""
-    import shutil
     import tempfile
 
-    work = tempfile.mkdtemp(prefix="tb_stream_enrich_")
-    try:
+    from ..streaming import drain
+
+    with tempfile.TemporaryDirectory(
+        prefix="tb_stream_enrich_", ignore_cleanup_errors=True
+    ) as work:
         src = f"{work}/src"
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
@@ -428,27 +430,20 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _land(batch_df, batch_id):
             batch_df.write.mode("append").parquet(out_dir)
 
-        q = (
+        drain(
             stream.writeStream.foreachBatch(_land)
             .option("checkpointLocation", f"{work}/ckpt")
             .trigger(availableNow=True)
-            .start()
+            .start(),
+            "enrichment stream",
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError(
-                "enrichment stream did not drain within 600s — "
-                "refusing to return a partial end state"
-            )
         landed = spark.read.parquet(out_dir)
         res = landed.groupBy("segment").agg(
             F.count("*").cast("long").alias("n_events"),
             F.sum("cents").cast("long").alias("sum_cents"),
         )
         # the landed table lives in a temp dir we are about to delete
-        return res.localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return pin(res)
 
 
 _STREAM_ENRICH = """
@@ -572,50 +567,50 @@ def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The census (per market segment: orders and exact cents) must
     value-hash-equal the plain-join oracle — bucketed layout changes
     the physical plan, never the answer."""
-    import shutil
     import tempfile
     import uuid
 
-    work = tempfile.mkdtemp(prefix="tb_bucket_join_")
     tag = uuid.uuid4().hex[:8]
     t_o, t_c = f"tb_bj_orders_{tag}", f"tb_bj_cust_{tag}"
-    try:
-        (
-            load_table(spark, sf_dir, "orders")
-            .select(
-                "o_custkey",
-                F.expr("CAST(floor(o_totalprice * 100) AS BIGINT)").alias(
-                    "cents"
-                ),
+    with tempfile.TemporaryDirectory(
+        prefix="tb_bucket_join_", ignore_cleanup_errors=True
+    ) as work:
+        try:
+            (
+                load_table(spark, sf_dir, "orders")
+                .select(
+                    "o_custkey",
+                    F.expr(
+                        "CAST(floor(o_totalprice * 100) AS BIGINT)"
+                    ).alias("cents"),
+                )
+                .write.bucketBy(8, "o_custkey")
+                .sortBy("o_custkey")
+                .option("path", f"{work}/orders")
+                .saveAsTable(t_o)
             )
-            .write.bucketBy(8, "o_custkey")
-            .sortBy("o_custkey")
-            .option("path", f"{work}/orders")
-            .saveAsTable(t_o)
-        )
-        (
-            load_table(spark, sf_dir, "customer")
-            .select("c_custkey", "c_mktsegment")
-            .write.bucketBy(8, "c_custkey")
-            .sortBy("c_custkey")
-            .option("path", f"{work}/cust")
-            .saveAsTable(t_c)
-        )
-        o = spark.table(t_o)
-        c = spark.table(t_c).hint("merge")
-        j = o.join(c, o.o_custkey == c.c_custkey)
-        res = j.groupBy("c_mktsegment").agg(
-            F.count("*").cast("long").alias("n_orders"),
-            F.sum("cents").cast("long").alias("sum_cents"),
-        ).select(
-            F.col("c_mktsegment").alias("segment"), "n_orders", "sum_cents"
-        )
-        # rows must outlive the dropped tables + deleted temp dir
-        return res.localCheckpoint()
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_o}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_c}")
-        shutil.rmtree(work, ignore_errors=True)
+            (
+                load_table(spark, sf_dir, "customer")
+                .select("c_custkey", "c_mktsegment")
+                .write.bucketBy(8, "c_custkey")
+                .sortBy("c_custkey")
+                .option("path", f"{work}/cust")
+                .saveAsTable(t_c)
+            )
+            o = spark.table(t_o)
+            c = spark.table(t_c).hint("merge")
+            j = o.join(c, o.o_custkey == c.c_custkey)
+            res = j.groupBy("c_mktsegment").agg(
+                F.count("*").cast("long").alias("n_orders"),
+                F.sum("cents").cast("long").alias("sum_cents"),
+            ).select(
+                F.col("c_mktsegment").alias("segment"), "n_orders", "sum_cents"
+            )
+            # rows must outlive the dropped tables + deleted temp dir
+            return pin(res)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t_o}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_c}")
 
 
 _BUCKET_JOIN = """

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .prefix import running_sums
+from .session import pin
 
 
 def pack_offsets(
@@ -237,9 +238,9 @@ def pack_tokens(
     # sequence-assembly pipeline (scan + window + collect_list at
     # q_pack_tokens; 22 MB materialized vs two extra full passes —
     # same trade the iterative queries already make per CLAUDE.md)
-    with_n = seqs.withColumn(
+    with_n = pin(seqs.withColumn(
         "_n", F.size(tokens_col).cast("long")
-    ).localCheckpoint()
+    ))
     off = pack_offsets(
         with_n,
         n_col="_n",

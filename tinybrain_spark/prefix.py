@@ -10,7 +10,7 @@ two-phase shape Spark's own RangePartitioner uses:
 
 1. ``repartitionByRange`` on (partition_cols..., order_cols...) —
    each physical partition holds a contiguous key range;
-   ``localCheckpoint`` pins the sampled range boundaries so every
+   ``session.pin`` pins the sampled range boundaries so every
    downstream subtree sees the identical row->partition assignment
    (repartitionByRange SAMPLES its child; without the checkpoint two
    evaluations could sample different boundaries and mis-align the
@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .session import pin
+
 
 def running_sums(
     df: DataFrame,
@@ -66,7 +68,7 @@ def running_sums(
     last.  Sums are exact BIGINT arithmetic (ANSI-safe for totals
     < 2^63); all inputs must be non-null.
 
-    Builds eagerly: the range-partitioned input is localCheckpoint-ed
+    Builds eagerly: the range-partitioned input is pinned
     (pins sampled boundaries AND doubles as the resume point for long
     jobs) and the per-partition totals run as a small job at call time.
     """
@@ -77,7 +79,7 @@ def running_sums(
         if num_partitions
         else df.repartitionByRange(*keys)
     )
-    parted = parted.localCheckpoint()
+    parted = pin(parted)
     with_pid = parted.withColumn("_pid", F.spark_partition_id())
 
     sums = [F.sum(c).cast("long").alias(f"_t_{c}") for c in sum_cols]
@@ -144,7 +146,7 @@ def running_sums_bucketed(
 
     Versus the range-partitioned shape this removes the sampling pass
     (repartitionByRange evaluates its child once extra to sample
-    boundaries), the localCheckpoint materialization, and the
+    boundaries), the pin materialization, and the
     boundary-determinism hazard: the bucket is DATA-derived, so both
     evaluations of any subtree agree by construction.  The final
     aggregate/window a caller runs on (partition_cols..., bucket_col)
@@ -218,7 +220,7 @@ def running_mins(
         if num_partitions
         else df.repartitionByRange(*keys)
     )
-    parted = parted.localCheckpoint()
+    parted = pin(parted)
     with_pid = parted.withColumn("_pid", F.spark_partition_id())
 
     mins = [F.min(c).cast("long").alias(f"_t_{c}") for c in min_cols]

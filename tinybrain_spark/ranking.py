@@ -7,7 +7,7 @@ ids, leaderboards) where top-k doesn't apply, the scalable shape is:
 
 1. ``repartitionByRange`` on the order columns — equal keys co-locate,
    partitions hold contiguous key ranges in order — then
-   ``localCheckpoint`` to PIN the sampled boundaries: the counts
+   ``session.pin`` to PIN the sampled boundaries: the counts
    subtree and the rank subtree would otherwise evaluate the range
    exchange twice, and a nondeterministic upstream (sample, prior
    shuffle-dependent order) could sample different boundaries per
@@ -21,8 +21,7 @@ ids, leaderboards) where top-k doesn't apply, the scalable shape is:
 Ranks are independent of where the sampled range boundaries land, so
 the result is deterministic even though the partitioning itself isn't.
 The same two-level idea as prefix.running_sums, specialized to
-ordering.  The checkpoint materializes ``df`` once (executor-local
-storage); for rank targets that's the vocabulary/leaderboard table,
+ordering.  The pin materializes ``df`` once; for rank targets that's the vocabulary/leaderboard table,
 orders of magnitude smaller than the corpus.
 """
 
@@ -30,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .session import pin
 
 
 def global_rank(
@@ -46,7 +47,7 @@ def global_rank(
         if num_partitions
         else df.repartitionByRange(*order_by)
     )
-    parted = parted.localCheckpoint()
+    parted = pin(parted)
     with_pid = parted.withColumn("_pid", F.spark_partition_id())
     counts = sorted(
         with_pid.groupBy("_pid").agg(F.count("*").alias("_n")).collect(),

@@ -10,9 +10,10 @@ SQL oracle.
 
 from __future__ import annotations
 
+import logging
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -187,11 +188,23 @@ _FANOUT_DEFAULT_MIN_ROWS = {
 }
 
 
+# Footer probes, memoized per path on the file listing (names, sizes,
+# mtimes): an unchanged table opens no footer twice, a rewritten one is
+# probed again.
+_LAYOUT_CACHE: dict[str, tuple[tuple, tuple[int, int]]] = {}
+
+
 def _parquet_layout(path: str) -> tuple[int, int]:
     """(natural_splits, rows) from parquet footers — row groups are the
-    real scan-parallelism bound, whatever maxPartitionBytes says."""
+    real scan-parallelism bound, whatever maxPartitionBytes says.
+
+    A probe that reads no footer (a remote URI the local filesystem
+    cannot see, an empty glob, an unreadable footer) returns a wide
+    layout, which turns fan-out off for that path, and logs a WARNING
+    saying so — once, since the result is memoized."""
     import glob as _glob
 
+    import pyarrow as _pa
     import pyarrow.parquet as _pq
 
     files = (
@@ -202,15 +215,34 @@ def _parquet_layout(path: str) -> tuple[int, int]:
             | set(_glob.glob(os.path.join(path, "part-*")))
         )
     )
-    splits = rows = 0
-    for f in files:
-        try:
-            md = _pq.ParquetFile(f).metadata
-        except Exception:
-            return (1 << 30, 0)  # unreadable footer: assume wide layout
-        splits += md.num_row_groups
-        rows += md.num_rows
-    return (splits or 1, rows)
+    try:
+        stamp = tuple(
+            (f, st.st_size, st.st_mtime_ns)
+            for f, st in ((f, os.stat(f)) for f in files)
+        )
+    except OSError:
+        stamp = None  # listing changed under us: probe, don't memoize
+    hit = _LAYOUT_CACHE.get(path)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    try:
+        metas = [_pq.ParquetFile(f).metadata for f in files]
+    except (OSError, _pa.ArrowException):
+        metas = []
+    if metas:
+        layout = (
+            sum(m.num_row_groups for m in metas) or 1,
+            sum(m.num_rows for m in metas),
+        )
+    else:
+        layout = (1 << 30, 0)
+        logging.getLogger(__name__).warning(
+            "no parquet footer readable under %s; scan fan-out is off "
+            "for this path", path,
+        )
+    if stamp is not None:
+        _LAYOUT_CACHE[path] = (stamp, layout)
+    return layout
 
 
 def load_table(
@@ -247,3 +279,20 @@ def load_table(
 
             df = df.repartition(2 * cores, *[_F.col(k) for k in keys])
     return df
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Eagerly materialize ``df`` and cut its lineage — the one way the
+    engine pins an intermediate (an iterative round whose plan would
+    otherwise keep growing, a table several consumers read, rows whose
+    backing files are about to be deleted).  One eager job, like the
+    ``localCheckpoint()`` it generalizes.
+
+    Recovery rule: when the session has a checkpoint dir (Spark's own
+    ``spark.checkpoint.dir`` or ``SparkContext.setCheckpointDir``, a
+    deployment path), the pin is a reliable ``checkpoint()`` whose
+    files survive executor loss; otherwise it is ``localCheckpoint()``
+    in executor storage, which is lost with the executor."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()

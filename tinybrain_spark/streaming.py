@@ -22,6 +22,19 @@ from pyspark.sql import functions as F
 from .aggregates import update_continuous_aggregate
 from .catalog import Catalog
 from .datagen import SCHEMA as SEQ_SCHEMA
+from .session import pin
+
+
+def drain(query, what: str, timeout_s: int = 600) -> None:
+    """Wait for an availableNow ``query`` to finish.  A drain that times
+    out stops the query and raises: the caller must never read a
+    partial end state, nor leave the stream running on the session."""
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise RuntimeError(
+            f"{what} did not drain within {timeout_s}s — refusing to "
+            "return a partial end state"
+        )
 
 
 def with_event_time(df: DataFrame, bucket_seconds: int = 3600) -> DataFrame:
@@ -310,7 +323,7 @@ def run_cms_stream(
             )
             # materialize (<= depth*width rows) BEFORE overwriting the
             # files the plan reads from
-            merged = merged.localCheckpoint()
+            merged = pin(merged)
         else:
             merged = delta
         catalog.write(merged, table, mode="overwrite")
@@ -380,7 +393,7 @@ def apply_raw_corrections(
     bucket (upsert placement) and the stored row's old bucket (a doc
     whose correction moves it between buckets, or a delete, un-counts
     where it USED to live)."""
-    ops = ops.localCheckpoint()  # small batch, probed several times
+    ops = pin(ops)  # small batch, probed several times
     touched = sorted(
         r["source"] for r in ops.select("source").distinct().collect()
     )
