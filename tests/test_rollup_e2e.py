@@ -1,7 +1,8 @@
 """End-to-end Spark rollup tests (FIXTURES.md §F4): synthetic table ->
 tier jobs -> per-row token-array equality against the single-node numpy
-kernels (the north-rule invariant), plus resume-from-checkpoint and
-salting-equivalence checks."""
+kernels (the north-rule invariant), plus resume-from-checkpoint,
+salting-equivalence and the driver-side lineage/metrics commit (job
+counts, one file per bookkeeping table per pass, crash leftovers)."""
 
 import os
 
@@ -10,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from tinybrain_spark import kernels as K
+from tinybrain_spark.catalog import Catalog
+from tinybrain_spark.checkpoint import LINEAGE_SCHEMA, CheckpointStore
 from tinybrain_spark.datagen import generate
 from tinybrain_spark.rollup import RollupConfig, RollupEngine
 
@@ -188,24 +191,136 @@ def test_salting_splits_hot_source(spark):
     assert n_parts >= 3, f"hot source {hot} landed in only {n_parts} partitions"
 
 
+def _jobs_in_group(sc, group):
+    """Job ids Spark launched under ``group``, after the listener bus
+    has delivered every job event to the status store."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_run_tier_issues_no_stats_rescan_jobs(spark, base_df, workdir):
-    """Tier metrics ride the write job via df.observe and per-source
-    lineage rows come from parquet footers, so a whole 2-tier pyramid
-    is one pass: range sampling, exchange + kernels + write, one lineage
-    append and one metrics append — with no post-write stats re-scan,
-    no pre-flight min(n_tok) scan (VERDICT r01 item 10) and no
-    per-tier re-read of the previous tier."""
+    """Tier metrics ride the write job via df.observe, per-source
+    lineage rows come from parquet footers and the pass commits its
+    lineage and metrics from the driver, so a whole 2-tier pyramid is
+    range sampling plus exchange + kernels + write — with no post-write
+    stats re-scan, no pre-flight min(n_tok) scan (VERDICT r01 item 10),
+    no per-tier re-read of the previous tier and no bookkeeping job.
+    A resumed pass over a complete pyramid stays within the same
+    bound."""
     cfg = RollupConfig(kernel="avg", window=4, num_tiers=2, run_kind="jc")
     engine = RollupEngine(spark, workdir)
     sc = spark.sparkContext
-    sc.setJobGroup("jc_pyramid", "pyramid")
-    engine.run_pyramid(base_df, cfg)
-    sc.setJobGroup("jc_done", "after")
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("jc_pyramid"))
-    # measured: 5 = repartitionByRange sampling, the exchange's map
-    # stage, the kernel+write stage, lineage append, metrics append.
-    # The tier-by-tier chain took 14 for the same pyramid.
-    assert n_jobs <= 5, f"run_pyramid launched {n_jobs} jobs"
+    for group, resume in (("jc_pyramid", False), ("jc_resume", True)):
+        sc.setJobGroup(group, "pyramid")
+        engine.run_pyramid(base_df, cfg, resume=resume)
+        sc.setJobGroup("jc_done", "after")
+        n_jobs = len(_jobs_in_group(sc, group))
+        # measured: 3 = repartitionByRange sampling, the exchange's map
+        # stage, the kernel+write stage.  With a Spark append each for
+        # lineage and metrics it took 5, and the tier-by-tier chain 14.
+        assert n_jobs <= 3, f"{group}: run_pyramid launched {n_jobs} jobs"
+
+
+def test_bookkeeping_launches_no_spark_job(spark, workdir):
+    """On a local catalog the pass commit (record_tier) and the resume
+    read (completed_sources) run on the driver: no Spark job."""
+    store = CheckpointStore(Catalog(spark, workdir))
+    sc = spark.sparkContext
+    sc.setJobGroup("bk", "bookkeeping")
+    assert store.completed_sources("k") == {}
+    store.record_tier("k", _lineage_rows(("a", "b")), _TOTALS, 1.0)
+    got = store.completed_sources("k")
+    sc.setJobGroup("bk_done", "after")
+    assert _jobs_in_group(sc, "bk") == []
+    assert got == {1: {"a", "b"}, 2: {"a", "b"}}
+
+
+_TOTALS = {
+    k: {"rows_out": 2, "points_out": 8, "checksum": 3, "min_n_tok": 4}
+    for k in (1, 2)
+}
+
+
+def _lineage_rows(sources, tiers=(1, 2)):
+    return [{"tier": k, "source": s, "rows_in": 1, "rows_out": 1}
+            for k in tiers for s in sources]
+
+
+def _data_files(catalog, table):
+    d = catalog.path(table)
+    return sorted(f for f in os.listdir(d) if f.endswith(".parquet")) \
+        if os.path.isdir(d) else []
+
+
+def test_pass_adds_one_file_per_bookkeeping_table(spark, base_df, workdir):
+    """Whatever defaultParallelism is, a pass adds one lineage file when
+    it completed a partition (none otherwise) and one metrics file."""
+    assert spark.sparkContext.defaultParallelism > 1
+    cfg = RollupConfig(kernel="mode", window=4, num_tiers=2, run_kind="bf")
+    engine = RollupEngine(spark, workdir)
+    cat = engine.catalog
+    some_source = base_df.select("source").first()["source"]
+    assert base_df.select("source").distinct().count() > 1
+    passes = (
+        (base_df.where(F.col("source") == some_source), 1),
+        (base_df, 1),
+        (base_df, 0),  # everything complete: no lineage rows
+    )
+    for df, new_lineage in passes:
+        lineage, metrics = _data_files(cat, "lineage"), _data_files(cat, "metrics")
+        engine.run_pyramid(df, cfg, resume=True)
+        assert len(_data_files(cat, "lineage")) == len(lineage) + new_lineage
+        assert len(_data_files(cat, "metrics")) == len(metrics) + 1
+    pairs = cat.read("lineage").groupBy("tier", "source").count().collect()
+    assert all(r["count"] == 1 for r in pairs), pairs
+    assert cat.read("metrics").count() == 3 * 2  # 3 passes x 2 tiers
+
+
+def test_crash_leftover_tmp_file_is_ignored(spark, workdir):
+    """A commit that died before its rename leaves a hidden
+    ``.part-*.parquet.tmp``: exists, completed_sources and catalog.read
+    must all skip it."""
+    cat = Catalog(spark, workdir)
+    store = CheckpointStore(cat)
+    os.makedirs(cat.path("lineage"))
+    with open(os.path.join(cat.path("lineage"),
+                           ".part-dead.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1 torn write")
+    assert not cat.exists("lineage")
+    assert store.completed_sources("k") == {}
+    store.record_tier("k", _lineage_rows(("a",), tiers=(1,)), _TOTALS, 1.0)
+    assert cat.exists("lineage")
+    assert store.completed_sources("k") == {1: {"a"}}
+    assert [(r["tier"], r["source"]) for r in cat.read("lineage").collect()] \
+        == [(1, "a")]
+
+
+def test_lineage_mixes_spark_and_arrow_files(spark, workdir):
+    """A lineage table holding a Spark-written file (INT96 timestamps)
+    and a driver-committed pyarrow file reads back as one table with
+    ``completed_at: timestamp``, through Spark and completed_sources."""
+    import datetime as dt
+
+    from pyspark.sql.types import TimestampType
+
+    cat = Catalog(spark, workdir)
+    store = CheckpointStore(cat)
+    ts = dt.datetime(2000, 1, 2, 3, 4, 5)
+    cat.write(
+        spark.createDataFrame(
+            [("k", 1, "a", 1, 1, "complete", ts)], LINEAGE_SCHEMA
+        ).coalesce(1),
+        "lineage",
+    )
+    store.record_tier("k", _lineage_rows(("b",), tiers=(1,)), _TOTALS, 1.0)
+    assert len(_data_files(cat, "lineage")) == 2
+    df = cat.read("lineage")
+    assert df.schema["completed_at"].dataType == TimestampType()
+    got = {r["source"]: r["completed_at"] for r in df.collect()}
+    assert got["a"] == ts and got["b"] > ts
+    assert store.completed_sources("k") == {1: {"a", "b"}}
+    assert cat.read("metrics").schema["completed_at"].dataType \
+        == TimestampType()
 
 
 def test_map_in_arrow_pooling_equals_kernels(spark):

@@ -13,7 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from tinybrain_spark.session import _parquet_layout, load_table
+from tinybrain_spark.session import _default_cpus, _parquet_layout, load_table
 
 
 def _write(path, n_rows, row_group_size=None):
@@ -124,3 +124,18 @@ def test_layout_probe_without_footer_warns_once(tmp_path, caplog):
     assert len(warned) == len(paths), warned
     for p in paths:
         assert sum(p in m for m in warned) == 1, (p, warned)
+
+
+@pytest.mark.parametrize("cores", [4, 32])
+def test_default_cpus_follows_affinity(monkeypatch, cores):
+    """With SPARK_GRAFT_CPUS unset, local[n] uses the cores this
+    process may run on, not a count tuned on another host."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(cores)))
+    assert _default_cpus() == cores
+
+
+def test_default_cpus_env_override(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1})
+    assert _default_cpus() == 6

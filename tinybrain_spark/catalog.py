@@ -5,13 +5,21 @@ The engine only relies on three capabilities — partitioned append,
 partition-level overwrite (the MERGE-lite used for resume), and read —
 all of which plain Parquet provides via Spark's dynamic partition
 overwrite.  SURVEY.md §7 risk 'Iceberg offline availability'.
+
+Small bookkeeping tables are committed from the driver instead
+(``append_table`` / ``select_distinct``): on a local catalog one
+pyarrow file per append, written under a hidden name and renamed into
+place, and a pyarrow scan to read it back — no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def is_local_path(path: str) -> bool:
@@ -85,6 +93,51 @@ class Catalog:
         else:
             writer = writer.mode(mode)
         writer.save(self.path(name))
+
+    def append_table(self, table: pa.Table, name: str) -> None:
+        """Append a small driver-side table as ONE parquet file.
+
+        Local catalog: write ``.part-<uuid>.parquet.tmp`` (hidden, so
+        Spark, pyarrow and ``exists`` skip it) and ``os.replace`` it to
+        ``part-<uuid>.parquet`` — the rename is the commit, no Spark job
+        runs.  Remote catalog: a ``LocalRelation`` append, coalesced to
+        one task (its scan would otherwise split over
+        ``defaultParallelism`` slices, one file each)."""
+        if not self.is_local:
+            self.write(self.spark.createDataFrame(table).coalesce(1), name)
+            return
+        import pyarrow.parquet as pq
+
+        d = self.path(name)
+        os.makedirs(d, exist_ok=True)
+        final = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(d, f".{final}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(d, final))
+
+    def select_distinct(
+        self, name: str, columns: tuple[str, ...], where: dict
+    ) -> set[tuple]:
+        """Distinct ``columns`` tuples of the rows of ``name`` where
+        every ``column == value`` of ``where`` holds; empty when the
+        table has no data file.  Local catalog: one pyarrow scan on the
+        driver; remote: a Spark scan."""
+        if not self.exists(name):
+            return set()
+        if not self.is_local:
+            df = self.read(name)
+            for c, v in where.items():
+                df = df.where(F.col(c) == v)
+            return {tuple(r) for r in df.select(*columns).distinct().collect()}
+        import pyarrow.dataset as ds
+
+        flt = None
+        for c, v in where.items():
+            flt = ds.field(c) == v if flt is None else flt & (ds.field(c) == v)
+        t = ds.dataset(
+            self.path(name), format="parquet", partitioning="hive"
+        ).to_table(columns=list(columns), filter=flt)
+        return set(zip(*(t.column(c).to_pylist() for c in columns)))
 
     def write_bucketed(
         self,

@@ -3,16 +3,24 @@ per-partition lineage and rollup metrics ... so any tier can resume
 mid-pyramid').
 
 Lineage granularity is (run kind, tier, source): one row per completed
-source partition per tier, carrying row counts; each pyramid pass
-appends the rows of every tier it built at once.  Resume reads the
-completed pairs with one lineage scan: only missing (tier, source)
-partitions are written (the pyramid table is partitioned by tier and
-source, so a crashed partial write is overwritten partition-wise).
+source partition per tier, carrying row counts.  Each pyramid pass
+commits from the driver: the rows of every tier it built become one
+lineage file and one metrics file (``Catalog.append_table``), with no
+Spark job on a local catalog.  Resume reads the completed pairs with
+one lineage scan (``Catalog.select_distinct``, driver-side on a local
+catalog): only missing (tier, source) partitions are written (the
+pyramid table is partitioned by tier and source, so a crashed partial
+write is overwritten partition-wise).  A crash between the data write
+and the commit leaves no lineage, so the next pass reruns those
+sources.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import datetime as dt
+
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -59,6 +67,19 @@ METRICS_SCHEMA = StructType(
 )
 
 
+# The driver-side commit writes Arrow; completed_at lands as
+# timestamp[us, tz=UTC], which Spark reads back as ``timestamp`` next to
+# the INT96 files Spark itself writes.
+LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
+METRICS_ARROW = to_arrow_schema(METRICS_SCHEMA)
+
+
+def _arrow(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema
+    )
+
+
 class CheckpointStore:
     def __init__(self, catalog: Catalog):
         self.catalog = catalog
@@ -67,20 +88,13 @@ class CheckpointStore:
 
     def completed_sources(self, run_kind: str) -> dict[int, set[str]]:
         """{tier: sources} with complete lineage, from one lineage scan."""
-        if not self.catalog.exists(LINEAGE_TABLE):
-            return {}
         done: dict[int, set[str]] = {}
-        for r in (
-            self.catalog.read(LINEAGE_TABLE)
-            .where(
-                (F.col("run_kind") == run_kind)
-                & (F.col("status") == "complete")
-            )
-            .select("tier", "source")
-            .distinct()
-            .collect()
+        for tier, source in self.catalog.select_distinct(
+            LINEAGE_TABLE,
+            ("tier", "source"),
+            {"run_kind": run_kind, "status": "complete"},
         ):
-            done.setdefault(r["tier"], set()).add(r["source"])
+            done.setdefault(tier, set()).add(source)
         return done
 
     def record_tier(
@@ -90,15 +104,13 @@ class CheckpointStore:
         totals: dict[int, dict],
         wall_sec: float,
     ) -> None:
-        """Record one pass over every tier it built: one lineage append
-        and one metrics append.  per_source: rows of {tier, source,
-        rows_in, rows_out} (parquet-footer counts); totals: {tier ->
-        {rows_out, points_out, checksum, min_n_tok}} observed on the
-        write job; every metrics row carries the pass wall."""
-        import datetime as dt
-
-        spark = self.catalog.spark
-        ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        """Commit one pass over every tier it built: one lineage file
+        (none when no partition is new) and one metrics file.
+        per_source: rows of {tier, source, rows_in, rows_out}
+        (parquet-footer counts); totals: {tier -> {rows_out, points_out,
+        checksum, min_n_tok}} observed on the write job; every metrics
+        row carries the pass wall."""
+        ts = dt.datetime.now(dt.timezone.utc)
         lineage_rows = [
             (
                 run_kind,
@@ -112,10 +124,8 @@ class CheckpointStore:
             for r in per_source
         ]
         if lineage_rows:
-            self.catalog.write(
-                spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA),
-                LINEAGE_TABLE,
-                mode="append",
+            self.catalog.append_table(
+                _arrow(lineage_rows, LINEAGE_ARROW), LINEAGE_TABLE
             )
         metrics = [
             (
@@ -131,8 +141,4 @@ class CheckpointStore:
             )
             for tier, t in sorted(totals.items())
         ]
-        self.catalog.write(
-            spark.createDataFrame(metrics, METRICS_SCHEMA),
-            METRICS_TABLE,
-            mode="append",
-        )
+        self.catalog.append_table(_arrow(metrics, METRICS_ARROW), METRICS_TABLE)

@@ -15,7 +15,9 @@ Plan shape of one pass (pinned in tests/test_plans.py): parquet scan
 MapInArrow node running the kernels and emitting one row per (doc,
 tier) -> local sort on (tier, source, time_bucket, doc_id) -> one write
 of ``{run_kind}`` partitioned by (tier, source).  Pooling itself never
-shuffles.
+shuffles.  The pass then commits its lineage and metrics from the
+driver (``CheckpointStore.record_tier``), with no further Spark job on
+a local catalog.
 """
 
 from __future__ import annotations
@@ -137,7 +139,8 @@ class RollupEngine:
     ) -> dict:
         """Materialize the pending tiers ``1..tier`` from the base
         (tier-0) table ``df`` in one pass: one scan, one range exchange,
-        one kernel pass, one write, one lineage and one metrics append.
+        one kernel pass, one write, then a driver-side commit of at
+        most one lineage file and one metrics file.
 
         With ``resume``, a (tier, source) pair with complete lineage is
         not rewritten: sources complete at every tier leave the input,

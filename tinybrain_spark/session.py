@@ -1,11 +1,11 @@
 """SparkSession factory with engine defaults.
 
-Tuned for the sandbox (single JVM, ``local[32]``) but every setting is
-the one we'd ship to a 1000-executor cluster: AQE on (runtime skew-join
-splitting + partition coalescing), Arrow-batched Python exchange with a
-bounded batch size so executor-python memory stays flat regardless of
-input size, and UTC session time so time-bucket arithmetic matches any
-SQL oracle.
+Tuned for a single JVM (``local[n]`` over the cores this process may
+use) but every setting is the one we'd ship to a 1000-executor
+cluster: AQE on (runtime skew-join splitting + partition coalescing),
+Arrow-batched Python exchange with a bounded batch size so
+executor-python memory stays flat regardless of input size, and UTC
+session time so time-bucket arithmetic matches any SQL oracle.
 """
 
 from __future__ import annotations
@@ -15,7 +15,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _default_cpus() -> int:
+    """Cores for ``local[n]``: ``SPARK_GRAFT_CPUS`` when set, else the
+    cores this process may run on (not a fixed count, so the default
+    plan does not depend on which host it was tuned on)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+DEFAULT_CPUS = _default_cpus()
 
 # Transparent-huge-page hardening (SPARK_GRAFT_THP=0 to disable).
 #
