@@ -259,3 +259,168 @@ def test_remote_pyramid_and_resume(spark, remote_catalog):
         for doc_id, toks in base.items():
             want = K.pool("avg", toks, window=4, num_tiers=tier)[tier - 1]
             assert np.array_equal(np.array(got[doc_id]), want), (tier, doc_id)
+
+
+# ---------------------------------------------------------------------------
+# pyramid tier files written by the Python workers (local catalog) vs by
+# Spark's partitioned writer (URI-scheme catalog)
+# ---------------------------------------------------------------------------
+
+_ODD_SOURCES = ("a b", "u,v", "naïve", "x:y", "p/q", "r%s")
+
+
+def test_partition_dir_matches_spark_escaping(spark, workdir):
+    """Worker-written partition directories are named exactly as Spark
+    names them: every ASCII character against Spark's own escaping, and
+    the odd sources against the directories a Spark write creates."""
+    import os
+
+    from tinybrain_spark.catalog import partition_dir
+
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for c in map(chr, range(1, 128)):
+        value = f"a{c}b"
+        assert partition_dir("s", value) == f"s={utils.escapePathName(value)}"
+    spark.createDataFrame(
+        [(s, 1) for s in _ODD_SOURCES], "source string, v long"
+    ).write.partitionBy("source").parquet(f"{workdir}/esc")
+    written = [d for d in os.listdir(f"{workdir}/esc")
+               if d.startswith("source=")]
+    assert sorted(written) == sorted(
+        partition_dir("source", s) for s in _ODD_SOURCES
+    )
+
+
+def _odd_source_docs(spark, n_docs=48):
+    """``generate`` docs whose source is one of three values, two of
+    which Spark writes unescaped and escaped ("a b", "x:y")."""
+    from tinybrain_spark.datagen import generate
+
+    df = generate(spark, n_docs=n_docs, n_tok=64, seed=21, num_partitions=3)
+    pick = F.crc32("doc_id") % 3
+    return df.withColumn(
+        "source",
+        F.when(pick == 0, "a b").when(pick == 1, "x:y").otherwise("plain"),
+    )
+
+
+def _tier_rows(df):
+    """Every column of a tier, one tuple per row, in doc_id order."""
+    cols = sorted(df.columns)
+    return [tuple(r[c] for c in cols) for r in df.orderBy("doc_id").collect()]
+
+
+def test_mixed_writer_resume(spark, workdir):
+    """A pyramid built for all but one source through a ``file://`` URI
+    (Spark's writer) and resumed through the plain path of the same
+    directory (the workers' pyarrow writer) is one table: one
+    directory and one lineage row per (tier, source), every row equal
+    to the single-node kernels, and the same file schema through Spark
+    and through pyarrow from both writers.  A full rebuild through the
+    plain path then replaces the Spark-written partitions in place."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from tinybrain_spark import kernels as K
+    from tinybrain_spark.rollup import RollupConfig, RollupEngine
+
+    df = _odd_source_docs(spark).cache()
+    cfg = RollupConfig(kernel="avg", window=4, num_tiers=2, run_kind="mix")
+    base = f"{workdir}/mixed"
+    remote = RollupEngine(spark, f"file://{base}")
+    local = RollupEngine(spark, base)
+    assert not remote.catalog.is_local and local.catalog.is_local
+    # the directory names Spark gives these sources
+    spark_dirs = {"a b": "source=a b", "plain": "source=plain",
+                  "x:y": "source=x%3Ay"}
+    sources = tuple(sorted(spark_dirs))
+    toks = {r["doc_id"]: np.array(r["tokens"], dtype=np.int32)
+            for r in df.select("doc_id", "tokens").collect()}
+
+    def partitions(tier):
+        d = local.catalog.path(cfg.name(tier))
+        return {s: os.path.join(d, name) for s, name in spark_dirs.items()}
+
+    def check_table():
+        for tier in (1, 2):
+            d = local.catalog.path(cfg.name(tier))
+            assert sorted(os.listdir(d)) == sorted(
+                os.path.basename(p) for p in partitions(tier).values()
+            )
+            got = {r["doc_id"]: r["tokens"]
+                   for r in local.read_tier(cfg, tier).collect()}
+            assert set(got) == set(toks)
+            for doc_id, t in toks.items():
+                want = K.pool("avg", t, window=4, num_tiers=tier)[tier - 1]
+                assert np.array_equal(np.array(got[doc_id]), want), \
+                    (tier, doc_id)
+
+    remote.run_pyramid(df.where(F.col("source") != "a b"), cfg)
+    local.run_pyramid(df, cfg)
+    check_table()
+    pairs = local.catalog.read("lineage").groupBy("tier", "source").count()
+    assert {(r["tier"], r["source"]): r["count"] for r in pairs.collect()} \
+        == {(t, s): 1 for t in (1, 2) for s in sources}
+
+    def files(source, tier=1):
+        d = partitions(tier)[source]
+        return [os.path.join(d, f) for f in os.listdir(d)
+                if f.endswith(".parquet")]
+
+    by_spark, by_arrow = files("x:y"), files("a b")
+    assert by_spark and by_arrow
+    assert spark.read.parquet(*by_spark).schema \
+        == spark.read.parquet(*by_arrow).schema
+    schemas = {pq.read_schema(f).remove_metadata()
+               for f in by_spark + by_arrow}
+    assert len(schemas) == 1
+
+    local.run_pyramid(df, cfg, resume=False)
+    check_table()
+    for tier in (1, 2):
+        for d in partitions(tier).values():
+            names = os.listdir(d)
+            assert names and all(
+                n.startswith("part-") and n.endswith(".parquet")
+                for n in names
+            ), names
+    assert not any(os.path.exists(f) for f in by_spark)
+
+
+def test_local_remote_pyramid_parity(spark, workdir, remote_catalog):
+    """The workers' writer (local catalog) and Spark's writer (URI-scheme
+    catalog) build the same avg and mode pyramids: every tier equal in
+    every column, accum and denom included, with the same Spark
+    schema, and the same metrics and lineage rows."""
+    from tinybrain_spark.rollup import RollupConfig, RollupEngine
+
+    df = _odd_source_docs(spark, n_docs=64).cache()
+    local = RollupEngine(spark, f"{workdir}/local")
+    remote = RollupEngine(spark, remote_catalog.base_path)
+    cfgs = (
+        RollupConfig(kernel="avg", window=4, num_tiers=3, sparse=True,
+                     run_kind="pa"),
+        RollupConfig(kernel="mode", window=4, num_tiers=2, run_kind="pm"),
+    )
+    for cfg in cfgs:
+        for engine in (local, remote):
+            engine.run_pyramid(df, cfg)
+        for tier in range(1, cfg.num_tiers + 1):
+            a, b = local.read_tier(cfg, tier), remote.read_tier(cfg, tier)
+            assert a.schema == b.schema, (cfg.kernel, tier)
+            assert _tier_rows(a) == _tier_rows(b), (cfg.kernel, tier)
+        if cfg.kernel == "avg":
+            assert {"accum", "denom"} <= set(a.columns)
+
+    def table(engine, name, cols):
+        return sorted(tuple(r) for r in
+                      engine.catalog.read(name).select(*cols).collect())
+
+    metrics = ("run_kind", "tier", "rows_out", "points_out", "checksum",
+               "min_n_tok")
+    lineage = ("run_kind", "tier", "source", "rows_in", "rows_out", "status")
+    assert table(local, "metrics", metrics) == table(remote, "metrics", metrics)
+    assert table(local, "lineage", lineage) == table(remote, "lineage", lineage)
+    assert len(table(local, "lineage", lineage)) == 3 * 3 + 2 * 3

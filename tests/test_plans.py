@@ -135,30 +135,37 @@ def test_pooling_is_shuffle_free(spark, workdir):
     assert tree.count("Exchange") == upstream
     assert tree.count("MapInArrow") == 1
 
-    # engine avg pyramid: ONE write of the run-kind table partitioned
-    # by (tier, source); its one exchange is the write clustering, and
-    # it runs BELOW the kernels (cluster before pooling, never after)
+    # engine avg pyramid on a local catalog: the plan the pass runs is
+    # the manifest its commit collects, ONE MapInArrow that pools and
+    # writes the run-kind table; its one exchange is the write
+    # clustering, and it runs BELOW the kernels (cluster before pooling,
+    # never after).  No Spark write of the table is left.
     engine = RollupEngine(spark, workdir)
     cfg = RollupConfig(kernel="avg", window=4, num_tiers=2, run_kind="plan")
     base = generate(spark, n_docs=32, n_tok=64, seed=1, num_partitions=2)
-    written = []
-    write = engine.catalog.write
+    committed, written = [], []
+    commit, write = engine.catalog.commit_files, engine.catalog.write
 
-    def spy(df, name, **kw):
-        written.append((name, kw.get("partition_by"), df))
+    def spy_commit(manifest, name, pass_id):
+        # the plan as the commit's collect() receives it (once executed,
+        # the adaptive plan prints its final and initial forms)
+        committed.append((name, _tree(manifest), _plan(manifest)))
+        return commit(manifest, name, pass_id)
+
+    def spy_write(df, name, **kw):
+        written.append((name, kw.get("partition_by")))
         return write(df, name, **kw)
 
-    engine.catalog.write = spy
+    engine.catalog.commit_files = spy_commit
+    engine.catalog.write = spy_write
     engine.run_pyramid(base, cfg, resume=False)
-    (pyramid_df,) = [df for name, _, df in written if name == cfg.run_kind]
-    assert [(n, p) for n, p, _ in written if p] == [
-        (cfg.run_kind, ("tier", "source"))
-    ]
-    tree = _tree(pyramid_df)
+    ((name, tree, plan),) = committed
+    assert name == cfg.run_kind
+    assert written == []
     assert tree.count("Exchange") == 1
     assert tree.count("MapInArrow") == 1
     assert tree.index("MapInArrow") < tree.index("Exchange")
-    assert "rangepartitioning" in _plan(pyramid_df)
+    assert "rangepartitioning" in plan
 
 
 def test_ann_broadcasts_probes(spark):

@@ -36,10 +36,11 @@ from .catalog import Catalog
 LINEAGE_TABLE = "lineage"
 METRICS_TABLE = "metrics"
 
-# Per-source rows come from parquet footers (metadata-only; Iceberg
-# manifests carry them natively); per-source VALUE sums would need a
-# second scan per tier, so points/checksum live at tier granularity in
-# METRICS, computed by df.observe on the write job itself.
+# Per-source rows and the per-tier points/checksum/min_n_tok come from
+# the manifest of the files the workers wrote (local catalog; Iceberg
+# manifests carry the same).  On a URI-scheme catalog the rows come from
+# a per-partition count and the tier metrics from df.observe on the
+# write job itself.
 LINEAGE_SCHEMA = StructType(
     [
         StructField("run_kind", StringType(), False),
@@ -106,10 +107,9 @@ class CheckpointStore:
     ) -> None:
         """Commit one pass over every tier it built: one lineage file
         (none when no partition is new) and one metrics file.
-        per_source: rows of {tier, source, rows_in, rows_out}
-        (parquet-footer counts); totals: {tier -> {rows_out, points_out,
-        checksum, min_n_tok}} observed on the write job; every metrics
-        row carries the pass wall."""
+        per_source: rows of {tier, source, rows_in, rows_out};
+        totals: {tier -> {rows_out, points_out, checksum, min_n_tok}};
+        every metrics row carries the pass wall."""
         ts = dt.datetime.now(dt.timezone.utc)
         lineage_rows = [
             (

@@ -10,26 +10,35 @@ the serving layer can extend it, which keeps integer truncation to
 once per cycle; MODE/MAX/MIN/STRIDE tiers pool the previous tier's
 rendered output (mode-of-modes, downsample.py:215-217).
 
-Plan shape of one pass (pinned in tests/test_plans.py): parquet scan
--> range-partitioned exchange (write clustering only) -> one
-MapInArrow node running the kernels and emitting one row per (doc,
-tier) -> local sort on (tier, source, time_bucket, doc_id) -> one write
-of ``{run_kind}`` partitioned by (tier, source).  Pooling itself never
-shuffles.  The pass then commits its lineage and metrics from the
-driver (``CheckpointStore.record_tier``), with no further Spark job on
-a local catalog.
+Plan shape of one pass on a local catalog (pinned in
+tests/test_plans.py): parquet scan -> range-partitioned exchange (write
+clustering only) -> local sort on (source, time_bucket, doc_id) -> one
+MapInArrow node that runs the kernels AND writes every (tier, source)
+run of ``{run_kind}`` as one pyarrow file under a hidden temp name
+(``catalog.TierFileWriter``), emitting one manifest row per file.  The
+driver collects the manifest and commits the files by rename
+(``Catalog.commit_files``); the lineage rows and tier metrics come from
+the manifest, and ``CheckpointStore.record_tier`` commits them with no
+further Spark job.  On a URI-scheme catalog the MapInArrow emits one
+row per (doc, tier) instead, sorted afterwards on (tier, source,
+time_bucket, doc_id) for one Spark write partitioned by (tier, source).
+Pooling itself never shuffles.
 """
 
 from __future__ import annotations
 
+import os
 import time
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import kernels as K
-from .catalog import Catalog
+from .catalog import MANIFEST_SCHEMA, Catalog, TierFileWriter
 from .checkpoint import CheckpointStore
 from .partitioning import cluster_for_write
 from .udfs import pool_pyramid
@@ -101,6 +110,26 @@ def _tier_metrics(tiers: range) -> list:
     return out
 
 
+def _write_pass(pool, table_path: str, pass_id: str, skip: dict):
+    """The ``mapInArrow`` body of a pass the workers write themselves:
+    pool each input batch (sorted by source), hand the tiers to a
+    ``TierFileWriter`` and emit its manifest rows."""
+    schema = to_arrow_schema(MANIFEST_SCHEMA)
+
+    def write(batches):
+        writer = TierFileWriter(table_path, pass_id, skip)
+        for batch in batches:
+            tiers = {t: b for t, b in enumerate(pool.batches([batch]), 1)}
+            rows = writer.add(batch.column("source"), tiers)
+            if rows:
+                yield pa.RecordBatch.from_pylist(rows, schema=schema)
+        rows = writer.flush()
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+    return write
+
+
 class RollupEngine:
     """Materializes a retention pyramid under ``catalog.base_path``.
 
@@ -139,13 +168,15 @@ class RollupEngine:
     ) -> dict:
         """Materialize the pending tiers ``1..tier`` from the base
         (tier-0) table ``df`` in one pass: one scan, one range exchange,
-        one kernel pass, one write, then a driver-side commit of at
-        most one lineage file and one metrics file.
+        one kernel pass that also writes the tier files (local catalog;
+        a Spark write on a URI-scheme one), then a driver-side commit of
+        those files, at most one lineage file and one metrics file.
 
         With ``resume``, a (tier, source) pair with complete lineage is
         not rewritten: sources complete at every tier leave the input,
         the other complete pairs leave the output before the write.  A
-        crash inside the pass reruns the pass for its pending sources.
+        failed pass leaves no file of its own behind; a crash before
+        the lineage commit reruns the pass for its pending sources.
 
         Returns {tier -> {rows_out, points_out, wall_sec}}, counting the
         rows this pass wrote; ``wall_sec`` is the pass wall."""
@@ -164,6 +195,9 @@ class RollupEngine:
         skip = set.intersection(*done.values())
         if skip:
             src = src.where(~F.col("source").isin(sorted(skip)))
+        # the other complete (tier, source) pairs are left out of the
+        # output, tier by tier
+        left_out = {k: s - skip for k, s in done.items() if s - skip}
         # Cluster BEFORE pooling: repartitionByRange samples its child to
         # pick range bounds — with the kernels upstream that would run
         # the whole pooling stage twice.  Pooling is row-wise, so
@@ -176,45 +210,81 @@ class RollupEngine:
             sparse=config.sparse,
             guard_tiers=config.num_tiers,
         )
-        out = pool(cluster_for_write(src))
-        for k, sources in done.items():
-            if sources - skip:
-                out = out.where(
-                    (F.col("tier") != k)
-                    | ~F.col("source").isin(sorted(sources - skip))
-                )
-
-        # tier metrics ride the write job via observe — no post-write
-        # stats re-scan (VERDICT r01 item 10).  The sort comes last, so
-        # the writer's required (tier, source) ordering is already met.
-        obs = Observation(f"{run_kind}_t{tier}")
-        out = out.observe(obs, *_tier_metrics(tiers)).sortWithinPartitions(
-            "tier", "source", "time_bucket", "doc_id"
-        )
+        write = (self._write_local if self.catalog.is_local
+                 else self._write_spark)
         try:
-            self.catalog.write(
-                out, config.run_kind, partition_by=("tier", "source"),
-                mode="overwrite_partitions",
+            totals, per_source = write(
+                cluster_for_write(src), pool, config.run_kind, tiers,
+                left_out,
             )
         except Exception as exc:  # surface the in-kernel guard cleanly
             _reraise_kernel_guard(exc)
             raise
-        got = obs.get
         wall = time.time() - t0
-
-        # per-(tier, source) lineage rows (resume granularity) from
-        # parquet footers — an exact metadata-only read, no Spark job.
-        # Per-source VALUE sums would need a second scan, so sums live
-        # at tier granularity in the metrics table.
-        per_source = [
-            # pooling is per-row: rows_in == rows_out
+        # only newly-computed partitions get lineage; pooling is
+        # per-row, so rows_in == rows_out
+        lineage = [
             {"tier": k, "source": s, "rows_in": n, "rows_out": n}
-            for k in tiers
-            for s, n in sorted(
-                self._partition_row_counts(config.name(k)).items()
-            )
-            if s not in done[k]  # only newly-computed partitions
+            for (k, s), n in sorted(per_source.items())
+            if s not in done[k]
         ]
+        self.checkpoints.record_tier(run_kind, lineage, totals, wall)
+        return {
+            k: {"rows_out": t["rows_out"], "points_out": t["points_out"],
+                "wall_sec": wall}
+            for k, t in totals.items()
+        }
+
+    def _write_local(self, clustered, pool, table, tiers, skip):
+        """Local catalog: the workers pool and write in one
+        ``mapInArrow`` over the input sorted by source, and the driver
+        commits their files from the manifest, which also carries the
+        tier metrics and the per-(tier, source) row counts."""
+        pass_id = uuid.uuid4().hex
+        manifest = clustered.sortWithinPartitions(
+            "source", "time_bucket", "doc_id"
+        ).mapInArrow(
+            _write_pass(pool, os.path.abspath(self.catalog.path(table)),
+                        pass_id, skip),
+            MANIFEST_SCHEMA,
+        )
+        files = self.catalog.commit_files(manifest, table, pass_id)
+        totals = {}
+        for k in tiers:
+            at = [f for f in files if f["tier"] == k]
+            totals[k] = {
+                "rows_out": sum(f["rows"] for f in at),
+                "points_out": sum(f["points"] for f in at),
+                "checksum": sum(f["checksum"] for f in at),
+                "min_n_tok": min((f["min_n_tok"] for f in at), default=0),
+            }
+        per_source: dict[tuple, int] = {}
+        for f in files:
+            key = (f["tier"], f["source"])
+            per_source[key] = per_source.get(key, 0) + f["rows"]
+        return totals, per_source
+
+    def _write_spark(self, clustered, pool, table, tiers, skip):
+        """Remote (URI-scheme) catalog: Spark's partitioned writer.  Tier
+        metrics ride the write job via ``observe`` (no post-write stats
+        re-scan) and the per-(tier, source) row counts from one
+        count by source per tier."""
+        out = pool(clustered)
+        for k, sources in skip.items():
+            out = out.where(
+                (F.col("tier") != k) | ~F.col("source").isin(sorted(sources))
+            )
+        # the sort comes last, so the writer's required (tier, source)
+        # ordering is already met
+        obs = Observation(f"{table}_t{tiers[-1]}")
+        out = out.observe(obs, *_tier_metrics(tiers)).sortWithinPartitions(
+            "tier", "source", "time_bucket", "doc_id"
+        )
+        self.catalog.write(
+            out, table, partition_by=("tier", "source"),
+            mode="overwrite_partitions",
+        )
+        got = obs.get
         totals = {
             k: {
                 f: int(got[f"{f}_{k}"] or 0)
@@ -222,44 +292,15 @@ class RollupEngine:
             }
             for k in tiers
         }
-        self.checkpoints.record_tier(run_kind, per_source, totals, wall)
-        return {
-            k: {"rows_out": t["rows_out"], "points_out": t["points_out"],
-                "wall_sec": wall}
-            for k, t in totals.items()
+        per_source = {
+            (k, r["source"]): r["n"]
+            for k in tiers
+            for r in self.catalog.read(tier_table(table, k))
+            .groupBy("source")
+            .agg(F.count("*").alias("n"))
+            .collect()
         }
-
-    def _partition_row_counts(self, table: str, key: str = "source") -> dict:
-        """Exact per-partition row counts from parquet footers (metadata
-        only — kilobytes even for a 10^9-row tier).  On a remote-FS
-        catalog the footers aren't os.path-reachable: fall back to one
-        Spark per-partition count (partition-pruned scan) rather than a
-        local glob that silently returns {} and re-runs every source on
-        resume."""
-        import glob
-        import os
-        from urllib.parse import unquote
-
-        import pyarrow.parquet as pq
-
-        if not self.catalog.is_local:
-            return {
-                r[key]: r["n"]
-                for r in self.catalog.read(table)
-                .groupBy(key)
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-
-        counts: dict[str, int] = {}
-        base = self.catalog.path(table)
-        for d in glob.glob(os.path.join(base, f"{key}=*")):
-            src = unquote(os.path.basename(d).split("=", 1)[1])
-            counts[src] = sum(
-                pq.ParquetFile(f).metadata.num_rows
-                for f in glob.glob(os.path.join(d, "*.parquet"))
-            )
-        return counts
+        return totals, per_source
 
     def read_tier(self, config: RollupConfig, tier: int) -> DataFrame:
         return self.catalog.read(config.name(tier))
