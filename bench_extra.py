@@ -10,7 +10,8 @@ Usage:
     python bench_extra.py q_dup_spans q_ngram_jaccard \
         [--sf /root/testdata/sf1.0] [--n 3] [--plans plans/r06/before]
 
-Env: SPARK_GRAFT_CPUS (default 32) like bench.py.
+Env: SPARK_GRAFT_CPUS (default: the cores this process may use, as
+``session.DEFAULT_CPUS``).
 """
 
 from __future__ import annotations
@@ -44,14 +45,12 @@ def main() -> int:
     args = ap.parse_args()
 
     names = args.names or HEADLINE
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from tinybrain_spark import driver_contract as dc
-    from tinybrain_spark.session import get_spark
+    from tinybrain_spark.session import DEFAULT_CPUS, get_spark
 
     pre_mbps = _fault_in_mbps()
-    spark = get_spark("tinybrain-bench-extra", master=f"local[{cpus}]",
-                      shuffle_partitions=max(32, cpus))
+    spark = get_spark("tinybrain-bench-extra")
     qs = dc.queries()
     if not args.no_warm:
         spark.sparkContext.setJobDescription("warmup")
@@ -85,7 +84,7 @@ def main() -> int:
 
     out = {
         "sf": args.sf,
-        "cpus": cpus,
+        "cpus": DEFAULT_CPUS,
         "n": args.n,
         "total_best": round(sum(timings.values()), 3),
         "queries": timings,

@@ -100,11 +100,10 @@ def main() -> int:
     args = ap.parse_args()
 
     from tinybrain_spark.datagen import generate_embeddings
-    from tinybrain_spark.session import get_spark
+    from tinybrain_spark.session import DEFAULT_CPUS, get_spark
     from tinybrain_spark.similarity import n_planes_for
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("annbench", master=f"local[{cpus}]")
+    spark = get_spark("annbench")
 
     import tempfile
 
@@ -120,7 +119,7 @@ def main() -> int:
     for n in (args.n // 4, args.n):
         path = os.path.join(tempfile.mkdtemp(prefix="tb_ann_"), "emb")
         generate_embeddings(
-            spark, n, args.dims, num_partitions=cpus * 2
+            spark, n, args.dims, num_partitions=DEFAULT_CPUS * 2
         ).write.mode("overwrite").parquet(path)
         emb = spark.read.parquet(path)
         planes = n_planes_for(n)
@@ -144,7 +143,7 @@ def main() -> int:
     # end-to-end 1-NN + recall at a size where exact brute force fits
     path = os.path.join(tempfile.mkdtemp(prefix="tb_ann_"), "emb")
     generate_embeddings(
-        spark, args.recall_n, args.dims, num_partitions=cpus * 2
+        spark, args.recall_n, args.dims, num_partitions=DEFAULT_CPUS * 2
     ).write.mode("overwrite").parquet(path)
     emb = spark.read.parquet(path)
     from tinybrain_spark.similarity import multiband_nn

@@ -4,16 +4,30 @@ Tuned for a single JVM (``local[n]`` over the cores this process may
 use) but every setting is the one we'd ship to a 1000-executor
 cluster: AQE on (runtime skew-join splitting + partition coalescing),
 Arrow-batched Python exchange with a bounded batch size so
-executor-python memory stays flat regardless of input size, and UTC
-session time so time-bucket arithmetic matches any SQL oracle.
+executor-python memory stays flat regardless of input size, UTC
+session time so time-bucket arithmetic matches any SQL oracle, and
+Python workers forked from the engine's own daemon
+(``tinybrain_spark.daemon``), which spares every task a re-read of
+``pyspark.zip``.
+
+``load_table`` reads a parquet table with the schema its footers give,
+so the read launches no schema-inference job, and fans the scan out
+when the row groups cannot feed the cores.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import logging
 import os
+from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def _default_cpus() -> int:
@@ -135,6 +149,12 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", "1048576")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # the Python workers fork from the engine's daemon and drop their
+        # zip importers before each task, so the task's
+        # invalidate_caches() re-reads no archive
+        # (tinybrain_spark/daemon.py); it is found through the
+        # PYTHONPATH pinned above
+        .config("spark.python.daemon.module", "tinybrain_spark.daemon")
     )
     for key, val in extra_conf.items():
         builder = builder.config(key, val)
@@ -200,28 +220,35 @@ _FANOUT_DEFAULT_MIN_ROWS = {
 # Footer probes, memoized per path on the file listing (names, sizes,
 # mtimes): an unchanged table opens no footer twice, a rewritten one is
 # probed again.
-_LAYOUT_CACHE: dict[str, tuple[tuple, tuple[int, int]]] = {}
+_FOOTER_CACHE: dict[str, tuple[tuple, "_Footers"]] = {}
+
+# footer key under which Spark's parquet writer stores the table schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _parquet_layout(path: str) -> tuple[int, int]:
-    """(natural_splits, rows) from parquet footers — row groups are the
-    real scan-parallelism bound, whatever maxPartitionBytes says.
+class _Footers(NamedTuple):
+    # (natural_splits, rows): row groups are the real scan-parallelism
+    # bound, whatever maxPartitionBytes says
+    layout: tuple[int, int]
+    schema: pa.Schema | None  # None: no footer read, or files disagree
+    spark_schema: bytes | None  # the Spark writer's own schema JSON
+
+
+def _read_footers(path: str) -> _Footers:
+    """Everything ``load_table`` needs from a table's parquet footers,
+    read once per listing.
 
     A probe that reads no footer (a remote URI the local filesystem
     cannot see, an empty glob, an unreadable footer) returns a wide
-    layout, which turns fan-out off for that path, and logs a WARNING
-    saying so — once, since the result is memoized."""
-    import glob as _glob
-
-    import pyarrow as _pa
-    import pyarrow.parquet as _pq
-
+    layout and no schema, which turns fan-out off and leaves the schema
+    to Spark's inference job, and logs a WARNING saying so — once,
+    since the result is memoized."""
     files = (
         [path]
         if os.path.isfile(path)
         else sorted(
-            set(_glob.glob(os.path.join(path, "*.parquet")))
-            | set(_glob.glob(os.path.join(path, "part-*")))
+            set(glob.glob(os.path.join(path, "*.parquet")))
+            | set(glob.glob(os.path.join(path, "part-*")))
         )
     )
     try:
@@ -231,27 +258,56 @@ def _parquet_layout(path: str) -> tuple[int, int]:
         )
     except OSError:
         stamp = None  # listing changed under us: probe, don't memoize
-    hit = _LAYOUT_CACHE.get(path)
+    hit = _FOOTER_CACHE.get(path)
     if hit is not None and hit[0] == stamp:
         return hit[1]
     try:
-        metas = [_pq.ParquetFile(f).metadata for f in files]
-    except (OSError, _pa.ArrowException):
-        metas = []
-    if metas:
-        layout = (
-            sum(m.num_row_groups for m in metas) or 1,
-            sum(m.num_rows for m in metas),
+        pfs = [pq.ParquetFile(f) for f in files]
+        schema = pfs[0].schema_arrow if pfs else None
+    except (OSError, pa.ArrowException):
+        pfs = []
+    if pfs:
+        metas = [pf.metadata for pf in pfs]
+        same = all(m.schema.equals(metas[0].schema) for m in metas[1:])
+        footers = _Footers(
+            (
+                sum(m.num_row_groups for m in metas) or 1,
+                sum(m.num_rows for m in metas),
+            ),
+            schema if same else None,
+            (metas[0].metadata or {}).get(_SPARK_SCHEMA_KEY) if same else None,
         )
     else:
-        layout = (1 << 30, 0)
+        footers = _Footers((1 << 30, 0), None, None)
         logging.getLogger(__name__).warning(
             "no parquet footer readable under %s; scan fan-out is off "
-            "for this path", path,
+            "and Spark infers its schema", path,
         )
     if stamp is not None:
-        _LAYOUT_CACHE[path] = (stamp, layout)
-    return layout
+        _FOOTER_CACHE[path] = (stamp, footers)
+    return footers
+
+
+def _footer_schema(
+    spark: SparkSession, footers: _Footers
+) -> StructType | None:
+    """The schema ``spark.read.parquet`` would infer, from footers
+    already read: the Spark writer's stored schema when there is one
+    (Spark reads that key first too), else the Arrow schema converted
+    under the session's timestamp-NTZ inference rule.  None when the
+    footers give no single schema or hold a type the conversion does
+    not know; the caller then lets Spark infer it."""
+    if footers.spark_schema is not None:
+        return StructType.fromJson(json.loads(footers.spark_schema))
+    if footers.schema is None:
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    try:
+        return from_arrow_schema(
+            footers.schema, prefer_timestamp_ntz=ntz.lower() == "true"
+        )
+    except TypeError:
+        return None
 
 
 def load_table(
@@ -267,9 +323,16 @@ def load_table(
     fan-out — pass the downstream partition key so the added exchange
     substitutes for the one the query would plan anyway; pass ``[]``
     to suppress the table default (queries whose per-row work is too
-    light to repay the exchange, e.g. one md5 per doc)."""
+    light to repay the exchange, e.g. one md5 per doc).
+
+    The schema comes from the footers the fan-out probe reads, so the
+    read launches no schema-inference job (a 1-task job per call
+    otherwise)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    footers = _read_footers(path)
+    schema = _footer_schema(spark, footers)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     keys = None
     if _FANOUT_ENABLED:
         keys = (
@@ -277,7 +340,7 @@ def load_table(
         )
     if keys:
         cores = spark.sparkContext.defaultParallelism
-        splits, rows = _parquet_layout(path)
+        splits, rows = footers.layout
         floor = (
             fanout_min_rows
             if fanout_min_rows is not None
