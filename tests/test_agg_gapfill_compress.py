@@ -178,50 +178,6 @@ def test_gapfill_wide_span_chunked_spine(spark):
     assert got[("b", 0)] == 0 and got[("b", span - 1)] == 0
 
 
-def test_continuous_distinct_incremental_equals_full(spark, workdir):
-    """HLL distinct-doc state: three incremental folds == one full
-    aggregation, bit-equal estimates (registers are max-merged, so
-    grouping/order cannot change them), and within 5% of exact."""
-    from tinybrain_spark.aggregates import (
-        aggregate_batch_distinct,
-        estimate_distinct,
-        update_continuous_distinct,
-    )
-    from tinybrain_spark.catalog import Catalog
-    from tinybrain_spark.datagen import generate
-
-    df = generate(spark, n_docs=600, n_tok=8, seed=11, num_partitions=6)
-    batches = [
-        df.where(F.col("doc_id") < "doc_0000000200"),
-        df.where(
-            (F.col("doc_id") >= "doc_0000000200")
-            & (F.col("doc_id") < "doc_0000000400")
-        ),
-        df.where(F.col("doc_id") >= "doc_0000000400"),
-    ]
-    cat = Catalog(spark, workdir)
-    for b in batches:
-        update_continuous_distinct(cat, "cd", b)
-    got = {
-        (r["source"], r["time_bucket"]): r["n_docs_approx"]
-        for r in estimate_distinct(cat.read("cd")).collect()
-    }
-    want = {
-        (r["source"], r["time_bucket"]): r["n_docs_approx"]
-        for r in estimate_distinct(aggregate_batch_distinct(df)).collect()
-    }
-    assert got == want  # incremental == full, bit-equal
-    exact = {
-        (r["source"], r["time_bucket"]): r["n"]
-        for r in df.groupBy("source", "time_bucket")
-        .agg(F.countDistinct("doc_id").alias("n"))
-        .collect()
-    }
-    assert set(got) == set(exact)
-    for k, n in exact.items():
-        assert abs(got[k] - n) <= max(1, int(0.05 * n)), (k, got[k], n)
-
-
 # -- invalidation-range refresh (late UPDATE/DELETE corrections) ---------
 
 

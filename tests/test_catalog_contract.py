@@ -82,37 +82,6 @@ def test_append_accumulates(spark, catalog):
     assert _rows(catalog.read("t")) == [("a", 1, "x"), ("a", 2, "y")]
 
 
-def test_bucketed_join_is_exchange_free(spark, catalog):
-    """Two tables bucketed on the same key must sort-merge join with NO
-    exchange on either side — the co-located-join strategy for
-    repeatedly-joined fact tables."""
-    from pyspark.sql import functions as F
-
-    a = spark.range(1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 97).alias("va")
-    )
-    b = spark.range(1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 31).alias("vb")
-    )
-    catalog.write_bucketed(a, "tb_bucket_a", ("doc_id",), 8, ("doc_id",))
-    catalog.write_bucketed(b, "tb_bucket_b", ("doc_id",), 8, ("doc_id",))
-    try:
-        # hint sort-merge (tiny test tables would otherwise broadcast —
-        # at real fact-table sizes SMJ is what the planner picks anyway)
-        joined = catalog.read_table("tb_bucket_a").hint("merge").join(
-            catalog.read_table("tb_bucket_b").hint("merge"), "doc_id"
-        )
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan  # no shuffle on either side
-        assert joined.count() == 1000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS tb_bucket_a")
-        spark.sql("DROP TABLE IF EXISTS tb_bucket_b")
-
-
 # ---------------------------------------------------------------------------
 # remote-FS catalog (file:// scheme exercises every non-local branch —
 # Hadoop FileSystem API + Spark-scan metadata fallbacks — on local disk)
@@ -203,16 +172,6 @@ def test_retention_stale_staging_from_crashed_run_is_ignored(spark, catalog):
     )
     assert got == [("a", 8), ("a", 9)]
     assert not catalog.exists("tier__retention_staging")
-
-
-def test_remote_compact_swap(spark, remote_catalog):
-    cat = remote_catalog
-    df = _mk(spark, [("a", i, f"v{i}") for i in range(64)]).repartition(8)
-    cat.write(df, "t", partition_by=("source",), mode="overwrite")
-    n = cat.compact("t", partition_by=("source",), target_partitions=1)
-    spark.catalog.clearCache()
-    assert n == 1
-    assert cat.read("t").count() == 64
 
 
 def test_remote_pyramid_and_resume(spark, remote_catalog):

@@ -1,7 +1,6 @@
-"""Catalog compaction and the spark-submit job CLIs (retention job runs
-in-process through its main() to avoid a second JVM)."""
+"""The spark-submit job CLIs (retention job runs in-process through its
+main() to avoid a second JVM)."""
 
-import glob
 import json
 import os
 
@@ -9,21 +8,6 @@ from pyspark.sql import functions as F
 
 from tinybrain_spark.catalog import Catalog
 from tinybrain_spark.datagen import generate
-
-
-def test_compact_reduces_file_count(spark, workdir):
-    cat = Catalog(spark, workdir)
-    df = generate(spark, n_docs=200, n_tok=16, seed=4, num_partitions=8)
-    # simulate accretion: several small appends
-    for _ in range(4):
-        cat.write(df.limit(50), "t", partition_by=("source",), mode="append")
-    before = len(glob.glob(os.path.join(cat.path("t"), "**", "*.parquet"),
-                           recursive=True))
-    n_rows = cat.read("t").count()
-    after = cat.compact("t", partition_by=("source",), target_partitions=2)
-    assert after < before
-    spark.catalog.clearCache()
-    assert cat.read("t").count() == n_rows
 
 
 def test_rollup_then_retention_job_cli(spark, workdir, capsys):

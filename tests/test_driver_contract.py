@@ -147,24 +147,6 @@ def test_m4_guard_rejects_out_of_domain(spark, tmp_path):
     assert q_m4_decimate(spark, ok).count() == 1
 
 
-def test_extract_features_plumbing(spark):
-    """Binary -> fixed-dim float feature vector through Arrow batches
-    (the encoder is a deterministic stub; the plumbing is real)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from tinybrain_spark.multimodal import extract_features
-
-    docs = spark.createDataFrame(
-        [(1, b"\x00" * 64), (2, bytes(range(256))), (3, b"")],
-        "doc_id long, payload binary",
-    )
-    out = {r["doc_id"]: r["features"] for r in extract_features(docs).collect()}
-    assert len(out[1]) == 16 and abs(out[1][0] - 1.0) < 1e-6  # all bucket 0
-    assert all(abs(v - 1 / 16) < 1e-6 for v in out[2])  # uniform bytes
-    assert all(v == 0.0 for v in out[3])  # empty payload
-
-
 def test_cms_is_cell_wise_mergeable_and_one_sided(spark):
     """The 100TB property behind q_cms_heavy: a CMS built per shard and
     merged by cell-wise ADDITION equals the sketch built over the whole

@@ -166,71 +166,6 @@ def test_zero_unpartitioned_windows(spark):
     )
 
 
-def _naive_next_fit(rows, capacity):
-    """Reference next-fit per (source, bucket): returns
-    {doc_id: (bin_local, fill, oversize)}."""
-    out = {}
-    by_group = {}
-    for r in rows:
-        by_group.setdefault((r[1], r[0] // 2), []).append(r)
-    for (src, bucket), rs in by_group.items():
-        rs.sort(key=lambda r: r[0])
-        local, fill = 0, 0
-        for doc_id, _, n in rs:
-            if n > capacity:
-                if fill > 0:
-                    local += 1
-                out[doc_id] = (f"{src}/{bucket}/{local}", 0, True)
-                local += 1
-                fill = 0
-                continue
-            if fill + n > capacity:
-                local += 1
-                fill = 0
-            out[doc_id] = (f"{src}/{bucket}/{local}", fill, False)
-            fill += n
-    return out
-
-
-def test_nosplit_matches_reference_next_fit(spark):
-    from tinybrain_spark.packing import pack_bins_nosplit
-
-    rows = ROWS + [(14, "a", 150), (16, "b", 40), (18, "b", 95)]
-    docs = _docs(spark, rows).repartition(7)  # partitioning-independent
-    got = {
-        r.doc_id: (r.bin_id, r.bin_fill, r.oversize)
-        for r in pack_bins_nosplit(
-            docs, capacity=100, bucket_size=2
-        ).collect()
-    }
-    assert got == _naive_next_fit(rows, 100)
-
-
-def test_nosplit_bin_invariants(spark):
-    from tinybrain_spark.packing import pack_bins_nosplit
-
-    rows = ROWS + [(14, "a", 150), (16, "b", 40), (18, "b", 95)]
-    out = pack_bins_nosplit(
-        _docs(spark, rows), capacity=100, bucket_size=2
-    ).collect()
-    by_bin = {}
-    for r in out:
-        by_bin.setdefault(r.bin_id, []).append(r)
-    for bin_id, rs in by_bin.items():
-        total = sum(r.n_tok for r in rs)
-        if any(r.oversize for r in rs):
-            # an oversize doc owns its bin exclusively
-            assert len(rs) == 1
-        else:
-            assert total <= 100
-        # fills are the running offsets in doc order
-        rs.sort(key=lambda r: r.doc_id)
-        acc = 0
-        for r in rs:
-            assert r.bin_fill == acc
-            acc += r.n_tok
-
-
 try:
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st

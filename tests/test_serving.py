@@ -205,3 +205,16 @@ def test_serve_job_cli(spark, base_df, served, tmp_path, capsys):
     assert stats["residual_steps"] == 1
     assert stats["rows"] == N_DOCS
     assert stats["points"] == N_DOCS * N_TOK // 64
+
+
+def test_serving_missing_tier_raises_routing_error(spark, tmp_path):
+    import pytest
+
+    from tinybrain_spark.rollup import RollupConfig, RollupEngine
+    from tinybrain_spark.serving import read_series
+
+    engine = RollupEngine(spark, str(tmp_path / "empty_wh"))
+    cfg = RollupConfig(kernel="avg", window=4, num_tiers=2,
+                       run_kind="nothing_here")
+    with pytest.raises(FileNotFoundError, match="tier 2 .*resolution 16"):
+        read_series(engine, cfg, None, 16)

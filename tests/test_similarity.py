@@ -6,11 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tinybrain_spark.datagen import generate_embeddings
-from tinybrain_spark.similarity import (
-    multiband_candidates,
-    multiband_nn,
-    n_planes_for,
-)
+from tinybrain_spark.similarity import multiband_nn, n_planes_for
 
 
 def test_n_planes_scales_with_corpus():
@@ -41,7 +37,9 @@ def test_multiband_nn_finds_planted_duplicates(spark):
 
 def test_per_bucket_cap_bounds_candidates(spark):
     """A degenerate corpus (every vector identical -> one bucket per
-    band) must produce at most cap*(cap-1)/2 candidate pairs per band."""
+    band) is cut to the bucket's first ``cap`` members: each of them
+    gets exactly one neighbour from among them, and no other vector
+    gets one."""
     n, cap = 400, 50
     one = generate_embeddings(spark, 1, n_dims=16, n_clusters=1)
     vec = one.collect()[0]["embedding"]
@@ -51,10 +49,12 @@ def test_per_bucket_cap_bounds_candidates(spark):
             "embedding"
         ),
     )
-    cands = multiband_candidates(
+    nn = multiband_nn(
         degenerate, n_dims=16, n_planes=6, n_bands=2, per_bucket_cap=cap
-    )
-    assert cands.count() <= cap * (cap - 1) / 2  # dedup across bands
+    ).collect()
+    ids = sorted(r["vec_id"] for r in nn)
+    assert ids == list(range(cap))  # one row per capped vector
+    assert all(r["nn_id"] < cap and r["nn_id"] != r["vec_id"] for r in nn)
 
 
 def test_multiband_deterministic(spark):

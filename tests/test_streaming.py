@@ -1,5 +1,6 @@
 """Structured Streaming: file-stream continuous aggregate equals the
-batch recompute; windowed aggregate plan produces per-bucket state."""
+batch recompute; corrections, attribution, alert-episode and
+session-window streams equal their batch twins."""
 
 import os
 
@@ -12,8 +13,6 @@ from tinybrain_spark.datagen import generate
 from tinybrain_spark.streaming import (
     drain,
     run_incremental_stream,
-    windowed_aggregate,
-    with_event_time,
 )
 
 
@@ -56,151 +55,6 @@ def test_stream_resume_is_exactly_once(spark, seq_dir, workdir):
     drain(q2, "stream", 300)
     second = _state(Catalog(spark, workdir).read("cs2"))
     assert first == second
-
-
-def test_windowed_aggregate_batch_semantics(spark, seq_dir):
-    """The streaming plan's aggregation logic, applied in batch mode,
-    matches aggregate_batch keyed by the hour bucket."""
-    df = with_event_time(spark.read.parquet(seq_dir))
-    got = _state(windowed_aggregate(df))
-    want = _state(aggregate_batch(spark.read.parquet(seq_dir)))
-    assert got == want
-
-
-def test_windowed_aggregate_streams(spark, seq_dir, tmp_path):
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(spark.read.parquet(seq_dir).schema)
-        .load(seq_dir)
-    )
-    agg = windowed_aggregate(with_event_time(stream))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_agg")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, "stream", 300)
-    got = _state(spark.sql("SELECT * FROM win_agg"))
-    want = _state(aggregate_batch(spark.read.parquet(seq_dir)))
-    assert got == want
-
-
-def test_stateful_running_rollup(spark, seq_dir, tmp_path):
-    from tinybrain_spark.streaming import read_sequence_stream, stateful_running_rollup
-
-    stream = read_sequence_stream(spark, seq_dir, max_files_per_trigger=2)
-    agg = stateful_running_rollup(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("state_rollup")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, "stream", 300)
-    # last emitted row per source == full batch totals
-    rows = spark.sql(
-        """SELECT source, n_docs, n_points, token_sum FROM (
-             SELECT *, row_number() OVER (PARTITION BY source
-                                          ORDER BY n_docs DESC) rn
-             FROM state_rollup) WHERE rn = 1"""
-    ).collect()
-    got = {r["source"]: (r["n_docs"], r["n_points"], r["token_sum"]) for r in rows}
-    batch = (
-        spark.read.parquet(seq_dir)
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("d"),
-            F.sum(F.size("tokens")).alias("p"),
-            F.sum(F.aggregate("tokens", F.lit(0).cast("long"),
-                              lambda a, x: a + x)).alias("s"),
-        )
-        .collect()
-    )
-    want = {r["source"]: (r["d"], r["p"], r["s"]) for r in batch}
-    assert got == want
-
-
-def test_stream_rollup_tier_equals_batch(spark, seq_dir, tmp_path):
-    """Rollup-on-ingest: the streaming pooling tier emits, per row, the
-    single-node numpy kernel's output (pooling is stateless per-row, so
-    the stream needs no watermark or state store)."""
-    import numpy as np
-
-    from tinybrain_spark import kernels as K
-    from tinybrain_spark.streaming import read_sequence_stream, stream_rollup_tier
-
-    stream = read_sequence_stream(spark, seq_dir)
-    tier = stream_rollup_tier(stream, kernel="avg", window=4, num_tiers=1)
-    q = (
-        tier.writeStream.format("memory")
-        .queryName("stream_tier")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tier"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, "stream", 300)
-    got = {
-        r["doc_id"]: (tuple(r["tokens"]), r["n_tok"])
-        for r in spark.sql("SELECT doc_id, tokens, n_tok FROM stream_tier")
-        .collect()
-    }
-    want = {}
-    for r in spark.read.parquet(seq_dir).select("doc_id", "tokens").collect():
-        toks = np.array(r["tokens"], dtype=np.int32)
-        pooled = K.pool("avg", toks, window=4, num_tiers=1)[0]
-        want[r["doc_id"]] = (tuple(pooled.tolist()), len(pooled))
-    assert got == want
-
-
-def test_stream_dedup_drops_reingested_duplicates(spark, seq_dir, tmp_path):
-    """Streaming exact dedup: a directory holding every document TWICE
-    (re-ingestion) streams through stream_dedup to exactly the batch
-    distinct-by-fingerprint set."""
-    from tinybrain_spark.streaming import read_sequence_stream, stream_dedup
-
-    dup_dir = str(tmp_path / "dup_seq")
-    # shift buckets off 0: an event at exactly epoch 0 equals the
-    # floor-clamped watermark and is dropped as expired (epoch-0
-    # fixture artifact, impossible with real ingest timestamps)
-    base = spark.read.parquet(seq_dir).withColumn(
-        "time_bucket", F.col("time_bucket") + 1
-    )
-    # two interleaved copies across many files -> duplicates land in
-    # different micro-batches (state must carry across batches)
-    base.union(base).repartition(8).write.parquet(dup_dir)
-
-    stream = read_sequence_stream(spark, dup_dir, max_files_per_trigger=2)
-    # bucket_seconds=1: the fixture's whole bucket range spans seconds,
-    # so nothing is ever LATE relative to the 24h horizon and the test
-    # isolates dedup semantics from watermark lateness drops
-    q = (
-        stream_dedup(stream, bucket_seconds=1)
-        .writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q, "stream", 300)
-    got = spark.sql("SELECT fingerprint FROM dedup_stream")
-    want = (
-        base.withColumn(
-            "fingerprint",
-            F.md5(F.concat_ws(",", F.col("tokens").cast("array<string>"))),
-        )
-        .select("fingerprint")
-        .distinct()
-    )
-    got_fps = sorted(r["fingerprint"] for r in got.collect())
-    want_fps = sorted(r["fingerprint"] for r in want.collect())
-    assert got_fps == want_fps  # every unique doc once, no duplicate survives
 
 
 def test_session_window_stream_equals_batch(spark, tmp_path):
@@ -261,44 +115,6 @@ def test_session_window_stream_equals_batch(spark, tmp_path):
         for r in spark.table("sess_sw").collect()
     }
     assert got == want
-
-
-def test_cms_stream_equals_batch_and_stays_bounded(spark, seq_dir, tmp_path):
-    """The count-min sketch as streaming state: after draining the
-    directory micro-batch by micro-batch (cell-wise adds under the
-    exactly-once checkpoint), the stored sketch must be CELL-FOR-CELL
-    identical to the batch sketch over the same files — and the state
-    table never exceeds depth*width rows regardless of volume."""
-    from tinybrain_spark.streaming import cms_cells, run_cms_stream
-
-    wd = str(tmp_path / "wh")
-    q = run_cms_stream(
-        spark, seq_dir, wd, table="cms", max_files_per_trigger=2
-    )
-    drain(q, "stream", 300)
-    stored = Catalog(spark, wd).read("cms")
-    batch = cms_cells(spark.read.parquet(seq_dir))
-    got = {(r.r, r.b): r.c for r in stored.collect()}
-    want = {(r.r, r.b): r.c for r in batch.collect()}
-    assert got == want
-    assert stored.count() <= 4 * 1024
-
-
-def test_cms_stream_resume_no_double_count(spark, seq_dir, tmp_path):
-    """Re-running the drained stream with the same checkpoint must not
-    fold any batch twice (cell counts unchanged)."""
-    from tinybrain_spark.streaming import cms_cells, run_cms_stream
-
-    wd = str(tmp_path / "wh")
-    drain(run_cms_stream(spark, seq_dir, wd, table="cms"), "stream", 300)
-    first = {
-        (r.r, r.b): r.c for r in Catalog(spark, wd).read("cms").collect()
-    }
-    drain(run_cms_stream(spark, seq_dir, wd, table="cms"), "stream", 300)
-    again = {
-        (r.r, r.b): r.c for r in Catalog(spark, wd).read("cms").collect()
-    }
-    assert again == first
 
 
 # -- CDC correction stream (upsert/delete -> invalidation refresh) -------

@@ -27,10 +27,8 @@ from .session import pin
 
 AGG_KEY = ("source", "time_bucket")
 
-_STATE_COLS = ("n_docs", "n_points", "token_sum", "token_min", "token_max")
 
-
-def aggregate_batch(df: DataFrame, salt_buckets: int = 16) -> DataFrame:
+def aggregate_batch(df: DataFrame) -> DataFrame:
     """Two-phase salted aggregation of a sequence/tier table into
     per-(source, time_bucket) rollup state."""
     per_row = df.select(
@@ -45,7 +43,7 @@ def aggregate_batch(df: DataFrame, salt_buckets: int = 16) -> DataFrame:
         F.array_max("tokens").alias("row_max"),
     )
     partial = (
-        with_salt(per_row, salt_buckets)
+        with_salt(per_row)
         .groupBy("source", "time_bucket", "salt")
         .agg(
             F.count("*").alias("n_docs"),
@@ -73,7 +71,6 @@ def update_continuous_aggregate(
     catalog: Catalog,
     table: str,
     new_batch: DataFrame,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Incrementally fold a new batch of rows into the stored aggregate.
 
@@ -81,7 +78,7 @@ def update_continuous_aggregate(
     result equals a full recompute over all data ever folded in (the
     invariant test_continuous_agg pins).
     """
-    delta = aggregate_batch(new_batch, salt_buckets)
+    delta = aggregate_batch(new_batch)
     if catalog.exists(table):
         existing = catalog.read(table)
         touched = delta.select("source").distinct()
@@ -160,7 +157,6 @@ def refresh_invalidated(
     table: str,
     raw: DataFrame,
     invalidations: list[tuple[str, int, int]],
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Recompute ONLY the invalidated (source, time-bucket) groups of a
     stored continuous aggregate from ``raw`` — the correction path that
@@ -181,7 +177,7 @@ def refresh_invalidated(
     """
     ranges = coalesce_invalidations(invalidations)
     pred = invalidation_predicate(ranges)
-    fresh = aggregate_batch(raw.where(pred), salt_buckets)
+    fresh = aggregate_batch(raw.where(pred))
     touched = sorted({s for s, _, _ in ranges})
     if catalog.exists(table):
         existing = catalog.read(table)
@@ -214,65 +210,3 @@ def refresh_invalidated(
             mode="overwrite_partitions",
         )
     return catalog.read(table)
-
-
-# -- approximate-distinct state (HLL sketch, mergeable) -----------------
-
-HLL_LGK = 12  # ~0.8% relative standard error, 4 KB dense registers
-
-
-def aggregate_batch_distinct(
-    df: DataFrame, salt_buckets: int = 16, lgk: int = HLL_LGK
-) -> DataFrame:
-    """Per-(source, time_bucket) approximate-distinct state: a
-    Datasketches HLL sketch of ``doc_id`` as a mergeable binary column.
-
-    HLL registers are max-merged, so state is union-mergeable exactly
-    like the sum-mergeable columns — incremental folds, salt groups,
-    and partition-wise partials all converge to the identical registers
-    regardless of grouping or order (estimates are bit-equal, pinned by
-    test).  The salted two-phase shape mirrors aggregate_batch."""
-    partial = (
-        with_salt(df.select("source", "time_bucket", "doc_id"), salt_buckets)
-        .groupBy("source", "time_bucket", "salt")
-        .agg(F.hll_sketch_agg("doc_id", F.lit(lgk)).alias("doc_hll"))
-    )
-    return combine_distinct_states(partial.drop("salt"))
-
-
-def combine_distinct_states(states: DataFrame) -> DataFrame:
-    """Union-merge HLL states by key."""
-    return states.groupBy(*AGG_KEY).agg(
-        F.hll_union_agg("doc_hll").alias("doc_hll")
-    )
-
-
-def update_continuous_distinct(
-    catalog: Catalog,
-    table: str,
-    new_batch: DataFrame,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Incrementally fold a batch into the stored distinct-doc sketch
-    table — the same touched-partition merge as
-    update_continuous_aggregate, with union-merge instead of sums."""
-    delta = aggregate_batch_distinct(new_batch, salt_buckets)
-    if catalog.exists(table):
-        existing = catalog.read(table)
-        touched = delta.select("source").distinct()
-        relevant = existing.join(F.broadcast(touched), "source", "left_semi")
-        merged = combine_distinct_states(relevant.unionByName(delta))
-    else:
-        merged = delta
-    catalog.write(
-        merged, table, partition_by=("source",), mode="overwrite_partitions"
-    )
-    return catalog.read(table)
-
-
-def estimate_distinct(states: DataFrame) -> DataFrame:
-    """Render sketch states to (source, time_bucket, n_docs_approx)."""
-    return states.select(
-        *AGG_KEY,
-        F.hll_sketch_estimate("doc_hll").cast("long").alias("n_docs_approx"),
-    )

@@ -7,8 +7,8 @@ the corpus side probes it through a single BROADCAST row (the filter
 packed as a ``map<bucket, bits>``) — the corpus is touched exactly
 once, nothing about the probe scales with the blocklist, and the
 filter itself is mergeable across sources/days by cell-wise ``bit_or``
-(same property the count-min sketch relies on in
-``streaming.run_cms_stream``).
+(the same property that lets the count-min sketch of
+``driver_contract.text.q_cms_heavy`` merge by cell-wise addition).
 
 Bloom guarantees are one-sided, like CMS: a set bit pattern can FALSELY
 flag a clean document (probability ~ (1 - e^{-kn/m})^k), but a document

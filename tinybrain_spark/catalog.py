@@ -315,32 +315,6 @@ class Catalog:
         ).to_table(columns=list(columns), filter=flt)
         return set(zip(*(t.column(c).to_pylist() for c in columns)))
 
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table_name: str,
-        bucket_cols: tuple[str, ...],
-        n_buckets: int = 32,
-        sort_cols: tuple[str, ...] = (),
-    ) -> None:
-        """Persist a bucketed (pre-shuffled) table: joins and
-        aggregations on ``bucket_cols`` between tables bucketed the same
-        way need NO exchange — the co-located-join strategy for
-        repeatedly-joined 100TB fact tables (SURVEY.md §4).  Bucketing
-        requires the session catalog (``saveAsTable``), so these live
-        in spark.sql.warehouse.dir rather than under base_path."""
-        writer = (
-            df.write.format("parquet")
-            .mode("overwrite")
-            .bucketBy(n_buckets, *bucket_cols)
-        )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.saveAsTable(table_name)
-
-    def read_table(self, table_name: str) -> DataFrame:
-        return self.spark.table(table_name)
-
     def drop(self, name: str) -> None:
         p = self.path(name)
         if not self.is_local:
@@ -352,47 +326,3 @@ class Catalog:
 
         if os.path.isdir(p):
             shutil.rmtree(p)
-
-    def compact(
-        self,
-        name: str,
-        partition_by: tuple[str, ...] = ("source",),
-        target_partitions: int | None = None,
-    ) -> int:
-        """Rewrite a table into fewer, larger files (small-file compaction
-        — incremental appends/streaming micro-batches accrete small files
-        that degrade scan parallelism accounting at scale).  Stages to a
-        scratch dir then swaps, so a crash never loses the live table.
-        Returns the file count after compaction."""
-        import shutil
-
-        df = self.read(name)
-        if target_partitions:
-            df = df.repartition(target_partitions, *partition_by) if partition_by else df.repartition(target_partitions)
-        staging = f"{name}__compact_staging"
-        self.drop(staging)
-        self.write(df, staging, partition_by=partition_by, mode="overwrite")
-        live, staged = self.path(name), self.path(staging)
-        backup = live + "__pre_compact"
-        if self.is_local:
-            shutil.move(live, backup)
-            shutil.move(staged, live)
-            shutil.rmtree(backup)
-            n = 0
-            for _root, _dirs, files in os.walk(live):
-                n += sum(1 for f in files if f.endswith(".parquet"))
-            return n
-        # remote FS: same crash-safe swap via Hadoop rename (atomic on
-        # HDFS; object stores get the Iceberg catalog instead)
-        fs, jlive = self._hadoop_fs(live)
-        jstaged = self._hadoop_fs(staged)[1]
-        jbackup = self._hadoop_fs(backup)[1]
-        fs.rename(jlive, jbackup)
-        fs.rename(jstaged, jlive)
-        fs.delete(jbackup, True)
-        n = 0
-        it = fs.listFiles(jlive, True)
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n

@@ -429,8 +429,9 @@ def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually exist, and a two-phase distinct count lands the answer.
     The 24x fan-out rides on the deduped pairs, so total shuffled rows
     stay ~24 * |active (type, hour, user)| regardless of event volume;
-    HLL sketches (aggregates.update_continuous_distinct) are the
-    approximate alternative when even that is too wide."""
+    union-mergeable HLL sketches (Spark's ``hll_sketch_agg`` and
+    ``hll_union_agg``) are the approximate alternative when even that
+    is too wide."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.unix_timestamp(F.date_trunc("hour", F.col("ts"))) / 3600)

@@ -584,43 +584,6 @@ def image_equalize(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     return df.mapInPandas(_eq, IMAGE_EQUALIZE_SCHEMA)
 
 
-def extract_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    n_dims: int = 16,
-) -> DataFrame:
-    """Feature-extraction plumbing: binary payload -> array<float>
-    embedding.  The 'model' is a deterministic byte-bucket histogram
-    (normalized) — a real deployment swaps in an ONNX/torch encoder;
-    the Spark side (binary in, fixed-dim float vector out, Arrow
-    batches) is identical."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, FloatType
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("features", ArrayType(FloatType(), False), False),
-        ]
-    )
-
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf[payload_col]:
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                if len(arr) == 0:
-                    feats.append(np.zeros(n_dims, dtype=np.float32))
-                    continue
-                hist = np.bincount(arr // (256 // n_dims), minlength=n_dims)
-                feats.append((hist / len(arr)).astype(np.float32))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "features": feats}
-            )
-
-    return df.mapInPandas(_feat, schema)
-
-
 GRAY_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),

@@ -132,81 +132,6 @@ def pack_offsets(
     )
 
 
-def pack_bins_nosplit(
-    docs: DataFrame,
-    *,
-    n_col: str = "n_tok",
-    order_col: str = "doc_id",
-    source_col: str = "source",
-    capacity: int = 2048,
-    bucket_size: int = 4096,
-) -> DataFrame:
-    """No-split packing: each document lands WHOLLY inside one bin
-    (SFT-style packing, where an example must not cross a sequence
-    boundary).  Deterministic next-fit in ``order_col`` order, run
-    independently per (source, bucket): a bin closes when the next doc
-    would overflow ``capacity``; a doc longer than ``capacity`` gets a
-    bin of its own, flagged ``oversize``.
-
-    Returns ``docs`` + (``bin_id``: string — globally unique, namespaced
-    ``source/bucket/local``, ``bin_fill``: the doc's start offset in its
-    bin, ``oversize``: boolean).
-
-    Scale shape: next-fit is inherently sequential, so exact global
-    next-fit cannot parallelize.  Bucket-local next-fit restores
-    parallelism at a bounded price — at most one partially-filled bin
-    per bucket boundary, i.e. wasted space < capacity per bucket_size
-    docs (<0.1% for any realistic ratio).  Each applyInPandas group
-    holds <= bucket_size rows; no unbounded state anywhere.
-    """
-    import pandas as pd
-
-    out_schema = (
-        docs.withColumn("_bucket", F.lit(0).cast("long"))
-        .withColumn("bin_id", F.lit("x"))
-        .withColumn("bin_fill", F.lit(0).cast("long"))
-        .withColumn("oversize", F.lit(False))
-        .schema
-    )
-
-    def _next_fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, ignore_index=True)
-        src = pdf[source_col].iloc[0]
-        bucket = int(pdf["_bucket"].iloc[0])
-        bins, fills, overs = [], [], []
-        local, fill = 0, 0
-        for n in pdf[n_col].astype("int64"):
-            n = int(n)
-            if n > capacity:
-                # oversize doc: a dedicated (flagged) bin of its own
-                if fill > 0:
-                    local += 1
-                bins.append(local)
-                fills.append(0)
-                overs.append(True)
-                local += 1
-                fill = 0
-                continue
-            if fill + n > capacity:
-                local += 1
-                fill = 0
-            bins.append(local)
-            fills.append(fill)
-            overs.append(False)
-            fill += n
-        pdf["bin_id"] = [f"{src}/{bucket}/{b}" for b in bins]
-        pdf["bin_fill"] = pd.Series(fills, dtype="int64")
-        pdf["oversize"] = overs
-        return pdf
-
-    bucket = F.expr(f"{order_col} DIV {bucket_size}")
-    with_b = docs.withColumn("_bucket", bucket.cast("long"))
-    packed = with_b.groupBy(source_col, "_bucket").applyInPandas(
-        _next_fit, out_schema
-    )
-    return packed.drop("_bucket")
-
-
 def pack_tokens(
     seqs: DataFrame,
     *,

@@ -21,16 +21,15 @@ from pyspark.sql import functions as F
 DEFAULT_SALT_BUCKETS = 16
 
 
-def with_salt(df: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
+def with_salt(df: DataFrame) -> DataFrame:
     return df.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salt_buckets)).cast("int")
+        "salt",
+        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(DEFAULT_SALT_BUCKETS)).cast("int"),
     )
 
 
 def cluster_for_write(
-    df: DataFrame,
-    num_partitions: int | None = None,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
+    df: DataFrame, num_partitions: int | None = None
 ) -> DataFrame:
     """repartitionByRange(source, time_bucket, salt).
 
@@ -39,7 +38,7 @@ def cluster_for_write(
     caller sorts within partitions after any per-row work, in the
     order its writer needs.
     """
-    salted = with_salt(df, salt_buckets)
+    salted = with_salt(df)
     cols = [F.col("source"), F.col("time_bucket"), F.col("salt")]
     if num_partitions:
         out = salted.repartitionByRange(num_partitions, *cols)

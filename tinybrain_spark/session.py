@@ -40,7 +40,7 @@ def _default_cpus() -> int:
 
 DEFAULT_CPUS = _default_cpus()
 
-# Transparent-huge-page hardening (SPARK_GRAFT_THP=0 to disable).
+# Transparent-huge-page hardening, always on.
 #
 # Production rationale: big-heap JVMs and Arrow-batched python workers
 # fault in GBs of anonymous memory; madvise-THP cuts first-touch page
@@ -52,7 +52,6 @@ DEFAULT_CPUS = _default_cpus()
 # while 2 MB (madvised) faults run 0.2-3.5 GB/s in the SAME windows —
 # THP allocation makes the engine's wall times insensitive to the
 # host's 4K-fault pathology instead of 2-5x hostage to it.
-THP_ENABLED = os.environ.get("SPARK_GRAFT_THP", "1") != "0"
 _JVM_THP_FLAG = "-XX:+UseTransparentHugePages"
 
 
@@ -78,9 +77,7 @@ def _thp_env_defaults() -> None:
 # tokens arrays are ~256 int32 ≈ 1 KB/row plus an int64 accumulator
 # column (~2 KB); 4096 rows/batch ≈ 12 MB per Arrow batch per core —
 # bounded python-worker memory even at 10^12-row scale (SURVEY.md §4).
-# Env-overridable: smaller batches shrink the per-core working set
-# (cache locality under memory-bus pressure at high core counts).
-ARROW_BATCH_ROWS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH_ROWS", "4096"))
+ARROW_BATCH_ROWS = 4096
 
 
 def get_spark(
@@ -114,13 +111,12 @@ def get_spark(
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "6g")
 
     extra_conf = dict(extra_conf or {})
-    if THP_ENABLED:
-        _thp_env_defaults()
-        user_jvm = extra_conf.get("spark.driver.extraJavaOptions", "")
-        if _JVM_THP_FLAG not in user_jvm:
-            extra_conf["spark.driver.extraJavaOptions"] = (
-                f"{user_jvm} {_JVM_THP_FLAG}".strip()
-            )
+    _thp_env_defaults()
+    user_jvm = extra_conf.get("spark.driver.extraJavaOptions", "")
+    if _JVM_THP_FLAG not in user_jvm:
+        extra_conf["spark.driver.extraJavaOptions"] = (
+            f"{user_jvm} {_JVM_THP_FLAG}".strip()
+        )
 
     builder = (
         SparkSession.builder.master(master)
@@ -183,11 +179,8 @@ def get_spark(
 # push through RepartitionByExpression, so PushedFilters/ReadSchema
 # pins are unaffected.  Hash (not round-robin) partitioning on a
 # unique key: deterministic under task retry (guide §2.5) and skew-
-# free.  SPARK_GRAFT_SCAN_FANOUT=0 disables.
-_FANOUT_ENABLED = os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") != "0"
-_FANOUT_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SCAN_FANOUT_MIN_ROWS", "4096")
-)
+# free.  A caller turns it off per read with ``fanout_on=[]``.
+_FANOUT_MIN_ROWS = 4096
 # Default fan-out tables: only those whose downstream map work is
 # heavy per row (regex split + explode + md5 over text; vector GEMM
 # prep) — measured 2-8x per-query wins at sf1.0.  events is NOT fanned
@@ -333,11 +326,7 @@ def load_table(
     schema = _footer_schema(spark, footers)
     reader = spark.read if schema is None else spark.read.schema(schema)
     df = reader.parquet(path)
-    keys = None
-    if _FANOUT_ENABLED:
-        keys = (
-            _FANOUT_DEFAULT_KEYS.get(name) if fanout_on is None else fanout_on
-        )
+    keys = _FANOUT_DEFAULT_KEYS.get(name) if fanout_on is None else fanout_on
     if keys:
         cores = spark.sparkContext.defaultParallelism
         splits, rows = footers.layout

@@ -1,17 +1,18 @@
 """Structured Streaming extension: continuous aggregates maintained from
 a file stream of sequence rows (SURVEY.md §2.4 'Streaming' row).
 
-Two layers:
-
-* ``windowed_aggregate`` — pure streaming plan: watermarked tumbling
-  window over event time, sum-mergeable rollup state per (source,
-  window).  Late rows beyond the watermark are dropped by Spark.
-* ``run_incremental_stream`` — production shape: ``foreachBatch`` folds
-  each micro-batch into the stored continuous aggregate via
+* ``run_incremental_stream`` — ``foreachBatch`` folds each micro-batch
+  into the stored continuous aggregate via
   ``update_continuous_aggregate`` (the same incremental-merge path the
   batch engine uses), so a crashed stream resumes from its checkpoint
   and the stored table always equals a full recompute of everything
   ingested so far.
+* ``run_correction_stream`` — upsert/delete corrections land on the raw
+  table and each batch's invalidation log drives a targeted
+  ``refresh_invalidated`` of the stored aggregate.
+* ``run_attribution_stream``, ``alert_episode_stream`` and
+  ``session_windows`` — a watermarked stream-stream join, a
+  ``GroupState`` episode tracker and native session windows.
 """
 
 from __future__ import annotations
@@ -37,47 +38,6 @@ def drain(query, what: str, timeout_s: int = 600) -> None:
         )
 
 
-def with_event_time(df: DataFrame, bucket_seconds: int = 3600) -> DataFrame:
-    """Derive an event timestamp from the integer time bucket."""
-    return df.withColumn(
-        "event_time",
-        F.timestamp_seconds(F.col("time_bucket") * bucket_seconds),
-    )
-
-
-def windowed_aggregate(
-    stream: DataFrame,
-    watermark: str = "2 hours",
-    window: str = "1 hour",
-) -> DataFrame:
-    """Watermarked tumbling-window rollup of a streaming sequence table
-    with columns (source, event_time, tokens)."""
-    return (
-        stream.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window).alias("w"), F.col("source"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.size("tokens")).alias("n_points"),
-            F.sum(
-                F.aggregate("tokens", F.lit(0).cast("long"), lambda a, x: a + x)
-            ).alias("token_sum"),
-            F.min(F.array_min("tokens")).alias("token_min"),
-            F.max(F.array_max("tokens")).alias("token_max"),
-        )
-        .select(
-            "source",
-            (F.unix_timestamp(F.col("w.start")) / 3600).cast("long").alias(
-                "time_bucket"
-            ),
-            "n_docs",
-            "n_points",
-            "token_sum",
-            "token_min",
-            "token_max",
-        )
-    )
-
-
 def read_sequence_stream(
     spark: SparkSession,
     input_path: str,
@@ -93,99 +53,6 @@ def read_sequence_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.load(input_path)
-
-
-def stream_rollup_tier(
-    stream: DataFrame,
-    kernel: str = "avg",
-    window: int = 4,
-    num_tiers: int = 1,
-    sparse: bool = False,
-) -> DataFrame:
-    """A retention tier over a STREAM of sequence rows.
-
-    Pooling is per-row and stateless (every tokens array pools
-    independently), so the streaming plan needs no watermark, state
-    store, or shuffle: file scan -> one MapInArrow node -> sink, and
-    every row's output is byte-identical to the single-node kernels
-    (pinned by test).  At 10^12-sequence scale this is the
-    'rollup-on-ingest' path: new sequences land already downsampled,
-    and the batch engine's deeper tiers read from this stream's sink.
-    """
-    from .udfs import pool_tier
-
-    pool = pool_tier(kernel, window=window, num_tiers=num_tiers, sparse=sparse)
-    return pool(stream.select("doc_id", "source", "time_bucket", "tokens"))
-
-
-def stateful_running_rollup(
-    stream: DataFrame,
-    timeout_conf: str = "NoTimeout",
-) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState
-    (SURVEY.md §2.4 'applyInPandasWithState for custom stateful
-    operators'): a per-source running accumulator of (n_docs, n_points,
-    token_sum) maintained across micro-batches — the streaming analog of
-    the reference's multi-mip shared accumulator.
-
-    Emits one updated state row per source per micro-batch.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("source", StringType(), False),
-            StructField("n_docs", LongType(), False),
-            StructField("n_points", LongType(), False),
-            StructField("token_sum", LongType(), False),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n_docs", LongType(), False),
-            StructField("n_points", LongType(), False),
-            StructField("token_sum", LongType(), False),
-        ]
-    )
-
-    def _update(key, pdfs, state):
-        n_docs, n_points, token_sum = (
-            state.get if state.exists else (0, 0, 0)
-        )
-        for pdf in pdfs:
-            for toks in pdf["tokens"]:
-                arr = [int(x) for x in toks]
-                n_docs += 1
-                n_points += len(arr)
-                token_sum += sum(arr)
-        state.update((n_docs, n_points, token_sum))
-        yield pd.DataFrame(
-            {
-                "source": [key[0]],
-                "n_docs": [n_docs],
-                "n_points": [n_points],
-                "token_sum": [token_sum],
-            }
-        )
-
-    return (
-        stream.select("source", "tokens")
-        .groupBy("source")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=getattr(GroupStateTimeout, timeout_conf),
-        )
-    )
 
 
 def session_windows(
@@ -232,110 +99,6 @@ def session_windows(
             F.min(F.unix_timestamp("_ts")).cast("long").alias("started_at"),
         )
         .select("user_id", "n_events", "duration_s", "started_at")
-    )
-
-
-def stream_dedup(
-    stream: DataFrame,
-    watermark: str = "24 hours",
-    bucket_seconds: int = 3600,
-) -> DataFrame:
-    """Streaming ingestion dedup (pipeline op): drop re-ingested
-    duplicate documents by content fingerprint (md5 over the token
-    array) within the watermark horizon.
-
-    ``dropDuplicatesWithinWatermark`` keeps per-fingerprint state only
-    for the horizon, so state size is bounded by the window's unique
-    ingest volume, not the corpus — the streaming complement of batch
-    ``q_dedup_exact``; global dedup at rest stays a batch job."""
-    with_fp = with_event_time(stream, bucket_seconds).withColumn(
-        "fingerprint",
-        F.md5(F.concat_ws(",", F.col("tokens").cast("array<string>"))),
-    )
-    return with_fp.withWatermark(
-        "event_time", watermark
-    ).dropDuplicatesWithinWatermark(["fingerprint"])
-
-
-def cms_cells(df: DataFrame, token_col: str = "tokens",
-              depth: int = 4, width: int = 1024) -> DataFrame:
-    """Count-min sketch cells of a token-array multiset: every token
-    fans out to its ``depth`` (row, bucket) cells IN-ROW and collapses
-    through one map-side-combinable groupBy onto a table bounded by
-    ``depth * width`` rows regardless of input volume.  Same salted-md5
-    bucket family as driver_contract.text.q_cms_heavy."""
-
-    def bucket(col, row: int):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{row}:"), col)), 1, 14
-                ), 16, 10,
-            ).cast("long")
-            % width
-        )
-
-    tok = df.select(F.explode(F.col(token_col)).alias("t")).select(
-        F.col("t").cast("string").alias("w")
-    )
-    return (
-        tok.select(
-            F.posexplode(
-                F.array(*[bucket(F.col("w"), r) for r in range(depth)])
-            ).alias("r", "b")
-        )
-        .groupBy("r", "b")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-
-
-def run_cms_stream(
-    spark: SparkSession,
-    input_path: str,
-    warehouse: str,
-    table: str = "cms_cells",
-    depth: int = 4,
-    width: int = 1024,
-    checkpoint: str | None = None,
-    max_files_per_trigger: int = 1,
-):
-    """Maintain the count-min sketch as STREAMING STATE: each
-    micro-batch's cells fold into the stored cell table by cell-wise
-    ADDITION (CMS is sum-mergeable), exactly-once per batch id via the
-    streaming checkpoint.  After draining a directory the stored
-    sketch is cell-for-cell identical to the batch sketch over the
-    same files (pinned in test_streaming) — the state table never
-    exceeds depth*width rows no matter how much history streamed
-    through it."""
-    catalog = Catalog(spark, warehouse)
-    stream = read_sequence_stream(spark, input_path, max_files_per_trigger)
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        delta = cms_cells(batch_df, depth=depth, width=width)
-        if catalog.exists(table):
-            merged = (
-                catalog.read(table)
-                .unionByName(delta)
-                .groupBy("r", "b")
-                .agg(F.sum("c").cast("long").alias("c"))
-            )
-            # materialize (<= depth*width rows) BEFORE overwriting the
-            # files the plan reads from
-            merged = pin(merged)
-        else:
-            merged = delta
-        catalog.write(merged, table, mode="overwrite")
-
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option(
-            "checkpointLocation",
-            checkpoint or f"{warehouse}/_checkpoints/{table}",
-        )
-        .trigger(availableNow=True)
-        .start()
     )
 
 
